@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 import graft.config.GraftConfig
 import graft.pipeline.{Checkpoints, DedupPipeline}
 
@@ -152,38 +153,24 @@ object RunDedup {
       ckptKeyExtra =
         if (a.checkpoint.isDefined) inputFingerprint(spark, a.input, pages) else "")
     val result = pipeline.runAll(pages)
-    writeOutput(result.canonicals, a.output)
+    val written = Observation()
+    writeOutput(result.canonicals.observe(written, count(lit(1)).as("rows")), a.output)
     // Side tables a downstream consumer needs for audit/incremental folds.
     if (a.stagesOut) {
       writeOutput(result.decisions, s"${a.output.stripSuffix("/")}_decisions")
       writeOutput(result.labels, s"${a.output.stripSuffix("/")}_labels")
     }
 
-    val canonicalRows =
-      if (a.output.startsWith("table:")) spark.table(a.output.stripPrefix("table:")).count()
-      else spark.read.parquet(a.output).count()
     val stats = Map(
-      "canonical_rows" -> canonicalRows,
+      "canonical_rows" -> written.get("rows").asInstanceOf[Long],
       "wall_ms" -> (System.nanoTime() - t0) / 1000000L)
-    // Per-stage row counts ride the checkpoint lineage when enabled (one
-    // tiny scan); without a checkpoint dir they'd cost a full re-count per
+    // Per-stage row counts come from THIS run's checkpoint key's meta
+    // sidecars (no Spark job; a reused dir's older configs/inputs are
+    // excluded); without a checkpoint dir they'd cost a full re-count per
     // stage, so only canonical_rows is reported.
-    val stageRows: Map[String, Long] = a.checkpoint match {
-      case Some(dir) =>
-        val lin = new Checkpoints(spark, dir, pipeline.checkpointKey).lineage()
-        if (lin.isEmpty) Map.empty
-        else
-          // filter on THIS run's full checkpoint key: a reused dir may hold
-          // lineage from older configs/inputs or stages no longer produced,
-          // which would otherwise inflate the rows_* summary
-          lin.where(org.apache.spark.sql.functions.col("config_hash")
-              === pipeline.checkpointKey)
-            .groupBy("stage")
-            .agg(org.apache.spark.sql.functions.sum("rows").as("rows"))
-            .collect()
-            .map(r => s"rows_${r.getString(0)}" -> r.getLong(1))
-            .toMap
-      case None => Map.empty
+    val stageRows = a.checkpoint.fold(Map.empty[String, Long]) { dir =>
+      new Checkpoints(spark, dir, pipeline.checkpointKey).stageRows()
+        .map { case (stage, rows) => s"rows_$stage" -> rows }
     }
     if (a.checkpoint.isEmpty) pipeline.unpersistAll()
     stats ++ stageRows

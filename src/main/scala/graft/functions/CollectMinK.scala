@@ -51,11 +51,13 @@ case class CollectMinK(
   override def nullable: Boolean = false
 
   /** Max-heap: peek() is the LARGEST retained string, evicted when a smaller
-    * candidate arrives with the buffer full.
+    * candidate arrives with the buffer full. It starts small and grows: a
+    * k-slot array per group would cost O(k) memory for every small group, and
+    * `k + 1` overflows at k = Int.MaxValue.
     */
   override def createAggregationBuffer(): java.util.PriorityQueue[UTF8String] =
     new java.util.PriorityQueue[UTF8String](
-      k + 1, java.util.Collections.reverseOrder[UTF8String]())
+      math.min(k, 15) + 1, java.util.Collections.reverseOrder[UTF8String]())
 
   private def offer(
       buf: java.util.PriorityQueue[UTF8String], s: UTF8String): Unit = {

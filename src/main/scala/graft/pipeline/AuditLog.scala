@@ -52,14 +52,17 @@ final class AuditLog(spark: SparkSession, path: String) {
     // could write a different number of rows than it counted and
     // desynchronize the (run_id, seq) allocation. Ordering uses UTF-8
     // binary comparison — the same total order the previous global window
-    // produced in Spark.
+    // produced in Spark, nulls first as in its ascending sort.
     val collected = audit.select(col("action"),
         to_json(struct(detailCols.map(col): _*)).as("details"))
       .collect().map(r => (r.getString(0), r.getString(1)))
     def u8(s: String) = org.apache.spark.unsafe.types.UTF8String.fromString(s)
+    def cmp(a: String, b: String): Int =
+      if (a == null || b == null) java.lang.Boolean.compare(b == null, a == null)
+      else u8(a).compareTo(u8(b))
     val ordered = collected.sortWith { (a, b) =>
-      val c = u8(a._1).compareTo(u8(b._1))
-      if (c != 0) c < 0 else u8(a._2).compareTo(u8(b._2)) < 0
+      val c = cmp(a._1, b._1)
+      if (c != 0) c < 0 else cmp(a._2, b._2) < 0
     }
     val stamped = ordered.zipWithIndex.map { case ((a, d), i) => (runId, seq + i, a, d) }
     import spark.implicits._

@@ -106,4 +106,13 @@ class PropertySpec extends SparkSpec {
       assert(got == want, s"trial=$trial k=$k")
     }
   }
+
+  test("collect_min_k at k = Int.MaxValue == sort_array(collect_list)") {
+    val df = (1 to 300).map(i => ((i % 4).toLong, s"u${i * 7919 % 1000}"))
+      .toDF("g", "v").repartition(5) // force partial agg + merge
+    def byGroup(agg: org.apache.spark.sql.Column) =
+      df.groupBy($"g").agg(agg.as("vs")).as[(Long, Seq[String])].collect().toMap
+    assert(byGroup(graft.functions.CollectMinK.collectMinK($"v", Int.MaxValue)) ==
+      byGroup(sort_array(collect_list($"v"))))
+  }
 }

@@ -57,4 +57,16 @@ class AuditLogSpec extends SparkSpec {
     assert(rows.map(_._2).sorted == Seq(0L, 1L, 2L), s"seq must continue: $rows")
     assert(rows.distinct.length == rows.length, "duplicate (run_id, seq) pair")
   }
+
+  test("a null action sorts first, as Spark's ascending sort does, and seq order is stable") {
+    val log = new AuditLog(spark, Files.createTempDirectory("graft_audit_null").toString + "/audit")
+    val audit = Seq[(String, Long)](("split", 2L), (null, 3L), ("merge", 1L)).toDF("action", "node")
+    log.append(audit, runId = "run-n")
+    log.append(audit.orderBy($"node".desc), runId = "run-n") // same rows, other order
+    val hist = log.history().orderBy("seq").select("seq", "action").as[(Long, String)].collect()
+    assert(hist.map(_._1).toSeq == (0L until 6L))
+    val once = audit.orderBy($"action".asc).select("action").as[String].collect().toSeq
+    assert(once == Seq(null, "merge", "split"))
+    assert(hist.map(_._2).toSeq == once ++ once)
+  }
 }

@@ -1,0 +1,83 @@
+package graft.pipeline
+
+import graft.SparkSpec
+import graft.datagen.PagesGen
+import java.nio.file.Files
+import org.apache.spark.graft.JobCount
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions._
+
+/** The checkpoint commit protocol's cost and on-disk format: a commit is the
+  * stage's own write and nothing else, a read-back launches no job, and the
+  * meta sidecar alone records rows and schema.
+  */
+class CheckpointsSpec extends SparkSpec {
+  import spark.implicits._
+
+  private def pages = PagesGen.pages(spark, 200L).toDF
+  private def workDir(tag: String) = Files.createTempDirectory(s"graft_ck_$tag").toString
+  private def jobs[T](body: => T): (T, Int) = JobCount(spark.sparkContext)(body)
+
+  test("a narrow stage commits in exactly one Spark job") {
+    val ck = new Checkpoints(spark, workDir("commit"), "h")
+    val (_, n) = jobs(ck.stage("urls")(pages.select("url")))
+    assert(n == 1, s"commit launched $n jobs")
+    assert(ck.stageRows() == Map("urls" -> 200L))
+  }
+
+  test("reading back a complete stage launches no job, in the same or a fresh instance") {
+    val dir = workDir("readback")
+    val ck = new Checkpoints(spark, dir, "h")
+    ck.stage("urls")(pages.select("url"))
+    Seq(ck, new Checkpoints(spark, dir, "h")).foreach { c =>
+      val (back, n) = jobs(c.stage("urls")(fail("a complete stage must not recompute")))
+      assert(n == 0, s"read-back launched $n jobs")
+      assert(back.columns.toSeq == Seq("url"))
+    }
+  }
+
+  test("an empty stage commits rows = 0 and reads back with its stored schema") {
+    val dir = workDir("empty")
+    val filtered = pages.select($"url", $"warc_ts").where(lit(false))
+    val local = spark.createDataFrame(java.util.List.of[Row](), filtered.schema)
+    val ck = new Checkpoints(spark, dir, "h")
+    ck.stage("filtered")(filtered)
+    ck.stage("local")(local)
+    assert(ck.stageRows() == Map("filtered" -> 0L, "local" -> 0L))
+    Seq("filtered", "local").foreach { name =>
+      val back = new Checkpoints(spark, dir, "h").stage(name)(fail("must not recompute"))
+      assert(back.schema.map(f => f.name -> f.dataType) ==
+        filtered.schema.map(f => f.name -> f.dataType))
+      assert(back.count() == 0L)
+    }
+  }
+
+  test("a meta sidecar without the schema field (older layout) reads as incomplete") {
+    val dir = workDir("old")
+    val ck = new Checkpoints(spark, dir, "h")
+    ck.stage("s")(Seq(1, 2, 3).toDF("v"))
+    // through the Hadoop FS, which keeps the sidecar's checksum file valid
+    val meta = new org.apache.hadoop.fs.Path(s"$dir/s__meta.json")
+    val out = meta.getFileSystem(spark.sparkContext.hadoopConfiguration).create(meta, true)
+    try out.write("""{"stage":"s","config_hash":"h","rows":3,"wall_ms":5}""".getBytes("UTF-8"))
+    finally out.close()
+    assert(!ck.isComplete("s"))
+    var recomputed = false
+    val back = ck.stage("s") { recomputed = true; Seq(1, 2, 3).toDF("v") }
+    assert(recomputed && back.count() == 3L && ck.isComplete("s"))
+  }
+
+  test("lineage() row sums equal each stage's meta rows") {
+    val ck = new Checkpoints(spark, workDir("lineage"), "h")
+    ck.stage("a")(pages.select("url").repartition(5))
+    ck.stage("b")(spark.range(0L, 1000L, 1L, 7).toDF("id"))
+    ck.stage("c")(pages.select("url").where(lit(false)))
+    val rows = ck.stageRows()
+    assert(rows == Map("a" -> 200L, "b" -> 1000L, "c" -> 0L))
+    val lineage = ck.lineage()
+    assert(lineage.columns.toSeq == Seq("partition_id", "rows", "stage", "config_hash"))
+    assert(lineage.where($"config_hash" =!= "h").count() == 0L)
+    val sums = lineage.groupBy("stage").agg(sum("rows")).as[(String, Long)].collect().toMap
+    rows.foreach { case (stage, n) => assert(sums.getOrElse(stage, 0L) == n, stage) }
+  }
+}

@@ -3,6 +3,7 @@ package graft.pipeline
 import graft.{RunDedup, SparkSpec}
 import graft.datagen.PagesGen
 import java.nio.file.Files
+import org.apache.spark.graft.JobCount
 
 /** The spark-submit entrypoint (`graft.RunDedup`) end-to-end: arg parsing,
   * a full run writing canonicals + metrics, and checkpointed re-run reuse
@@ -63,5 +64,18 @@ class RunDedupSpec extends SparkSpec {
     assert(spark.read.parquet(s"${out}_labels").count() == 150L)
     // and the rows_* summary must not mix in the 400-page batch's lineage
     assert(stats3("rows_extracted") == 150L)
+  }
+
+  test("a resume over complete checkpoints launches only the output write's jobs") {
+    val dir = Files.createTempDirectory("graft_run_resume").toString
+    PagesGen.pages(spark, 300L).toDF.write.parquet(s"$dir/pages")
+    val args = RunDedup.parse(Array(
+      "--input", s"$dir/pages", "--output", s"$dir/out", "--checkpoint", s"$dir/ckpt"))
+    val first = RunDedup.run(spark, args)
+    val (again, jobs) = JobCount(spark.sparkContext)(
+      RunDedup.run(spark, args.copy(output = s"$dir/out-resumed")))
+    assert(jobs <= 2, s"resume launched $jobs jobs")
+    assert(again - "wall_ms" == first - "wall_ms")
+    assert(spark.read.parquet(s"$dir/out-resumed").count() == first("canonical_rows"))
   }
 }
