@@ -109,13 +109,6 @@ object Decisions {
   def decisionStats(decisions: DataFrame): DataFrame =
     decisions.groupBy("decision", "tier").count()
 
-  /** P8 pair content hash (`ai_matching/cache.py:21-57`): SHA-256 over the
-    * canonical-ordered JSON of the matching-relevant fields. Field order is
-    * fixed by the struct, pair order by (node_a < node_b) upstream.
-    */
-  def pairContentHash(cols: Column*): Column =
-    sha2(to_json(struct(cols: _*)), 256)
-
   /** A2 decision cache (`ai_matching/cache.py:60-141`): reuse previously
     * resolved decisions by content hash; only cache misses flow into
     * `resolve`. Returns (all decisions, new cache entries to append).

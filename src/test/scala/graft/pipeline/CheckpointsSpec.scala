@@ -8,8 +8,9 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 /** The checkpoint commit protocol's cost and on-disk format: a commit is the
-  * stage's own write and nothing else, a read-back launches no job, and the
-  * meta sidecar alone records rows and schema.
+  * stage's own write and nothing else, a read-back launches no job, the meta
+  * sidecar alone records rows and schema, and a sidecar whose data dir is
+  * gone reads as incomplete.
   */
 class CheckpointsSpec extends SparkSpec {
   import spark.implicits._
@@ -79,5 +80,19 @@ class CheckpointsSpec extends SparkSpec {
     assert(lineage.where($"config_hash" =!= "h").count() == 0L)
     val sums = lineage.groupBy("stage").agg(sum("rows")).as[(String, Long)].collect().toMap
     rows.foreach { case (stage, n) => assert(sums.getOrElse(stage, 0L) == n, stage) }
+  }
+
+  test("isComplete self-heals when the data dir is gone but the meta sidecar survives") {
+    val wd = java.nio.file.Files.createTempDirectory("graft_ck_heal").toString
+    import spark.implicits._
+    val ck = new Checkpoints(spark, wd, "heal-hash")
+    ck.stage("s")(Seq(1, 2, 3).toDF("v"))
+    assert(ck.isComplete("s"))
+    // partial cleanup: data dir deleted, meta sidecar left behind
+    val fs = new org.apache.hadoop.fs.Path(wd)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(s"$wd/s"), true)
+    assert(!ck.isComplete("s"), "orphaned meta must not claim completeness")
+    assert(ck.stage("s")(Seq(1, 2, 3).toDF("v")).count() == 3, "stage must recompute")
   }
 }
