@@ -120,6 +120,10 @@ final case class GraftConfig(
   require(lsh.bands * lsh.rowsPerBand <= lsh.numHashes,
     s"lsh.bands (${lsh.bands}) × lsh.rows_per_band (${lsh.rowsPerBand}) " +
       s"must be ≤ lsh.num_hashes (${lsh.numHashes})")
+  // a cap below 1 would mark every non-empty bucket hot: all candidates
+  // would silently degrade to star pairs or be dropped
+  require(lsh.maxBucketSize >= 1,
+    s"lsh.max_bucket_size must be ≥ 1, got ${lsh.maxBucketSize}")
 
   /** Stable hash of the config, used to key stage checkpoints (reference
     * analog: content-hash cache keys, `ai_matching/cache.py:21-57`).

@@ -16,9 +16,10 @@ import graft.functions.Hashing
   * Scale posture:
   *  - the band self-join is THE skew-sensitive shuffle; over-dense buckets
   *    (boilerplate pages, hot hosts) are capped at `cfg.lsh.maxBucketSize`
-  *    via a broadcast anti-join of hot keys (dropped buckets are observable
-  *    in [[bucketStats]], never silent) — pair blowup is quadratic in bucket
-  *    size, so one 10^6 bucket would otherwise emit 10^12 pairs;
+  *    by [[splitHotBuckets]], the one guard every bucket join shares
+  *    (dropped buckets are observable in [[bucketStats]], never silent) —
+  *    pair blowup is quadratic in bucket size, so one 10^6 bucket would
+  *    otherwise emit 10^12 pairs;
   *  - AQE skew-join handles residual imbalance below the cap;
   *  - pair canonical ordering `node_a < node_b` halves the join output and
   *    `dropDuplicates` dedups across bands (candidate_pairs.py:59-64 semantics).
@@ -69,33 +70,38 @@ object MinHashLsh {
         sum(when(col("count") > 1, col("count") * (col("count") - 1) / 2).otherwise(0)).as("candidate_pairs_upper")
       )
 
-  /** Exact set of hot keys (bucket size > cap) computed WITHOUT the
-    * corpus-wide (key, count) aggregation shuffle the naive
-    * `groupBy(key).count()` pays (guide §2.4 — that exchange carries one row
-    * per DISTINCT key, i.e. nearly the full exploded frame when band keys are
-    * mostly unique, and in the self-join callers the whole count subtree was
-    * even duplicated once per join side).
+  /** Exact set of hot keys (bucket size > cap), collected to the driver.
+    * Hot keys are few by construction (each holds > cap rows); no other key
+    * ever reaches the driver.
     *
     * Pass 1 (shuffle-free): count keys per partition and keep only keys that
     * clear the pigeonhole bound — a key with total count > cap spread over m
     * partitions must reach a local count ≥ ceil((cap+1)/m) in at least one
     * partition, so the survivor set is a superset of the true hot set. On
     * non-pathological corpora it is empty and detection costs one narrow
-    * local pass over cached bytes. Per-task state is one (key → count) map
-    * over the partition's distinct keys — bounded by partition row count,
-    * the same order of memory the old hash aggregation used.
+    * local pass. Per-task state is one (key → count) map over the
+    * partition's distinct keys.
     *
     * Pass 2 (only when pass 1 finds survivors): exact-count just the
     * survivor keys behind a broadcast semi-join and apply the true `> cap`
     * filter — the aggregation output is |survivors|, not |distinct keys|.
+    *
+    * When m > cap the bound falls to 1 and pass 1 would return every
+    * distinct key, so it is skipped: one exact count over all keys runs
+    * instead and only the hot keys are collected.
     */
   private[operators] def hotKeyArray(rows: DataFrame, keyCol: String, cap: Int): Array[Long] = {
     val keys = rows.select(col(keyCol))
     require(keys.schema.head.dataType == org.apache.spark.sql.types.LongType,
       s"hot-key detection expects a LongType key, got ${keys.schema.head.dataType}")
+    def exactHot(candidates: DataFrame): Array[Long] =
+      candidates.groupBy(keyCol).count()
+        .where(col("count") > cap)
+        .select(keyCol).collect().map(_.getLong(0))
     val rdd = keys.queryExecution.toRdd // InternalRow: no Row conversion
     val m = math.max(1, rdd.getNumPartitions)
     val thr = (cap.toLong + m) / m // ceil((cap+1)/m)
+    if (thr < 2) return exactHot(keys)
     val survivors = rdd.mapPartitions { it =>
       val counts = new java.util.HashMap[Long, Long]()
       while (it.hasNext) {
@@ -110,52 +116,55 @@ object MinHashLsh {
     else {
       val spark = rows.sparkSession
       import spark.implicits._
-      keys.join(broadcast(survivors.toSeq.toDF(keyCol)), Seq(keyCol), "left_semi")
-        .groupBy(keyCol).count()
-        .where(col("count") > cap)
-        .select(keyCol).collect().map(_.getLong(0))
+      exactHot(keys.join(broadcast(survivors.toSeq.toDF(keyCol)), Seq(keyCol), "left_semi"))
     }
   }
 
-  /** Drop every row whose `keyCol` bucket holds more than `cap` members —
-    * the hot-bucket guard shared by the band join, the SimHash block join
-    * and the embedding-LSH bucket join ([[graft.operators.Similarity
-    * .nearDupPairs]]). Hot keys are few by construction (each one holds
-    * > cap rows), so they broadcast. `cap == Int.MaxValue` skips the prune
-    * entirely (exhaustive semantics, no counting shuffle); `cap < 1` would
-    * silently drop every non-empty bucket, so it's rejected.
+  /** The hot-bucket guard shared by every bucket join: split `rows` into
+    * (cold, hot) by the size of their `keyCol` bucket, hot meaning more
+    * than `cap` members. `hot` is `None` when no bucket exceeds the cap —
+    * callers then plan no anti-join and no hot branch at all. Each caller
+    * decides what happens to hot rows: [[fusedCandidates]] stars them, the
+    * other bucket joins drop them (observable via [[bucketStats]]).
     *
-    * r6: the hot set is detected eagerly via [[hotKeyArray]] (pigeonhole
-    * local count, no corpus-wide count shuffle) and the anti-join is elided
-    * outright when it is empty — the previous lazy `groupBy(key).count()`
-    * subtree was planned once per self-join SIDE in every caller (two
-    * Exchange + HashAggregate pairs per query, visible in the q18/q19
-    * baseline plans).
+    * Detection is eager ([[hotKeyArray]] runs its jobs when the plan is
+    * built), so callers whose upstream is not persisted pay one extra pass
+    * over it. `cap == Int.MaxValue` skips detection (exhaustive semantics);
+    * `cap < 1` would mark every non-empty bucket hot, so it's rejected.
+    *
+    * NOTE: the Seq-key anti/semi-joins move keyCol first in the output —
+    * callers must select columns by NAME afterwards, never by position.
     */
-  private[operators] def pruneHotBuckets(rows: DataFrame, keyCol: String, cap: Int): DataFrame =
-    if (cap == Int.MaxValue) rows
+  private[operators] def splitHotBuckets(rows: DataFrame, keyCol: String,
+      cap: Int): (DataFrame, Option[DataFrame]) =
+    if (cap == Int.MaxValue) (rows, None)
     else {
       require(cap >= 1, s"maxBucketSize must be >= 1, got $cap")
       val hot = hotKeyArray(rows, keyCol, cap)
-      if (hot.isEmpty) rows
+      if (hot.isEmpty) (rows, None)
       else {
         val spark = rows.sparkSession
         import spark.implicits._
-        // NOTE: the Seq-key anti-join moves keyCol first in the output —
-        // callers must select columns by NAME afterwards, never by position
-        rows.join(broadcast(hot.toSeq.toDF(keyCol)), Seq(keyCol), "left_anti")
+        val hotKeys = broadcast(hot.toSeq.toDF(keyCol))
+        (rows.join(hotKeys, Seq(keyCol), "left_anti"),
+          Some(rows.join(hotKeys, Seq(keyCol), "left_semi")))
       }
     }
+
+  /** Within-bucket self-join: every pair of rows sharing `keyCol`, once, in
+    * canonical order `a.node < b.node`. Sides are aliased `a` and `b`;
+    * callers filter and project through those aliases.
+    */
+  private[operators] def bucketSelfJoin(rows: DataFrame, keyCol: String): DataFrame =
+    rows.alias("a").join(rows.alias("b"),
+      col(s"a.$keyCol") === col(s"b.$keyCol") && col("a.node") < col("b.node"))
 
   /** LSH candidate pairs: (node_a, node_b) with node_a < node_b, deduped
     * across bands, hot buckets dropped (observable via [[bucketStats]]).
     */
   def lshCandidates(sigs: DataFrame, cfg: GraftConfig): DataFrame = {
-    val b = bands(sigs, cfg)
-    val pruned = pruneHotBuckets(b, "band_key", cfg.lsh.maxBucketSize)
-    val a = pruned.alias("a")
-    val bb = pruned.alias("b")
-    a.join(bb, col("a.band_key") === col("b.band_key") && col("a.node") < col("b.node"))
+    val (cold, _) = splitHotBuckets(bands(sigs, cfg), "band_key", cfg.lsh.maxBucketSize)
+    bucketSelfJoin(cold, "band_key")
       .select(col("a.node").as("node_a"), col("b.node").as("node_b"))
       .dropDuplicates("node_a", "node_b")
   }
@@ -169,10 +178,8 @@ object MinHashLsh {
     val d = cfg.simhash.maxHammingDistance
     val blocks = sigs.where(col("simhash").isNotNull)
       .select(col("node"), col("simhash"), explode(Hashing.simHashBlocks(col("simhash"), d + 1)).as("block_key"))
-    val pruned = pruneHotBuckets(blocks, "block_key", cfg.lsh.maxBucketSize)
-    val a = pruned.alias("a")
-    val b = pruned.alias("b")
-    a.join(b, col("a.block_key") === col("b.block_key") && col("a.node") < col("b.node"))
+    val (cold, _) = splitHotBuckets(blocks, "block_key", cfg.lsh.maxBucketSize)
+    bucketSelfJoin(cold, "block_key")
       .where(bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))) <= d)
       .select(col("a.node").as("node_a"), col("b.node").as("node_b"))
       .dropDuplicates("node_a", "node_b")
@@ -195,18 +202,7 @@ object MinHashLsh {
     * heterogeneous mega-buckets degrade recall gracefully instead of
     * exploding. Counts are observable via [[bucketStats]].
     */
-  /** @param materialize optional persistence hook for the exploded key
-    *   frame (consumed by the hot-key agg, both self-join sides, and the
-    *   star branch when hot buckets exist). The pipeline deliberately passes
-    *   identity: re-deriving the explode from the column-pruned signatures
-    *   cache costs fewer memory BYTES than caching the exploded form
-    *   (~150 B/doc × 3 reads vs ~800 B/doc write + 3 reads), and memory
-    *   bandwidth — not CPU — is the observed scaling ceiling (BENCH.md).
-    *   Callers whose upstream is not persisted (ad-hoc use on a raw scan)
-    *   should still pass a cache here.
-    */
-  def fusedCandidates(sigs: DataFrame, cfg: GraftConfig,
-      materialize: DataFrame => DataFrame = identity): DataFrame = {
+  def fusedCandidates(sigs: DataFrame, cfg: GraftConfig): DataFrame = {
     val d = cfg.simhash.maxHammingDistance
     // Accept either a precomputed `band_keys` column (the pipeline persists
     // those 16 longs instead of the 128-long minhash — 8x fewer cached
@@ -228,44 +224,26 @@ object MinHashLsh {
         explode(Hashing.simHashBlocks(col("simhash"), d + 1)).as("raw_key"))
       .select(col("node"), col("simhash"), xxhash64(col("raw_key"), lit("simblock")).as("key"))
       .withColumn("tier", lit(1).cast("tinyint"))
-    val keyed = materialize(banded.unionByName(blocked))
-    // The hot-key SET is tiny by construction (keys whose bucket exceeds the
-    // cap) — collect it once: the broadcast build would pull it to the
-    // driver anyway, and knowing it's empty lets the whole anti-join + star
-    // subplan tree be elided from the plan (it usually is on clean corpora;
-    // boilerplate-heavy web crawls are where it kicks in). r6: detection
-    // goes through [[hotKeyArray]]'s pigeonhole local count — the previous
-    // `groupBy(key).count()` shuffled one row per DISTINCT key (≈ the whole
-    // 20-keys/doc exploded frame, its second-largest exchange after the
-    // self-join itself) just to find a set that is almost always empty.
-    val spark = sigs.sparkSession
-    val hotArr = hotKeyArray(keyed, "key", cfg.lsh.maxBucketSize)
-    import spark.implicits._
-    val hotKeys = broadcast(hotArr.toSeq.toDF("key"))
+    // not cached: each consumer re-deriving the explode from the persisted
+    // signatures reads fewer memory bytes than caching the ~800 B/doc
+    // exploded form, and memory bandwidth is the scaling ceiling (BENCH.md)
+    val (cold, hot) = splitHotBuckets(banded.unionByName(blocked), "key", cfg.lsh.maxBucketSize)
 
     // normal buckets: all-pairs within bucket
-    val pruned =
-      if (hotArr.isEmpty) keyed else keyed.join(hotKeys, Seq("key"), "left_anti")
-    val a = pruned.alias("a")
-    val b = pruned.alias("b")
-    val allPairs = a.join(b, col("a.key") === col("b.key") && col("a.node") < col("b.node"))
+    val allPairs = bucketSelfJoin(cold, "key")
       .where(col("a.tier") === col("b.tier")) // a pair matches within one tier's key space
       .where(col("a.tier") === 0 ||
         bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))) <= d)
       .select(col("a.node").as("node_a"), col("b.node").as("node_b"), col("a.tier").as("cand_tier"))
 
-    val withStar =
-      if (hotArr.isEmpty) allPairs
-      else {
-        // hot buckets: star to the bucket minimum (skew-safe linear fan-out)
-        val hot = keyed.join(hotKeys, Seq("key"), "left_semi")
-        val hotMin = hot.groupBy("key").agg(min(col("node")).as("min_node"))
-        val starPairs = hot.join(hotMin, "key")
-          .where(col("node") > col("min_node"))
-          .select(col("min_node").as("node_a"), col("node").as("node_b"),
-            lit(2).cast("tinyint").as("cand_tier"))
-        allPairs.unionByName(starPairs)
-      }
+    // hot buckets: star to the bucket minimum (skew-safe linear fan-out)
+    val withStar = hot.fold(allPairs) { h =>
+      val hotMin = h.groupBy("key").agg(min(col("node")).as("min_node"))
+      allPairs.unionByName(h.join(hotMin, "key")
+        .where(col("node") > col("min_node"))
+        .select(col("min_node").as("node_a"), col("node").as("node_b"),
+          lit(2).cast("tinyint").as("cand_tier")))
+    }
 
     withStar
       .groupBy("node_a", "node_b")

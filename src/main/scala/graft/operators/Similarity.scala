@@ -216,8 +216,8 @@ object Similarity {
   /** Embedding-cosine near-duplicate pairs: bucket join + exact cosine ≥
     * threshold, canonical pair order. Hot buckets (> maxBucketSize members
     * — mass-duplicated vectors landing one bucket in every table) are
-    * dropped via the same broadcast anti-join as the MinHash band join
-    * (`MinHashLsh.lshCandidates`): without the cap a corpus of ~1M
+    * dropped by the guard every bucket join shares
+    * ([[MinHashLsh.splitHotBuckets]]): without the cap a corpus of ~1M
     * identical pages enumerates ~tables·N² join rows. Pass
     * `maxBucketSize = Int.MaxValue` for provably-exhaustive semantics
     * (the degenerate single-bucket oracle configs do).
@@ -228,15 +228,12 @@ object Similarity {
       idCol: String = "vec_id", vecCol: String = "embedding",
       maxBucketSize: Int = 2000
   ): DataFrame = {
-    val b = corpus.select(col(idCol).as("id"), col(vecCol).as("vec"),
+    val b = corpus.select(col(idCol).as("node"), col(vecCol).as("vec"),
       explode(lshBuckets(col(vecCol), tables, bitsPerTable, seed)).as("bucket"))
-    val pruned = MinHashLsh.pruneHotBuckets(b, "bucket", maxBucketSize)
-    // rename BY NAME: the Seq-key anti-join reorders columns (bucket first),
-    // so a positional toDF would silently misassign them
-    val a = pruned.select(col("id").as("id_a"), col("vec").as("vec_a"), col("bucket"))
-    val c = pruned.select(col("id").as("id_b"), col("vec").as("vec_b"), col("bucket"))
-    a.join(c, Seq("bucket"))
-      .where(col("id_a") < col("id_b"))
+    val (cold, _) = MinHashLsh.splitHotBuckets(b, "bucket", maxBucketSize)
+    MinHashLsh.bucketSelfJoin(cold, "bucket")
+      .select(col("a.node").as("id_a"), col("a.vec").as("vec_a"),
+        col("b.node").as("id_b"), col("b.vec").as("vec_b"))
       .dropDuplicates("id_a", "id_b")
       .withColumn("cosine", cosineFused(col("vec_a"), col("vec_b")))
       .where(col("cosine") >= threshold)

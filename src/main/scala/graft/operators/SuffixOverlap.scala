@@ -42,23 +42,20 @@ object SuffixOverlap {
       .select(col("fp"), col("node"))
   }
 
-  /** Candidate pairs from shared fingerprints (canonical order, deduped,
-    * hot fingerprints capped — same skew posture as the LSH band join).
+  /** Candidate pairs from shared fingerprints (canonical order, deduped).
+    * Fingerprints whose bucket exceeds `cfg.lsh.maxBucketSize` are dropped
+    * through the shared [[MinHashLsh.splitHotBuckets]] guard — same skew
+    * posture as the LSH band join, with no hot-key plan when none is hot.
     */
   def candidates(texts: Dataset[(Long, String)], cfg: GraftConfig): DataFrame = {
-    // eager per-invocation checkpoint: the fingerprint frame feeds the
-    // hot-key count and BOTH self-join sides — without truncation the
+    // eager per-invocation checkpoint: the fingerprint frame feeds hot-key
+    // detection and BOTH self-join sides — without truncation the
     // Karp-Rabin rolling hash re-runs over every text 3× (guide §2.4,
     // duplicated subtrees). Blocks are context-cleaned once the result is
     // dropped; nothing is cached across invocations.
     val fps = fingerprints(texts, cfg).localCheckpoint(true)
-    val hot = fps.groupBy("fp").count()
-      .where(col("count") > cfg.lsh.maxBucketSize)
-      .select("fp")
-    val pruned = fps.join(broadcast(hot), Seq("fp"), "left_anti")
-    val a = pruned.alias("a")
-    val b = pruned.alias("b")
-    a.join(b, col("a.fp") === col("b.fp") && col("a.node") < col("b.node"))
+    val (cold, _) = MinHashLsh.splitHotBuckets(fps, "fp", cfg.lsh.maxBucketSize)
+    MinHashLsh.bucketSelfJoin(cold, "fp")
       .select(col("a.node").as("node_a"), col("b.node").as("node_b"))
       .dropDuplicates("node_a", "node_b")
   }

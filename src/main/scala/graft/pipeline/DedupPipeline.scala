@@ -122,13 +122,6 @@ final class DedupPipeline(
     * shuffle at scale.
     */
   def candidates(sigs: DataFrame): DataFrame = stage("candidates", sigs) {
-    // The exploded key frame feeds three subplans (hot-key agg, both
-    // self-join sides). Round 1 cached it; round 2 re-derives it per
-    // consumer instead: the explode's inputs (node, simhash, band_keys) are
-    // a column-pruned ~150 B/doc slice of the already-persisted signatures
-    // stage, while caching the exploded form costs ~800 B/doc to write plus
-    // 3 × 800 B/doc to read — and on one box memory bandwidth, not CPU, is
-    // the scaling ceiling (BENCH.md). The explode itself is cheap codegen.
     MinHashLsh.fusedCandidates(sigs, cfg)
   }
 

@@ -61,6 +61,19 @@ class PlanAuditSpec extends SparkSpec {
       "hot-key pruning must plan a broadcast LeftAnti join:\n" + p.take(3000))
   }
 
+  test("fingerprint candidates plan no hot-key anti-join or fp count when nothing is hot") {
+    val shared = (1 to 60).map(i => s"shared$i").mkString(" ")
+    val docs = Seq(
+      (1L, s"prefix one $shared suffix one"),
+      (2L, s"different beginning $shared another ending"),
+      (3L, "no overlap here at all just words " * 20)).toDS()
+    val cands = graft.operators.SuffixOverlap.candidates(docs, graft.config.GraftConfig.default)
+    val p = cands.queryExecution.executedPlan.toString
+    assert(!p.contains("LeftAnti"), "no hot fingerprint, so no anti-join:\n" + p.take(3000))
+    assert("""keys=\[fp#""".r.findFirstIn(p).isEmpty,
+      "no corpus-wide count aggregation on fp:\n" + p.take(3000))
+  }
+
   test("extraction + signature stage stays inside whole-stage codegen") {
     val pages = graft.datagen.PagesGen.pages(spark, 10L).toDF()
     val cfg = graft.config.GraftConfig.default

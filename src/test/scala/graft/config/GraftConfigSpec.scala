@@ -82,6 +82,19 @@ class GraftConfigSpec extends AnyFunSuite {
     assert(ok.lsh.bands == 32 && ok.lsh.rowsPerBand == 4)
   }
 
+  test("lsh.max_bucket_size below 1 fails fast at config build") {
+    // a cap of 0 (or less) marks every bucket hot: candidates would
+    // silently degrade to star pairs instead of failing
+    for (bad <- Seq("0", "-3")) {
+      val e = intercept[IllegalArgumentException](
+        GraftConfig.fromMap(Map("lsh.max_bucket_size" -> bad)))
+      assert(e.getMessage.contains("max_bucket_size"))
+    }
+    intercept[IllegalArgumentException](
+      GraftConfig.default.copy(lsh = GraftConfig.default.lsh.copy(maxBucketSize = 0)))
+    assert(GraftConfig.fromMap(Map("lsh.max_bucket_size" -> "1")).lsh.maxBucketSize == 1)
+  }
+
   test("table overrides tolerate a NULL version cell (resolves as version 0)") {
     val spark = graft.SparkSpec.session
     import spark.implicits._

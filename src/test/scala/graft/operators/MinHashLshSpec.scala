@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.SparkSpec
 import graft.config.GraftConfig
+import org.apache.spark.graft.JobCount
 import org.apache.spark.sql.functions._
 
 class MinHashLshSpec extends SparkSpec {
@@ -72,6 +73,22 @@ class MinHashLshSpec extends SparkSpec {
     // empty result when nothing exceeds the cap — the caller elides the
     // anti-join entirely in this case
     assert(MinHashLsh.hotKeyArray(df, "key", cap + 1).isEmpty)
+  }
+
+  test("hotKeyArray with more partitions than the cap counts exactly, collecting only hot keys") {
+    // m = 16 > cap = 4: the pigeonhole bound ceil((cap+1)/m) falls to 1, so
+    // a pass 1 would ship every one of the ~1,000 distinct keys to the
+    // driver. Detection must instead run one exact count over all keys —
+    // exactly the jobs of the plain count, with no survivor collect before it.
+    val cap = 4
+    val rows = Seq.fill(cap + 1)(7L) ++ (1000L until 2000L)
+    val df = spark.sparkContext.parallelize(rows, 16).toDF("key")
+    val (hot, jobs) = JobCount(spark.sparkContext)(MinHashLsh.hotKeyArray(df, "key", cap))
+    assert(hot.toSet == Set(7L), s"expected exactly {7}, got ${hot.toSet}")
+    val (_, countJobs) = JobCount(spark.sparkContext)(
+      df.groupBy("key").count().where(col("count") > cap).select("key").collect())
+    assert(jobs == countJobs,
+      s"hot-key detection ran $jobs jobs, the exact count alone runs $countJobs")
   }
 
   test("bucketStats reports capped buckets") {

@@ -52,6 +52,24 @@ class SuffixOverlapSpec extends SparkSpec {
     assert(!verified.exists(v => v._1 == 3L || v._2 == 3L))
   }
 
+  test("fingerprints over the bucket cap are dropped, other shared passages still pair") {
+    val boiler = (1 to 60).map(i => s"boiler$i").mkString(" ")
+    val passage = (1 to 60).map(i => s"passage$i").mkString(" ")
+    // docs 1-5 share the boilerplate: each of its fingerprints sits in a
+    // 5-member bucket, over a cap of 3; docs 10 and 11 share a 2-member one
+    val docs = ((1L to 5L).map(i => (i, s"intro$i $boiler outro$i")) ++ Seq(
+      (10L, s"first shell $passage first end"),
+      (11L, s"second shell $passage second end"))).toDS()
+    def pairs(cap: Int): Set[(Long, Long)] = {
+      val cfg = GraftConfig.default.copy(lsh = GraftConfig.default.lsh.copy(maxBucketSize = cap))
+      SuffixOverlap.candidates(docs, cfg).as[(Long, Long)].collect().toSet
+    }
+    val capped = pairs(3)
+    assert(capped == Set((10L, 11L)), s"boilerplate pairs must be dropped: $capped")
+    // the same corpus uncapped pairs the boilerplate docs too
+    assert(pairs(Int.MaxValue).contains((1L, 5L)))
+  }
+
   test("sub-threshold overlaps are filtered by verify") {
     val cfg = GraftConfig.default
     val shared = (1 to 12).map(i => s"tiny$i").mkString(" ") // ~90 chars < 256
