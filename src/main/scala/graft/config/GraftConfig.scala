@@ -95,8 +95,7 @@ final case class SimHashConfig(
 final case class OverlapConfig(
     minOverlapChars: Int = 256,
     /** content-defined sampling modulus: expected grams kept = len/samplingMod */
-    samplingMod: Int = 16,
-    seed: Long = 42L
+    samplingMod: Int = 16
 )
 
 final case class GraftConfig(
@@ -164,7 +163,7 @@ object GraftConfig {
     "lsh.seed", "lsh.jaccard_threshold", "lsh.ambiguous_low",
     "lsh.max_bucket_size",
     "simhash.max_hamming_distance", "simhash.seed",
-    "overlap.min_overlap_chars", "overlap.sampling_mod", "overlap.seed")
+    "overlap.min_overlap_chars", "overlap.sampling_mod")
 
   def fromMap(overrides: Map[String, String], base: GraftConfig = default): GraftConfig = {
     // Reject unknown keys: a typo'd key ('lsh.bandz') would otherwise run
@@ -229,8 +228,7 @@ object GraftConfig {
         seed = l("simhash.seed", base.simhash.seed)),
       overlap = base.overlap.copy(
         minOverlapChars = i("overlap.min_overlap_chars", base.overlap.minOverlapChars),
-        samplingMod = i("overlap.sampling_mod", base.overlap.samplingMod),
-        seed = l("overlap.seed", base.overlap.seed)))
+        samplingMod = i("overlap.sampling_mod", base.overlap.samplingMod)))
     // the bands × rows_per_band ≤ num_hashes invariant is enforced in the
     // GraftConfig class body, covering this and every other construction path
     cfg

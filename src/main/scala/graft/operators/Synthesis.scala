@@ -206,57 +206,51 @@ object Synthesis {
           (col("avg_weight").isNotNull && col("avg_weight") < cfg.cluster.minInternalSimilarity))
   }
 
-  /** Fused per-cluster quality: coherence flag (C3), mean match confidence
-    * (G12) and second-tier flag (G13) in ONE decisions⋈labels join + one
-    * aggregation — [[coherence]]/[[clusterConfidence]]/[[tierFlags]] each
-    * re-join and re-aggregate the same frames, and the pipeline needs all
-    * three per run.
+  /** Per-cluster quality appended to [[canonicals]]' output `canon`:
+    * coherence flag (C3), mean match confidence (G12, NULL for singletons)
+    * and tier2_assisted (G13 analog). [[coherence]], [[clusterConfidence]]
+    * and [[tierFlags]] are the per-signal reference forms.
+    *
+    * `canon` already carries source_count (the per-component member count:
+    * urls are the pipeline's unique key) and distinct_days, so only the
+    * match-edge aggregation needs its own join, over a frame bounded by the
+    * matched pairs (≪ corpus; empty for all-singleton corpora).
     */
-  /** @param nodeDays optional (node, day) frame enabling coherence check (c)
-    *   — date spread ≤ maxDistinctDates (`coherence.py:58-63`; applied only
-    *   when provided, the reference's `events_by_id` optionality). Webtext
-    *   analog: day = date_trunc('day', warc_ts).
-    */
-  def clusterQuality(labels: DataFrame, decisions: DataFrame, cfg: GraftConfig,
-      nodeDays: Option[DataFrame] = None): DataFrame = {
-    val lbl = labels.select(col("node"), col("component"))
+  def clusterQuality(canon: DataFrame, labels: DataFrame, decisions: DataFrame,
+      cfg: GraftConfig): DataFrame = {
     // match rows ONLY: overlap_match never creates a cluster edge
     // (matchEdges filters decision === 'match' — syndication is not
     // duplication), so counting it here would flag node_a's cluster as
     // tier2-assisted for an edge that is NOT inside it — and asymmetrically
     // never flag node_b's. For match rows node_a and node_b share a
     // component by construction, so the single-sided join is exact.
-    val rows = decisions
+    val matchAgg = decisions
       .where(col("decision") === "match")
-      .select(col("node_a").as("src"),
+      .select(col("node_a").as("node"),
         col("exact_jaccard").as("match_weight"),
         (col("tier") =!= "jaccard").as("is_tier2"))
-      .join(lbl.toDF("src", "component"), "src")
+      .join(labels.select(col("node"), col("component")), "node")
       .groupBy("component")
       .agg(
         avg(col("match_weight")).as("match_confidence"),
         bool_or(col("is_tier2")).as("tier2_assisted"))
-    val base = lbl.groupBy("component").agg(count(lit(1)).as("size"))
-      .join(rows, Seq("component"), "left")
-    val withDays = nodeDays match {
-      case None => base.withColumn("distinct_days", lit(null).cast("long"))
-      case Some(nd) =>
-        // Exact distinct count via collect_set (one-pass, map-side
-        // combinable; set size bounded by the crawl-day span): the hard
-        // `> maxDistinctDates` flag must not ride on an HLL++ estimate,
-        // which is not guaranteed exact even at tiny cardinalities.
-        val days = nd.select(col("node"), col("day"))
-          .join(lbl, "node")
-          .groupBy("component")
-          .agg(size(collect_set(col("day"))).cast("long").as("distinct_days"))
-        base.join(days, Seq("component"), "left")
-    }
-    withDays.withColumn("flagged",
-      col("size") > cfg.cluster.maxClusterSize ||
-        (col("match_confidence").isNotNull &&
-          col("match_confidence") < cfg.cluster.minInternalSimilarity) ||
-        (col("distinct_days").isNotNull &&
-          col("distinct_days") > cfg.cluster.maxDistinctDates))
+    // coherence check (c) webtext analog: date spread = distinct warc_ts
+    // days. OPT-IN (cfg.cluster.warcDateCriterion): recrawls of one page
+    // across many days are normal in web dedup, so flagging on crawl-day
+    // spread is a policy choice, not a default — mirroring the reference,
+    // where check (c) applies only when event dates exist.
+    val dateClause =
+      if (cfg.cluster.warcDateCriterion)
+        col("distinct_days") > cfg.cluster.maxDistinctDates
+      else lit(false)
+    canon.join(matchAgg, Seq("component"), "left")
+      .select(canon.columns.map(col) ++ Seq(
+        (col("source_count") > cfg.cluster.maxClusterSize ||
+          (col("match_confidence").isNotNull &&
+            col("match_confidence") < cfg.cluster.minInternalSimilarity) ||
+          dateClause).as("flagged"),
+        col("match_confidence"),
+        coalesce(col("tier2_assisted"), lit(false)).as("tier2_assisted")): _*)
   }
 
   /** G12 per-cluster confidence: mean match-edge weight; NULL for singletons

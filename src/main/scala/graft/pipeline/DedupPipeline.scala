@@ -36,8 +36,8 @@ final class DedupPipeline(
 
   /** Without a checkpoint dir, every stage is persisted: each one feeds
     * multiple downstream branches (extracted ×3, signatures ×3, decisions
-    * via settled/ambiguous unions, overlaps via the tier-2 join) and the
-    * recompute blow-up is multiplicative. With a checkpoint dir the parquet
+    * via settled/ambiguous unions) and the recompute blow-up is
+    * multiplicative. With a checkpoint dir the parquet
     * read-back plays this role. Stage DataFrames are also memoized per
     * pipeline instance so repeated calls share one persisted plan.
     */
@@ -125,15 +125,6 @@ final class DedupPipeline(
     MinHashLsh.fusedCandidates(sigs, cfg)
   }
 
-  /** Long-exact-overlap tier pairs (node_a, node_b, overlap_len). */
-  def overlaps(extractedDf: DataFrame): DataFrame = stage("overlaps", extractedDf) {
-    val texts = extractedDf
-      .select(xxhash64(col("url")).as("node"), col("extracted_text"))
-      .as[(Long, String)]
-    val cands = SuffixOverlap.candidates(texts, cfg)
-    SuffixOverlap.verify(cands, texts, cfg)
-  }
-
   /** Decisions in two tiers. Tier-1 (Jaccard thresholds) is persisted as its
     * own stage: three branches read it (ambiguous pairs, the settled/ambiguous
     * split inside resolveAmbiguous) and each re-run would repeat the
@@ -144,9 +135,9 @@ final class DedupPipeline(
     * so verifying anything else is wasted work — and at 10^12 docs a
     * corpus-wide fingerprint shuffle would dwarf the band join. Direct LCS on
     * the ambiguous pairs is also strictly more exact than the sampled
-    * fingerprint candidate pass (no content-sampling misses); the standalone
-    * [[overlaps]] stage keeps the distributed fingerprint path for corpus-wide
-    * syndication scans (q21).
+    * fingerprint candidate pass (no content-sampling misses); the corpus-wide
+    * fingerprint path, [[SuffixOverlap.candidates]], serves syndication scans
+    * (q21).
     */
   def decisions(cands: DataFrame, sigs: DataFrame, extractedDf: DataFrame): DataFrame = {
     val tier1 = stage("tier1_decisions", cands, sigs) {
@@ -187,9 +178,8 @@ final class DedupPipeline(
     ConnectedComponents.labelsWithSingletons(vertices, edges)
   }
 
-  /** Canonicals enriched with the cluster-quality columns: coherence flag
-    * (C3), mean match confidence (G12, NULL for singletons), tier2_assisted
-    * (G13 analog).
+  /** Canonicals enriched with the cluster-quality columns of
+    * [[Synthesis.clusterQuality]] when decisions are given.
     */
   def canonicals(labelsDf: DataFrame, extractedDf: DataFrame,
       decisionsDf: Option[DataFrame] = None): DataFrame =
@@ -206,54 +196,7 @@ final class DedupPipeline(
       .join(labelsDf, "node")
     val base = Synthesis.canonicals(labeled, cfg,
       texts = Some(extractedDf.select(col("url"), col("extracted_text"))))
-    decisionsDf match {
-      case None => base
-      case Some(decs) =>
-        // Fused cluster quality (r6): [[Synthesis.clusterQuality]] re-counted
-        // the FULL labels frame per component and joined that back — but
-        // `base` already carries source_count, which is the same
-        // per-component member count (urls are the pipeline's unique key).
-        // Only the match-edge aggregation actually needs its own join: a
-        // frame bounded by the number of matched pairs (≪ corpus; empty for
-        // all-singleton corpora), so the quality join's right side shrinks
-        // from |clusters| rows to |matched components| — at 1M docs this
-        // removed two 1M-row shuffles (labels re-count + base⋈quality) from
-        // the canonicals stage (guide §2.4: share one aggregation instead of
-        // re-deriving it). Semantics per clusterQuality: match rows ONLY
-        // (overlap_match never creates a cluster edge), node_a side is exact
-        // because match endpoints share a component.
-        val matchAgg = decs
-          .where(col("decision") === "match")
-          .select(col("node_a").as("node"),
-            col("exact_jaccard").as("match_weight"),
-            (col("tier") =!= "jaccard").as("is_tier2"))
-          .join(labelsDf.select(col("node"), col("component")), "node")
-          .groupBy("component")
-          .agg(
-            avg(col("match_weight")).as("match_confidence"),
-            bool_or(col("is_tier2")).as("tier2_assisted"))
-        // coherence check (c) webtext analog: date spread = distinct warc_ts
-        // days, computed inside the canonicals aggregation itself (the
-        // labeled frame carries warc_ts — no second extracted scan/join).
-        // OPT-IN (cfg.cluster.warcDateCriterion): recrawls of one page
-        // across many days are normal in web dedup, so flagging on crawl-day
-        // spread is a policy choice, not a default — mirroring the
-        // reference, where check (c) applies only when event dates exist.
-        val dateClause =
-          if (cfg.cluster.warcDateCriterion)
-            col("distinct_days") > cfg.cluster.maxDistinctDates
-          else lit(false)
-        val joined = base.join(matchAgg, Seq("component"), "left")
-        // same output column ORDER as the pre-fusion plan:
-        // base columns, flagged, match_confidence, tier2_assisted
-        joined.select(base.columns.map(col) ++ Seq(
-          (col("source_count") > cfg.cluster.maxClusterSize ||
-            (col("match_confidence").isNotNull &&
-              col("match_confidence") < cfg.cluster.minInternalSimilarity) ||
-            dateClause).as("flagged"),
-          col("match_confidence"),
-          coalesce(col("tier2_assisted"), lit(false)).as("tier2_assisted")): _*)
-    }
+    decisionsDf.fold(base)(Synthesis.clusterQuality(base, labelsDf, _, cfg))
   }
 
   /** Run end-to-end; returns the canonicals DataFrame. */

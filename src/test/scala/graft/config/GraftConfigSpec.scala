@@ -95,6 +95,12 @@ class GraftConfigSpec extends AnyFunSuite {
     assert(GraftConfig.fromMap(Map("lsh.max_bucket_size" -> "1")).lsh.maxBucketSize == 1)
   }
 
+  test("overlap.seed is rejected as an unknown key: fingerprint sampling takes no seed") {
+    val e = intercept[IllegalArgumentException](
+      GraftConfig.fromMap(Map("overlap.seed" -> "7")))
+    assert(e.getMessage.contains("unknown config override key(s): overlap.seed"))
+  }
+
   test("table overrides tolerate a NULL version cell (resolves as version 0)") {
     val spark = graft.SparkSpec.session
     import spark.implicits._

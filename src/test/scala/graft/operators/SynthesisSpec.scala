@@ -137,7 +137,9 @@ class SynthesisSpec extends SparkSpec {
         Seq((40L, 50L, 0.0, "overlap_match", "overlap")) ++ // tier flag only
         Seq((30L, 40L, 0.1, "no_match", "jaccard")) // ignored entirely
       ).toDF("node_a", "node_b", "exact_jaccard", "decision", "tier")
-    val fused = Synthesis.clusterQuality(labels, decisions, cfg)
+    val canon = labels.groupBy($"component")
+      .agg(count(lit(1)).as("source_count"), lit(0L).as("distinct_days"))
+    val fused = Synthesis.clusterQuality(canon, labels, decisions, cfg)
       .select($"component", $"flagged", $"match_confidence", $"tier2_assisted")
       .as[(Long, Boolean, Option[Double], Option[Boolean])].collect()
       .map(r => r._1 -> ((r._2, r._3, r._4))).toMap

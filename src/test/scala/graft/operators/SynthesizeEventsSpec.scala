@@ -90,25 +90,27 @@ class SynthesizeEventsSpec extends SparkSpec {
 
   test("clusterQuality date criterion flags clusters spanning > maxDistinctDates days") {
     val cfg = GraftConfig.default
-    val labels = Seq((1L, 1L), (2L, 1L), (3L, 1L), (4L, 1L), (5L, 1L),
-      (10L, 10L), (11L, 10L)).toDF("node", "component")
+    // cluster 1 spans 5 distinct crawl days (> 3); cluster 10 spans 1
+    val labeled = Seq(
+      (1L, 1L, "2026-01-01"), (2L, 1L, "2026-01-02"), (3L, 1L, "2026-01-03"),
+      (4L, 1L, "2026-01-04"), (5L, 1L, "2026-01-05"),
+      (10L, 10L, "2026-01-01"), (11L, 10L, "2026-01-01")
+    ).toDF("node", "component", "day")
+      .select($"node", $"component", concat(lit("https://x/"), $"node".cast("string")).as("url"),
+        to_timestamp($"day").as("warc_ts"), lit("de").as("lang"), lit("text").as("extracted_text"))
     val decisions = Seq(
       (1L, 2L, 0.95, "match", "jaccard"), (10L, 11L, 0.95, "match", "jaccard")
     ).toDF("node_a", "node_b", "exact_jaccard", "decision", "tier")
-    // cluster 1 spans 5 distinct days (> 3); cluster 10 spans 1
-    val nodeDays = Seq(
-      (1L, "2026-01-01"), (2L, "2026-01-02"), (3L, "2026-01-03"),
-      (4L, "2026-01-04"), (5L, "2026-01-05"),
-      (10L, "2026-01-01"), (11L, "2026-01-01")
-    ).toDF("node", "day")
-    val got = Synthesis.clusterQuality(labels, decisions, cfg, Some(nodeDays))
-      .select("component", "flagged").as[(Long, Boolean)].collect().toMap
-    assert(got(1L), "5 distinct days must flag (coherence.py check c)")
-    assert(!got(10L))
-    // without nodeDays the criterion is inert (reference optionality)
-    val got2 = Synthesis.clusterQuality(labels, decisions, cfg, None)
-      .select("component", "flagged").as[(Long, Boolean)].collect().toMap
-    assert(!got2(1L) && !got2(10L))
+    val canon = Synthesis.canonicals(labeled, cfg)
+    def flagged(c: GraftConfig): Map[Long, Boolean] =
+      Synthesis.clusterQuality(canon, labeled, decisions, c)
+        .select("component", "flagged").as[(Long, Boolean)].collect().toMap
+    val on = flagged(cfg.copy(cluster = cfg.cluster.copy(warcDateCriterion = true)))
+    assert(on(1L), "5 distinct days must flag (coherence.py check c)")
+    assert(!on(10L))
+    // off (the default) the criterion is inert: recrawl spread is normal
+    val off = flagged(cfg.copy(cluster = cfg.cluster.copy(warcDateCriterion = false)))
+    assert(!off(1L) && !off(10L))
   }
 
   test("identical dates dedup to one entry (synthesizer.py:288-314)") {

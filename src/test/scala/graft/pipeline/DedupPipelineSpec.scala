@@ -4,6 +4,7 @@ import graft.SparkSpec
 import graft.config.GraftConfig
 import graft.datagen.PagesGen
 import graft.functions.TextFunctions
+import graft.operators.SuffixOverlap
 import org.apache.spark.sql.functions._
 
 /** End-to-end pipeline gates (SURVEY.md §5 layer 3 / BASELINE.md targets):
@@ -67,8 +68,9 @@ class DedupPipelineSpec extends SparkSpec {
   }
 
   test("long-exact-overlap pairs detected by the suffix tier") {
-    val ext = result.extracted
-    val overlaps = new DedupPipeline(spark, cfg).overlaps(ext)
+    val texts = result.extracted
+      .select(xxhash64($"url").as("node"), $"extracted_text").as[(Long, String)]
+    val overlaps = SuffixOverlap.verify(SuffixOverlap.candidates(texts, cfg), texts, cfg)
     val nodeUrl = pages.select(xxhash64($"url").as("node"), $"url")
     val found = overlaps
       .join(nodeUrl.toDF("node_a", "ua"), "node_a")
