@@ -152,28 +152,31 @@ object RunDedup {
     val pipeline = new DedupPipeline(spark, cfg, a.checkpoint,
       ckptKeyExtra =
         if (a.checkpoint.isDefined) inputFingerprint(spark, a.input, pages) else "")
-    val result = pipeline.runAll(pages)
-    val written = Observation()
-    writeOutput(result.canonicals.observe(written, count(lit(1)).as("rows")), a.output)
-    // Side tables a downstream consumer needs for audit/incremental folds.
-    if (a.stagesOut) {
-      writeOutput(result.decisions, s"${a.output.stripSuffix("/")}_decisions")
-      writeOutput(result.labels, s"${a.output.stripSuffix("/")}_labels")
-    }
+    // without a checkpoint dir the stage caches are released on every
+    // exit, a failed output write included: the session outlives this run
+    try {
+      val result = pipeline.runAll(pages)
+      val written = Observation()
+      writeOutput(result.canonicals.observe(written, count(lit(1)).as("rows")), a.output)
+      // Side tables a downstream consumer needs for audit/incremental folds.
+      if (a.stagesOut) {
+        writeOutput(result.decisions, s"${a.output.stripSuffix("/")}_decisions")
+        writeOutput(result.labels, s"${a.output.stripSuffix("/")}_labels")
+      }
 
-    val stats = Map(
-      "canonical_rows" -> written.get("rows").asInstanceOf[Long],
-      "wall_ms" -> (System.nanoTime() - t0) / 1000000L)
-    // Per-stage row counts come from THIS run's checkpoint key's meta
-    // sidecars (no Spark job; a reused dir's older configs/inputs are
-    // excluded); without a checkpoint dir they'd cost a full re-count per
-    // stage, so only canonical_rows is reported.
-    val stageRows = a.checkpoint.fold(Map.empty[String, Long]) { dir =>
-      new Checkpoints(spark, dir, pipeline.checkpointKey).stageRows()
-        .map { case (stage, rows) => s"rows_$stage" -> rows }
-    }
-    if (a.checkpoint.isEmpty) pipeline.unpersistAll()
-    stats ++ stageRows
+      val stats = Map(
+        "canonical_rows" -> written.get("rows").asInstanceOf[Long],
+        "wall_ms" -> (System.nanoTime() - t0) / 1000000L)
+      // Per-stage row counts come from THIS run's checkpoint key's meta
+      // sidecars (no Spark job; a reused dir's older configs/inputs are
+      // excluded); without a checkpoint dir they'd cost a full re-count per
+      // stage, so only canonical_rows is reported.
+      val stageRows = a.checkpoint.fold(Map.empty[String, Long]) { dir =>
+        new Checkpoints(spark, dir, pipeline.checkpointKey).stageRows()
+          .map { case (stage, rows) => s"rows_$stage" -> rows }
+      }
+      stats ++ stageRows
+    } finally if (a.checkpoint.isEmpty) pipeline.unpersistAll()
   }
 
   def main(argv: Array[String]): Unit = {

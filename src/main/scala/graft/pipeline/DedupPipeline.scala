@@ -11,10 +11,13 @@ import graft.operators._
   *   pages → extracted → signatures → candidates → decisions → labels →
   *   canonicals
   *
-  * Each stage optionally checkpoints (parquet + per-partition lineage) so a
-  * killed run resumes from the last complete stage — the north_rule's
-  * resumability requirement. Stage boundaries are exactly the shuffles:
-  * band/block self-joins, CC rounds, the final group-by.
+  * Each stage optionally checkpoints (parquet data + a meta sidecar, see
+  * [[Checkpoints]]) so a killed run resumes from the last complete stage —
+  * the north_rule's resumability requirement. Stage boundaries are exactly
+  * the shuffles: band/block self-joins, CC rounds, the final group-by.
+  * In both modes a stage hands downstream a plan leaf (a parquet scan, or
+  * a `LogicalRDD` over the persisted stage), so no plan carries its
+  * upstream lineage.
   */
 final class DedupPipeline(
     spark: SparkSession,
@@ -37,11 +40,18 @@ final class DedupPipeline(
   /** Without a checkpoint dir, every stage is persisted: each one feeds
     * multiple downstream branches (extracted ×3, signatures ×3, decisions
     * via settled/ambiguous unions) and the recompute blow-up is
-    * multiplicative. With a checkpoint dir the parquet
-    * read-back plays this role. Stage DataFrames are also memoized per
-    * pipeline instance so repeated calls share one persisted plan.
+    * multiplicative. The stage hands downstream a leaf over the persisted
+    * data ([[org.apache.spark.sql.graftbridge.Bridge.planLeaf]]): its plan
+    * is built and planned once, and no downstream plan analyzes, plans or
+    * prints it again. With a checkpoint dir the parquet read-back plays
+    * both roles. Stage DataFrames are memoized per pipeline instance so
+    * repeated calls share one leaf.
     */
   private val stageCache = scala.collection.mutable.HashMap.empty[String, DataFrame]
+
+  // The persisted frames behind the no-checkpoint leaves: the handles that
+  // own the cache entries (unpersisting a leaf releases nothing).
+  private val persisted = scala.collection.mutable.HashMap.empty[String, DataFrame]
 
   // Memoization is keyed by stage NAME: one pipeline instance serves ONE
   // corpus. Remember each stage's input plans and fail fast if the stage is
@@ -71,13 +81,22 @@ final class DedupPipeline(
     stageCache.getOrElseUpdate(name, ckpt match {
       case Some(c) => c.stage(name)(compute)
       case None =>
-        compute.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val df = persisted.getOrElseUpdate(name,
+          compute.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        org.apache.spark.sql.graftbridge.Bridge.planLeaf(df)
     })
   }
 
+  /** The plan a no-checkpoint stage computed and persisted — not the leaf
+    * it handed downstream — for plan audits.
+    */
+  private[graft] def computedStage(name: String): DataFrame =
+    stageCache.synchronized(persisted(name))
+
   /** Release persisted stage data (no-checkpoint mode). */
   def unpersistAll(): Unit = stageCache.synchronized {
-    stageCache.values.foreach(_.unpersist(false))
+    persisted.values.foreach(_.unpersist(false))
+    persisted.clear()
     stageCache.clear()
   }
 

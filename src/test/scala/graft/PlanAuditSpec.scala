@@ -77,8 +77,9 @@ class PlanAuditSpec extends SparkSpec {
   test("extraction + signature stage stays inside whole-stage codegen") {
     val pages = graft.datagen.PagesGen.pages(spark, 10L).toDF()
     val cfg = graft.config.GraftConfig.default
-    val ext = new graft.pipeline.DedupPipeline(spark, cfg).extracted(pages)
-    val p = ext.queryExecution.executedPlan.toString
+    val pipeline = new graft.pipeline.DedupPipeline(spark, cfg)
+    pipeline.extracted(pages)
+    val p = pipeline.computedStage("extracted").queryExecution.executedPlan.toString
     // "*(n)" marks a whole-stage-codegen span; the fused extraction
     // expressions must sit inside one, not fall back to interpreted eval
     val projLine = p.linesIterator.find(_.contains("normalize_text")).getOrElse("")
@@ -89,11 +90,34 @@ class PlanAuditSpec extends SparkSpec {
     val pages = graft.datagen.PagesGen.pages(spark, 10L).toDF()
     val cfg = graft.config.GraftConfig.default
     val p = new graft.pipeline.DedupPipeline(spark, cfg)
-    val plan = p.signatures(p.extracted(pages)).queryExecution.executedPlan.toString
+    p.signatures(p.extracted(pages))
+    val plan = p.computedStage("signatures").queryExecution.executedPlan.toString
     // inline(array(doc_signature(...))) must survive as ONE Generate; four
     // GetStructField projections would re-run the sketch 4x per row
     val hits = "doc_signature".r.findAllIn(plan).size
     assert(hits == 1, s"expected one doc_signature in the plan, got $hits:\n" + plan.take(2000))
+  }
+
+  test("no-checkpoint stages hand downstream plan leaves: plans and plan text stay small") {
+    // A persisted stage used to carry its whole lineage downstream: the
+    // analyzed plan of decisions/canonicals ran to ~4,900 lines, and every
+    // execution start and AQE update re-printed every upstream stage.
+    val pages = graft.datagen.PagesGen.pages(spark, 400L).toDF()
+    val out = java.nio.file.Files.createTempDirectory("graft_plan_leaf").toString
+    val p = new graft.pipeline.DedupPipeline(spark, graft.config.GraftConfig.default)
+    try {
+      val (_, chars) = org.apache.spark.graft.PlanText(spark.sparkContext) {
+        p.runAll(pages).canonicals.write.mode("overwrite").parquet(out)
+      }
+      val lines = Seq("extracted", "signatures", "candidates", "tier1_decisions",
+        "decisions", "labels", "canonicals").map { s =>
+        s -> p.computedStage(s).queryExecution.analyzed.treeString.linesIterator.size
+      }
+      // at 400 docs leaf stages measure ≤ 73 lines per stage and about
+      // 0.32 M chars per run; with the lineage carried, 2,849 and 28.2 M
+      assert(lines.forall(_._2 <= 200), s"analyzed plan lines per stage: $lines")
+      assert(chars <= 2000000L, s"plan description chars posted in one run: $chars")
+    } finally p.unpersistAll()
   }
 
   test("q05: offset/limit does not global-sort-materialize the full table") {

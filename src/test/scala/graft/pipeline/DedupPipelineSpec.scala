@@ -193,4 +193,16 @@ class DedupPipelineSpec extends SparkSpec {
     assert(e.getMessage.contains("different input"))
     p.unpersistAll()
   }
+
+  test("unpersistAll releases every stage cache") {
+    // the leaf a stage returns owns no cache entry; the persisted frame
+    // behind it does, and that is what unpersistAll must release
+    spark.catalog.clearCache()
+    val p = new DedupPipeline(spark, cfg)
+    val r = p.runAll(PagesGen.pages(spark, 200L).toDF())
+    assert(r.canonicals.count() > 0)
+    assert(!spark.sharedState.cacheManager.isEmpty)
+    p.unpersistAll()
+    assert(spark.sharedState.cacheManager.isEmpty, "a stage cache survived unpersistAll")
+  }
 }

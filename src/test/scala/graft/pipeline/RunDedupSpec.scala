@@ -78,4 +78,16 @@ class RunDedupSpec extends SparkSpec {
     assert(again - "wall_ms" == first - "wall_ms")
     assert(spark.read.parquet(s"$dir/out-resumed").count() == first("canonical_rows"))
   }
+
+  test("a failed output write still releases every stage cache") {
+    val dir = Files.createTempDirectory("graft_run_fail").toString
+    PagesGen.pages(spark, 200L).toDF.write.parquet(s"$dir/pages")
+    spark.catalog.clearCache()
+    // no catalog is registered under this name: the write throws after the
+    // pipeline has persisted its stages
+    val args = RunDedup.parse(Array(
+      "--input", s"$dir/pages", "--output", "table:missing_catalog.db.canonicals"))
+    intercept[Exception](RunDedup.run(spark, args))
+    assert(spark.sharedState.cacheManager.isEmpty, "stage caches outlived a failed run")
+  }
 }

@@ -1,33 +1,64 @@
 package org.apache.spark.graft
 
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 import org.apache.spark.SparkContext
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
 
-/** Counts the Spark jobs a block launches from the calling thread. It lives
-  * in an `org.apache.spark` package to drain the listener bus, so the count
-  * is complete when read; jobs are matched by a job group set for the
-  * block, so other threads' work is not counted.
+/** Runs a block under a fresh job group with a listener built for that
+  * group. It lives in an `org.apache.spark` package to drain the listener
+  * bus, so the listener has seen every event of the block when it returns;
+  * matching by job group keeps other threads' work out.
   */
+private object GroupListener {
+  def apply[T](sc: SparkContext, listener: String => SparkListener)(body: => T): T = {
+    val group = s"graft-test-${java.util.UUID.randomUUID}"
+    val l = listener(group)
+    sc.addSparkListener(l)
+    sc.setJobGroup(group, "graft test")
+    try {
+      val result = body
+      sc.listenerBus.waitUntilEmpty()
+      result
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(l)
+    }
+  }
+}
+
+/** Counts the Spark jobs a block launches from the calling thread. */
 object JobCount {
   def apply[T](sc: SparkContext)(body: => T): (T, Int) = {
-    val group = s"job-count-${java.util.UUID.randomUUID}"
     val jobs = new AtomicInteger
-    val listener = new SparkListener {
+    val result = GroupListener(sc, group => new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (Option(e.properties)
             .exists(_.getProperty(SparkContext.SPARK_JOB_GROUP_ID) == group))
           jobs.incrementAndGet(): Unit
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "job count")
-    try {
-      val result = body
-      sc.listenerBus.waitUntilEmpty()
-      (result, jobs.get)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
+    })(body)
+    (result, jobs.get)
+  }
+}
+
+/** Counts the characters of physical-plan description that the SQL
+  * executions a block starts from the calling thread post: one
+  * description per execution start and one per AQE plan update.
+  */
+object PlanText {
+  def apply[T](sc: SparkContext)(body: => T): (T, Long) = {
+    val chars = new AtomicLong
+    val executions = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
+    val result = GroupListener(sc, group => new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart if s.jobGroupId.contains(group) =>
+          executions.add(s.executionId)
+          chars.addAndGet(s.physicalPlanDescription.length): Unit
+        case u: SparkListenerSQLAdaptiveExecutionUpdate if executions.contains(u.executionId) =>
+          chars.addAndGet(u.physicalPlanDescription.length): Unit
+        case _ => ()
+      }
+    })(body)
+    (result, chars.get)
   }
 }
