@@ -90,7 +90,7 @@ object Hashing {
   *
   *   tokens   = split(text, " ")
   *   n_tokens = if (text == "") 0 else tokens.length
-  *   shingles = ShingleHashes(tokens, n, lshSeed)
+  *   shingles = array_sort(ShingleHashes(tokens, n, lshSeed))
   *   minhash  = MinHashSig(shingles, k, lshSeed)
   *   simhash  = SimHash64(tokens, simSeed)
   *
@@ -135,8 +135,8 @@ case class DocSignature(child: Expression, n: Int, k: Int, lshSeed: Long, simSee
     // boxed every distinct shingle hash twice — at 10^6 docs that is
     // ~10^8 java.lang.Long allocations per corpus pass, pure GC churn in
     // the sketch hot loop. 0 is kept out of the table (sentinel) via a
-    // dedicated flag; probe order does not affect output (first-seen
-    // APPEND order into `shingles` is what downstream sees, unchanged).
+    // dedicated flag; probe order does not affect output (the buffer is
+    // sorted ascending before it is emitted, see below).
     var cap = 1 << 9
     var tbl = new Array[Long](cap)
     var setSize = 0
@@ -226,10 +226,14 @@ case class DocSignature(child: Expression, n: Int, k: Int, lshSeed: Long, simSee
     val minhash: Any =
       if (nSh == 0) null
       else org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(mins)
+    // shingles leave ascending (signed): exact Jaccard counts |A∩B| with a
+    // merge walk over two sorted arrays (SortedIntersectSize), so each set
+    // is sorted once here instead of once per candidate pair downstream
+    val sorted = java.util.Arrays.copyOf(shingles, nSh)
+    java.util.Arrays.sort(sorted)
     new GenericInternalRow(Array[Any](
       nTokens,
-      org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(
-        java.util.Arrays.copyOf(shingles, nSh)),
+      org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(sorted),
       minhash, sim))
   }
 

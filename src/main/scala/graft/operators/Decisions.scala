@@ -41,6 +41,7 @@ object Decisions {
     * @param decisions output of [[decide]]
     * @param extractedByNode (node, extracted_text) projection
     * @param overlaps verified overlap pairs (node_a, node_b, overlap_len)
+    *   among the ambiguous pairs only — this side is broadcast
     */
   def resolveAmbiguous(
       decisions: DataFrame,
@@ -82,9 +83,14 @@ object Decisions {
       .join(t.toDF("node_a", "h_a"), Seq("node_a"), "left")
       .join(t.toDF("node_b", "h_b"), Seq("node_b"), "left")
       // dropDuplicates: SuffixOverlap.verify multiplies rows per duplicate
-      // text version too — the flag is pair-level, so one row per pair
-      .join(overlaps.select(col("node_a"), col("node_b"), lit(true).as("has_overlap"))
-          .dropDuplicates("node_a", "node_b"),
+      // text version too — the flag is pair-level, so one row per pair.
+      // broadcast: the overlaps are a subset of the ambiguous band
+      // (broadcastable by construction), but the planner's size estimate
+      // of the verify branch is a join product far over the threshold, so
+      // unhinted this join starts as a sort-merge join and AQE may shuffle
+      // the stream side before it switches to a broadcast
+      .join(broadcast(overlaps.select(col("node_a"), col("node_b"), lit(true).as("has_overlap"))
+          .dropDuplicates("node_a", "node_b")),
         Seq("node_a", "node_b"), "left")
       .withColumn("decision",
         when(col("h_a") === col("h_b"), "match")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.config.GraftConfig
 import graft.functions.Hashing
+import graft.functions.SortedIntersectSize.sortedIntersectSize
 
 /** MinHash + LSH banding candidate generation and exact-Jaccard verification
   * (SURVEY.md §2.3 B7/B8, §2.4). The reference's analog is blocking-key
@@ -263,12 +264,14 @@ object MinHashLsh {
       lit(0), (acc, x) => acc + x
     ).cast("double") / k
 
-  /** Exact shingle-set Jaccard. Inputs are distinct-sets by construction
-    * ([[graft.functions.ShingleHashes]]), so |A∪B| = |A|+|B|-|A∩B| — one
-    * hash-set probe instead of also materializing the union array.
+  /** Exact shingle-set Jaccard. Inputs must be ascending, distinct shingle
+    * arrays — what [[signatures]] emits ([[graft.functions.DocSignature]]
+    * sorts each document's set once) — so |A∩B| is one merge walk
+    * ([[graft.functions.SortedIntersectSize]], no hash set per pair) and
+    * |A∪B| = |A|+|B|-|A∩B| needs no union array.
     */
   def exactJaccard(shA: Column, shB: Column): Column = {
-    val inter = size(array_intersect(shA, shB)).cast("double")
+    val inter = sortedIntersectSize(shA, shB).cast("double")
     val uni = (size(shA) + size(shB)).cast("double") - inter
     when(uni === 0, 0.0).otherwise(inter / uni)
   }

@@ -120,6 +120,51 @@ class PlanAuditSpec extends SparkSpec {
     } finally p.unpersistAll()
   }
 
+  /** Runs the pipeline through `decisions` on 400 PagesGen docs (tier 2
+    * has ambiguous pairs to resolve there), then releases its caches.
+    */
+  private def withDecisionStages(body: graft.pipeline.DedupPipeline => Unit): Unit = {
+    val pages = graft.datagen.PagesGen.pages(spark, 400L).toDF()
+    val p = new graft.pipeline.DedupPipeline(spark, graft.config.GraftConfig.default)
+    try {
+      val ext = p.extracted(pages)
+      val sigs = p.signatures(ext)
+      p.decisions(p.candidates(sigs), sigs, ext)
+      body(p)
+    } finally p.unpersistAll()
+  }
+
+  test("tier-1 verify evaluates the merge-count kernel inside whole-stage codegen") {
+    withDecisionStages { p =>
+      val plan = p.computedStage("tier1_decisions").queryExecution.executedPlan.toString
+      assert(!plan.contains("array_intersect"), "exact Jaccard still builds a hash set:\n" + plan)
+      // the cached plan prints its AQE final plan first, then the initial one
+      val finalPlan = plan.split("== Initial Plan ==")(0)
+      val kernel = finalPlan.linesIterator.filter(_.contains("sorted_intersect_size")).toSeq
+      assert(kernel.nonEmpty && kernel.forall(_.contains("*(")),
+        "sorted_intersect_size not inside a whole-stage codegen span:\n" + finalPlan)
+    }
+  }
+
+  test("decisions stage: the initial (pre-AQE) plan holds no sort-merge join") {
+    // the tier-2 has_overlap join used to start as a sort-merge join
+    // (its verify branch is estimated as a join product) and AQE could
+    // shuffle the stream side before switching it to a broadcast
+    withDecisionStages { p =>
+      val cached = p.computedStage("decisions").queryExecution.withCachedData.collectFirst {
+        case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r.cacheBuilder.cachedPlan
+      }
+      assert(cached.isDefined, "the decisions stage is not cached")
+      val initial = cached.get match {
+        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.initialPlan
+        case plan => plan
+      }
+      val text = initial.toString
+      assert(text.contains("BroadcastHashJoin"), text)
+      assert(!text.contains("SortMergeJoin"), "initial decisions plan:\n" + text)
+    }
+  }
+
   test("q05: offset/limit does not global-sort-materialize the full table") {
     val p = planOf("q05_sort_paginate")
     // must be the top-k operator — a full Sort + GlobalLimit is exactly the

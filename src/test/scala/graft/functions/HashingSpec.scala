@@ -141,7 +141,9 @@ class HashingSpec extends SparkSpec {
       .select(
         Hashing.docSignature($"t", 3, 32, 42L, 7L).as("f"),
         when($"t" === "", 0).otherwise(size(tokens)).as("n_tokens"),
-        Hashing.shingleHashes(tokens, 3, 42L).as("shingles"),
+        // the fused sketch emits its distinct set ascending (exact
+        // Jaccard's merge walk needs that order), the same elements
+        array_sort(Hashing.shingleHashes(tokens, 3, 42L)).as("shingles"),
         Hashing.minHash(Hashing.shingleHashes(tokens, 3, 42L), 32, 42L).as("minhash"),
         Hashing.simHash(tokens, 7L).as("simhash"))
       .select(
@@ -152,6 +154,23 @@ class HashingSpec extends SparkSpec {
       .as[(Boolean, Boolean, Boolean, Boolean)].collect()
     rows.zip(texts).foreach { case ((a, b, c, d), t) =>
       assert(a && b && c && d, s"mismatch on '${t.take(40)}': tok=$a sh=$b mh=$c sim=$d")
+    }
+  }
+
+  test("DocSignature: shingles are strictly ascending (signed)") {
+    val rnd = new scala.util.Random(13)
+    val vocab = graft.datagen.PagesGen.vocab
+    val texts = Seq("a b c a b c a b c", "one two three four") ++ (1 to 40).map { _ =>
+      (0 until (3 + rnd.nextInt(400))).map(_ => vocab(rnd.nextInt(vocab.length))).mkString(" ")
+    }
+    val shingles = texts.toDF("t")
+      .select(Hashing.docSignature($"t", 3, 16, 42L, 7L).getField("shingles"))
+      .as[Array[Long]].collect()
+    assert(shingles.exists(_.exists(_ < 0)) && shingles.exists(_.exists(_ > 0)),
+      "the fixture must hold hashes of both signs")
+    shingles.zip(texts).foreach { case (sh, t) =>
+      assert(sh.toSeq.sliding(2).forall(w => w.size < 2 || w(0) < w(1)),
+        s"not strictly ascending on '${t.take(40)}': ${sh.take(8).toSeq}")
     }
   }
 

@@ -18,7 +18,16 @@ class DedupPipelineSpec extends SparkSpec {
   private lazy val cfg = GraftConfig.default
   private lazy val pages = PagesGen.pages(spark, N).toDF.cache()
   private lazy val truth = PagesGen.truthPairs(spark, N).toDF.cache()
-  private lazy val result = new DedupPipeline(spark, cfg).runAll(pages)
+  private lazy val pipeline = new DedupPipeline(spark, cfg)
+  private lazy val result = pipeline.runAll(pages)
+
+  // later suites share this session: leave its CacheManager as found
+  override def afterAll(): Unit =
+    try {
+      pipeline.unpersistAll()
+      pages.unpersist()
+      truth.unpersist()
+    } finally super.afterAll()
 
   test("extraction invariant: extract(html) == normalize(text) for every url") {
     val mismatches = pages
