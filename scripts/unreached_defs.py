@@ -1,0 +1,77 @@
+#!/usr/bin/env python3
+"""List public `def`s in src/main that no main or perfbench source calls.
+
+Comments and string text are stripped first, so a scaladoc link or a log
+message does not count as a caller (`$name` and `${...}` splices are kept).
+A def is reached when its name appears outside imports in its own file
+other than on its `def` line, or in another file that reaches its owner:
+`Owner.name`, an import of `Owner`'s members, or any use at all when the
+owner is a class.
+Overrides are called by Spark, not by name, and are skipped. Deleting an
+unreached def can leave its helpers unreached, so rerun after deleting.
+Exits 1 on any unreached name that is not in ALLOWED.
+
+    python3 scripts/unreached_defs.py
+"""
+import pathlib
+import re
+import sys
+
+ROOT = pathlib.Path(__file__).resolve().parent.parent
+SOURCES = [ROOT / "src" / "main", ROOT / "perfbench" / "src"]
+ALLOWED = {
+    "main", "apply",
+    "bucketStats",  # README's "never silent" hot-bucket claim points at it
+    "isComplete",   # the specs' probe of the checkpoint resume contract
+    "hostOf",       # perfbench calls it
+}
+FROZEN = {"Bench.scala"}  # the frozen measurement main is not scanned
+DEF = re.compile(r"^[ \t]*((?:[a-z]+[ \t]+)*)def[ \t]+([A-Za-z_]\w*)", re.M)
+OWNER = re.compile(r"^[ \t]*(?:[a-z]+[ \t]+)*(object|class|trait)[ \t]+(\w+)", re.M)
+STRIP = re.compile(r'"""(?:.|\n)*?"""|"(?:\\.|[^"\\\n])*"|'
+                   r"'(?:\\.|[^'\\\n])'|//[^\n]*|/\*(?:.|\n)*?\*/")
+IMPORT = re.compile(r"^[ \t]*import [^\n]*", re.M)
+
+
+def strip(m):
+    s = m.group(0)
+    if s[0] in "\"'":
+        return '"%s"' % " ".join(re.findall(r"\$\{[^}]*\}|\$\w+", s))
+    return "\n" * s.count("\n")
+
+
+def reached(name, owner, path, files):
+    word = r"\b%s\b" % name
+    if len(re.findall(word, IMPORT.sub("", files[path]))) > 1:
+        return True
+    kind, obj = owner
+    via = r"\b%s\.(%s|_|\{[^}]*%s)" % (obj, name, word)
+    return any(re.search(word, IMPORT.sub("", text)) and
+               (kind != "object" or re.search(via, text))
+               for p, text in files.items() if p != path)
+
+
+def main():
+    files = {p: STRIP.sub(strip, p.read_text(encoding="utf-8"))
+             for d in SOURCES for p in sorted(d.rglob("*.scala"))}
+    unreached = []
+    for path, text in files.items():
+        if path.name in FROZEN or "src/main" not in path.as_posix():
+            continue
+        owners = [(m.start(), m.group(1), m.group(2)) for m in OWNER.finditer(text)]
+        for m in DEF.finditer(text):
+            if {"private", "protected", "override"} & set(m.group(1).split()):
+                continue
+            owner = [o[1:] for o in owners if o[0] < m.start()][-1]
+            if not reached(m.group(2), owner, path, files):
+                line = text.count("\n", 0, m.start(2)) + 1
+                unreached.append((path.relative_to(ROOT), line, m.group(2)))
+    bad = [u for u in unreached if u[2] not in ALLOWED]
+    for path, line, name in unreached:
+        print("%s:%d: %s%s" % (path, line, name, "" if name not in ALLOWED else " (allowed)"))
+    print("%d unreached, %d not allowed" % (len(unreached), len(bad)))
+    return 1 if bad else 0
+
+
+if __name__ == "__main__":
+    sys.exit(main())

@@ -11,8 +11,9 @@ import graft.pipeline.DedupPipeline
   *    round (default 2); `ckpt` checkpoints the stages as RunDedup does,
   *    under `<graft.localDir>/profile_ckpt_<round>`, instead of persisting.
   *  - `queries <all|bench|prefix,...> [reps] [plansDir]`: min of `reps`
-  *    (default 3) per `SparkEntry` query over `$SPARK_GRAFT_SF_DIR`; `bench`
-  *    is the set `Bench` times; `plansDir` gets each formatted plan.
+  *    (default 3) per `SparkEntry` query over `$SPARK_GRAFT_SF_DIR`, each
+  *    after one `warm` run that the min leaves out; `bench` is the set
+  *    `Bench` times; `plansDir` gets each formatted plan.
   *  - `scale <nDocs> <reps> <level...>`: the pipeline, min of reps, per level.
   * A level is `N` (`local[N]`) or `WxC` (`local-cluster`, W executor JVMs ×
   * C cores; needs SPARK_HOME and SPARK_SCALA_VERSION; `-Dgraft.execMemGb`,
@@ -171,9 +172,6 @@ object Profile {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       throw new IllegalArgumentException("queries reads SPARK_GRAFT_SF_DIR, which is unset"))
     val spark = session(cpus.toString)
-    // Bench's warm-up: JIT, codegen and scan init must not land on the first query
-    spark.range(2000000L).agg(org.apache.spark.sql.functions.sum("id")).collect(): Unit
-    spark.read.parquet(s"$sfDir/documents.parquet").write.mode("overwrite").format("noop").save()
     r.plansDir.foreach(d => new java.io.File(d).mkdirs())
     // a failed query is reported, never timed as its failure latency
     val best = r.names.flatMap { name =>
@@ -181,6 +179,9 @@ object Profile {
       try {
         r.plansDir.foreach(d => java.nio.file.Files.writeString(java.nio.file.Paths.get(
           s"$d/$name.txt"), fn(spark, sfDir).queryExecution.explainString(FormattedMode)))
+        // JIT, codegen and scan init of this query's operators land here,
+        // not on rep1
+        measure(spark, f"[query] $name%-28s warm")(fn(spark, sfDir))
         val min = (1 to r.reps)
           .map(i => measure(spark, f"[query] $name%-28s rep$i")(fn(spark, sfDir))._2).minBy(_.wall)
         println(f"[query] $name%-33s best $min")

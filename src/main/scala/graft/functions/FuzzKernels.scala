@@ -121,23 +121,8 @@ object FuzzKernels {
   }
 
   // Column API
-  def indel_ratio(a: Column, b: Column): Column = toCol(IndelRatio(toExpr(a), toExpr(b)))
   def token_sort_ratio(a: Column, b: Column): Column = toCol(TokenSortRatio(toExpr(a), toExpr(b)))
   def token_set_ratio(a: Column, b: Column): Column = toCol(TokenSetRatio(toExpr(a), toExpr(b)))
-}
-
-case class IndelRatio(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback with ExpectsInputTypes {
-  override def dataType: DataType = DoubleType
-  // analysis-time type check (wrong-typed input must fail at analysis,
-  // not as an executor-side ClassCastException mid-job)
-  override def inputTypes: Seq[DataType] = Seq(StringType, StringType)
-  override def nullIntolerant: Boolean = true
-  override def nullSafeEval(a: Any, b: Any): Any =
-    FuzzKernels.indelSimilarity(a.asInstanceOf[UTF8String].toString, b.asInstanceOf[UTF8String].toString)
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): IndelRatio =
-    copy(left = l, right = r)
-  override def prettyName: String = "indel_ratio"
 }
 
 case class TokenSortRatio(left: Expression, right: Expression)

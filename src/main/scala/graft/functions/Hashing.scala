@@ -49,14 +49,6 @@ object Hashing {
   def shingleHashes(tokens: Column, n: Int, seed: Long = 42L): Column =
     toCol(ShingleHashes(toExpr(tokens), n, seed))
 
-  /** array<long> shingle hashes → array<long> MinHash signature of length k. */
-  def minHash(shingles: Column, k: Int, seed: Long = 42L): Column =
-    toCol(MinHashSig(toExpr(shingles), k, seed))
-
-  /** array<string> tokens → 64-bit SimHash. */
-  def simHash(tokens: Column, seed: Long = 42L): Column =
-    toCol(SimHash64(toExpr(tokens), seed))
-
   /** array<long> signature → array<long> LSH band keys (bands × rowsPerBand). */
   def bandKeys(sig: Column, bands: Int, rowsPerBand: Int): Column =
     toCol(BandKeys(toExpr(sig), bands, rowsPerBand))
@@ -75,9 +67,10 @@ object Hashing {
     toCol(CdcFingerprints(toExpr(text), windowChars, samplingMod))
 
   /** text → struct(n_tokens, shingles, minhash, simhash) in ONE byte-walk —
-    * the fused form of `split` + [[ShingleHashes]] + [[MinHashSig]] +
-    * [[SimHash64]] used by the pipeline's signature stage (the individual
-    * expressions remain the semantic spec; equivalence is property-tested).
+    * the fused form of `split` + [[ShingleHashes]] + MinHash + SimHash used
+    * by the pipeline's signature stage (the specs keep the per-step
+    * `MinHashSig` and `SimHash64` expressions as its semantic spec;
+    * equivalence is property-tested).
     */
   def docSignature(text: Column, n: Int, k: Int, lshSeed: Long, simSeed: Long): Column =
     toCol(DocSignature(toExpr(text), n, k, lshSeed, simSeed))
@@ -333,89 +326,6 @@ case class ShingleHashes(child: Expression, n: Int, seed: Long)
   override protected def withNewChildInternal(newChild: Expression): ShingleHashes =
     copy(child = newChild)
   override def prettyName: String = "shingle_hashes"
-}
-
-/** MinHash signature over a shingle-hash array: k independent permutations
-  * h_i(x) = a_i*x + b_i (mod 2^64, unsigned min). Empty input → NULL, so
-  * empty documents never produce candidate pairs.
-  */
-case class MinHashSig(child: Expression, k: Int, seed: Long)
-    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
-  // analysis-time type check (wrong-typed input must fail at analysis,
-  // not as an executor-side ClassCastException mid-job)
-  override def inputTypes: Seq[DataType] = Seq(ArrayType(LongType))
-  require(k >= 1)
-
-  @transient private lazy val (as, bs) = Hashing.permutations(k, seed)
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  // returns NULL for empty shingle sets even when the input is non-null
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val m = arr.numElements()
-    if (m == 0) return null
-    val mins = Array.fill(k)(-1L) // unsigned max
-    var i = 0
-    while (i < m) {
-      val x = arr.getLong(i)
-      var j = 0
-      while (j < k) {
-        val h = as(j) * x + bs(j)
-        if (java.lang.Long.compareUnsigned(h, mins(j)) < 0) mins(j) = h
-        j += 1
-      }
-      i += 1
-    }
-    new GenericArrayData(mins)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): MinHashSig =
-    copy(child = newChild)
-  override def prettyName: String = "min_hash"
-}
-
-/** 64-bit SimHash over tokens: per-bit votes weighted by token frequency
-  * (each occurrence votes). Empty input → NULL.
-  */
-case class SimHash64(child: Expression, seed: Long)
-    extends UnaryExpression with CodegenFallback with ExpectsInputTypes {
-  // analysis-time type check (wrong-typed input must fail at analysis,
-  // not as an executor-side ClassCastException mid-job)
-  override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
-
-  override def dataType: DataType = LongType
-  // returns NULL for empty token arrays even when the input is non-null
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val m = arr.numElements()
-    if (m == 0) return null
-    val votes = new Array[Int](64)
-    var i = 0
-    while (i < m) {
-      val h = Hashing.hashUtf8(arr.getUTF8String(i), seed)
-      var b = 0
-      while (b < 64) {
-        if (((h >>> b) & 1L) == 1L) votes(b) += 1 else votes(b) -= 1
-        b += 1
-      }
-      i += 1
-    }
-    var out = 0L
-    var b = 0
-    while (b < 64) {
-      if (votes(b) > 0) out |= (1L << b)
-      b += 1
-    }
-    java.lang.Long.valueOf(out)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): SimHash64 =
-    copy(child = newChild)
-  override def prettyName: String = "sim_hash64"
 }
 
 /** LSH band keys: hash of each r-row slice of the signature, salted with the

@@ -14,7 +14,6 @@ import org.apache.spark.sql.functions._
   * (BASELINE.json input_hint: byte-identical extracted text per url).
   */
 object TextFunctions {
-  import NfcNormalize.nfc
 
   /** Whitespace class matching Python's `\s` on `str` (used by
     * `re.sub(r"\s+", " ", ...)` at normalizer.py:57): ASCII whitespace,
@@ -24,37 +23,11 @@ object TextFunctions {
   val WhitespaceClass: String =
     "[\\s\\u001c-\\u001f\\u0085\\u00a0\\u1680\\u2000-\\u200a\\u2028\\u2029\\u202f\\u205f\\u3000]"
 
-  /** Punctuation stripped by the reference (normalizer.py:63) — note hyphen
-    * is deliberately NOT in the set (German compound words).
-    */
-  val PunctClass: String = "[\"'!?,.:;()\\[\\]{}]"
-
-  /** German umlaut/eszett digraph expansion (normalizer.py:45-53).
-    * Applied after lowercasing + NFC, so only composed lowercase forms can
-    * remain; the uppercase replacements mirror the reference's edge-case
-    * handling for characters that didn't lowercase.
-    */
-  def expandUmlauts(c: Column): Column = {
-    val pairs = Seq(
-      "ä" -> "ae", "ö" -> "oe", "ü" -> "ue", "ß" -> "ss",
-      "Ä" -> "ae", "Ö" -> "oe", "Ü" -> "ue"
-    )
-    pairs.foldLeft(c) { case (col, (from, to)) => replace(col, lit(from), lit(to)) }
-  }
-
   /** Collapse runs of whitespace to single spaces and trim (normalizer.py:57).
-    * Fused single byte-walk ([[CollapseWs]]); the regex chain stays as
-    * [[collapseWhitespaceDeclarative]], the semantic spec side of the
-    * differential test.
+    * Fused single byte-walk ([[CollapseWs]]); the specs hold the regex chain
+    * it is differential-tested against.
     */
   def collapseWhitespace(c: Column): Column = toCol(CollapseWs(toExpr(c)))
-
-  /** Built-ins-only reference chain for [[collapseWhitespace]] — also what
-    * [[normalizeTextDeclarative]] uses, so the normalize differential test
-    * keeps an implementation-independent spec side.
-    */
-  def collapseWhitespaceDeclarative(c: Column): Column =
-    trim(regexp_replace(c, WhitespaceClass + "+", " "))
 
   /** Unicode-whitespace tokens with empty tokens filtered; null/blank text
     * → empty array. The ONE tokenizer shared by token counting, n-gram
@@ -64,49 +37,18 @@ object TextFunctions {
     */
   def whitespaceTokens(c: Column): Column = toCol(WsTokens(toExpr(c)))
 
-  /** Built-ins-only reference chain for [[whitespaceTokens]] (one
-    * java.util.regex pass per evaluation — and consumers that read the
-    * token array several times, like the n-gram slices, re-evaluated it up
-    * to 4× per row; the fused walk is the hot-path form).
-    */
-  def whitespaceTokensDeclarative(c: Column): Column =
-    filter(split(coalesce(c, lit("")), WhitespaceClass + "+"), t => length(t) > 0)
-
-  /** Longest-first literal synonym substitution (synonyms.py:48-67).
-    * The map is ordered longest-key-first at load (synonyms.py:45);
-    * we sort here so callers can pass any Map.
-    */
-  def applySynonyms(c: Column, synonyms: Map[String, String]): Column =
-    synonyms.toSeq.sortBy { case (k, _) => (-k.length, k) }.foldLeft(c) {
-      case (col, (variant, canonical)) => replace(col, lit(variant), lit(canonical))
-    }
-
   /** Full `normalize_text` pipeline (normalizer.py:16-67):
     * lowercase → NFC → umlaut expansion → whitespace collapse → synonyms →
     * punctuation strip (keep hyphen) → trim.
     *
     * Implemented by the fused [[NormalizeTextExpr]] (one walk instead of
-    * ~12 string passes — this is the hot per-row stage); the equivalent
-    * declarative chain is kept as [[normalizeTextDeclarative]] and the two
-    * are differential-tested on the generated corpus.
+    * ~12 string passes — this is the hot per-row stage); the specs
+    * differential-test it against the equivalent built-ins-only chain on
+    * the generated corpus.
     */
   def normalizeText(c: Column, synonyms: Map[String, String] = Map.empty): Column = {
     val ordered = synonyms.toSeq.sortBy { case (k, _) => (-k.length, k) }
     toCol(NormalizeTextExpr(toExpr(c), ordered))
-  }
-
-  /** Reference-shaped declarative chain (built-ins only) — the semantic
-    * specification for [[normalizeText]].
-    */
-  def normalizeTextDeclarative(c: Column, synonyms: Map[String, String] = Map.empty): Column = {
-    val lowered = lower(c)
-    val nfcd = nfc(lowered)
-    val umlauted = expandUmlauts(nfcd)
-    val ws = collapseWhitespaceDeclarative(umlauted)
-    val syn = applySynonyms(ws, synonyms)
-    val noPunct = regexp_replace(syn, PunctClass, "")
-    // empty/NULL input → empty string (normalizer.py:35-36)
-    coalesce(trim(noPunct), lit(""))
   }
 
   /** Strip the FIRST matching configured prefix, case-insensitively, using
@@ -155,21 +97,10 @@ object TextFunctions {
 
   /** html BINARY → body text: decode UTF-8, take <article>…</article>,
     * strip any residual tags, unescape entities. Fused single-walk
-    * implementation ([[HtmlArticleText]]); declarative spec kept below for
-    * the differential test.
+    * implementation ([[HtmlArticleText]]); the specs differential-test it
+    * against a built-ins-only chain.
     */
   def htmlToText(htmlBin: Column): Column = toCol(HtmlArticleText(toExpr(htmlBin)))
-
-  /** Built-ins-only reference chain for [[htmlToText]]. */
-  def htmlToTextDeclarative(htmlBin: Column): Column = {
-    val s = htmlBin.cast("string")
-    val body = regexp_extract(s, "(?s)<article>(.*)</article>", 1)
-    val untagged = regexp_replace(body, "<[^>]*>", " ")
-    val unescaped =
-      replace(replace(replace(untagged, lit("&lt;"), lit("<")), lit("&gt;"), lit(">")),
-        lit("&amp;"), lit("&"))
-    unescaped
-  }
 
   /** The extraction invariant column: byte-identical per url across runs. */
   def extractText(htmlBin: Column, synonyms: Map[String, String] = Map.empty): Column =

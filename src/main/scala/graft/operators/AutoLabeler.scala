@@ -4,10 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.FuzzKernels
 
-/** Ground-truth generation: candidate pairs + the reference's conservative
-  * auto-labeling cascade (SURVEY.md §2.9 Q18; reference
-  * `/root/reference/src/event_dedup/ground_truth/auto_labeler.py:83-182` and
-  * `ground_truth/candidate_generator.py:36-127`).
+/** Ground-truth auto-labeling: the reference's conservative cascade
+  * (SURVEY.md §2.9 Q18; reference
+  * `event_dedup/ground_truth/auto_labeler.py:83-182`).
   *
   * Rules (ordered, intentionally stricter than the matcher):
   *   same/high:    title_sim ≥ 0.90 ∧ same_city
@@ -21,37 +20,6 @@ import graft.functions.FuzzKernels
   * desc_sim is 0.0 when either side is missing (auto_labeler.py:50-57).
   */
 object AutoLabeler {
-
-  /** Cross-source candidate pairs from a blocking-key frame with seeded
-    * hard-negative sampling (candidate_generator.py:36-127): explode keys →
-    * self-join (canonical order, cross-source only, deduped) → title sim →
-    * keep pairs ≥ minTitleSim plus a seeded `hardNegativeRatio` sample of
-    * the below-threshold pairs (rand(seed) — the distributed re-expression
-    * of `random.Random(seed).sample`, same ratio, deterministic per seed).
-    *
-    * Input needs (id, source, title_norm, city_norm, blocking_keys).
-    */
-  def candidates(events: DataFrame, minTitleSim: Double = 0.30,
-      hardNegativeRatio: Double = 0.20, seed: Long = 42L): DataFrame = {
-    val keyed = events.select(col("id"), col("source"), col("title_norm"),
-      col("city_norm"), explode(col("blocking_keys")).as("key"))
-    val a = keyed.toDF("id_a", "source_a", "title_a", "city_a", "key")
-    val b = keyed.toDF("id_b", "source_b", "title_b", "city_b", "key")
-    val pairs = a.join(b, Seq("key"))
-      .where(col("id_a") < col("id_b") && col("source_a") =!= col("source_b"))
-      .drop("key")
-      .dropDuplicates("id_a", "id_b")
-      .withColumn("title_sim",
-        FuzzKernels.token_sort_ratio(coalesce(col("title_a"), lit("")),
-          coalesce(col("title_b"), lit(""))))
-    // ONE pass: the union-of-two-filters form evaluated the blocking-key
-    // self-join and the O(len²) fuzzy kernel twice over the same uncached
-    // frame. rand is drawn before the predicate so the hard-negative
-    // sample stays seeded-deterministic for a given frame.
-    pairs.withColumn("__r", rand(seed))
-      .where(col("title_sim") >= minTitleSim || col("__r") < hardNegativeRatio)
-      .drop("__r")
-  }
 
   private def nonEmpty(c: Column): Column = c.isNotNull && length(c) > 0
 

@@ -111,10 +111,6 @@ object Decisions {
     decisions.where(col("decision") === "match")
       .select(col("node_a").as("src"), col("node_b").as("dst"), col("exact_jaccard").as("weight"))
 
-  /** Per-decision counts (pipeline.py:155-160 tracks the same). */
-  def decisionStats(decisions: DataFrame): DataFrame =
-    decisions.groupBy("decision", "tier").count()
-
   /** A2 decision cache (`ai_matching/cache.py:60-141`): reuse previously
     * resolved decisions by content hash; only cache misses flow into
     * `resolve`. Returns (all decisions, new cache entries to append).

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.Hashing
 
-/** Benchmark decontamination: flag/remove training documents that share long
+/** Benchmark decontamination: flag training documents that share long
   * word n-grams with an evaluation ("benchmark") corpus — standard hygiene
   * for web-scale training pipelines (the GPT-3/PaLM-style 13-gram overlap
   * check, scaled down to configurable n).
@@ -55,19 +55,5 @@ object Decontamination {
     val grams = docs.select(col(idCol), explode(ngramHashes(col(textCol), n, seed)).as("gram_hash"))
     val bench = if (broadcastBench) broadcast(benchGrams) else benchGrams
     grams.join(bench, "gram_hash").groupBy(idCol).agg(count(lit(1)).as("n_hits"))
-  }
-
-  /** Documents with every contaminated row removed (anti-join against the
-    * benchmark gram set) — the write-side of the decontamination pass.
-    */
-  def clean(docs: DataFrame, idCol: String, textCol: String, benchGrams: DataFrame,
-      n: Int, seed: Long = 42L, broadcastBench: Boolean = true): DataFrame = {
-    val grams = docs.select(col(idCol).as("__decon_id"),
-      explode(ngramHashes(col(textCol), n, seed)).as("gram_hash"))
-    val bench = if (broadcastBench) broadcast(benchGrams) else benchGrams
-    val dirty = grams.join(bench, "gram_hash").select(col("__decon_id")).distinct()
-    // null-safe: a contaminated row with a null id must still be removed
-    // (null === null is null, so a plain equi-anti-join would KEEP it)
-    docs.join(dirty, docs(idCol) <=> dirty("__decon_id"), "left_anti")
   }
 }

@@ -1,19 +1,16 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Ground-truth labeling session surface — the data semantics of the
-  * reference's interactive labeling CLI
-  * (`/root/reference/src/event_dedup/ground_truth/labeling_tool.py`),
-  * re-expressed as set operations. The reference loops candidate pairs,
+/** Ground-truth labeling queue — the data semantics of the reference's
+  * interactive labeling CLI (`event_dedup/ground_truth/labeling_tool.py`),
+  * re-expressed as a set operation. The reference loops candidate pairs,
   * skips pairs already present in the ground-truth table
-  * (labeling_tool.py:105-114), pre-suggests "same" when
-  * `title_sim >= auto_threshold` (:131-135), persists only explicit
-  * same/different verdicts — skip and quit write nothing (:146-173) — and
-  * reports same/different counts (:179-207). The terminal rendering itself
+  * (labeling_tool.py:105-114) and pre-suggests "same" when
+  * `title_sim >= auto_threshold` (:131-135). The terminal rendering itself
   * is interactive I/O, not engine behavior; what the engine owns is queue
-  * construction, idempotent label application, and the session stats.
+  * construction.
   */
 object Labeling {
 
@@ -33,100 +30,4 @@ object Labeling {
       // (the reference only pre-suggests on a real title_sim, :131-135)
       .withColumn("suggested",
         coalesce(col("title_sim") >= autoThreshold, lit(false)))
-
-  /** Fold one labeling session's verdicts into the ground-truth table.
-    * Only explicit same/different rows persist (skip/quit drop,
-    * labeling_tool.py:146-159); a pair already labeled keeps its ORIGINAL
-    * label — the reference never reaches the prompt for such pairs
-    * (:107-114), so re-submitting is a no-op, making the fold idempotent.
-    * `session` needs (id_a, id_b, label [, title_similarity, notes]).
-    *
-    * Within ONE session the reference CLI prompts once per pair, so two
-    * verdicts for the same pair cannot arise there; if a session frame
-    * carries them anyway, resolution is deterministic, never arbitrary
-    * row order: first answer wins by the `seq` column when present
-    * (the CLI's prompt order), otherwise conflicting verdicts fail fast
-    * and exact duplicates collapse.
-    */
-  def applyLabels(groundTruth: DataFrame, session: DataFrame): DataFrame = {
-    val accepted = session
-      .where(col("label").isin("same", "different"))
-      .join(groundTruth.select("id_a", "id_b"), Seq("id_a", "id_b"), "left_anti")
-    val resolved =
-      if (accepted.columns.contains("seq")) {
-        // prompt order resolves conflicts ONLY when it actually orders
-        // them: two conflicting verdicts sharing one seq value (or both
-        // null) would fall to partition-internal row order — nondeterminism
-        // the scaladoc forbids — so they fail fast like the no-seq branch
-        val tied = accepted.groupBy("id_a", "id_b", "seq")
-          .agg(countDistinct("label").as("n")).where(col("n") > 1)
-        if (!tied.isEmpty)
-          throw new IllegalArgumentException(
-            "labeling session holds conflicting verdicts sharing one seq " +
-              "value — prompt order cannot resolve them")
-        // nulls last: an explicit prompt order beats an unpopulated one;
-        // aux-column tie-break keeps label-agreeing same-seq dups stable
-        val aux = accepted.columns
-          .filterNot(Seq("id_a", "id_b", "seq").contains)
-          .filter(f => org.apache.spark.sql.catalyst.expressions.RowOrdering
-            .isOrderable(accepted.schema(f).dataType))
-          .map(col(_).asc)
-        firstRowBy(accepted, col("seq").asc_nulls_last +: aux.toSeq)
-      } else {
-        val conflicts = accepted.groupBy("id_a", "id_b")
-          .agg(countDistinct("label").as("n")).where(col("n") > 1)
-        // session frames are human-sized; the eager check is cheap
-        if (!conflicts.isEmpty)
-          throw new IllegalArgumentException(
-            "labeling session holds conflicting verdicts for one pair and no " +
-              "seq column to order them (first-answer-wins needs a prompt order)")
-        // deterministic survivor for label-agreeing duplicates that differ
-        // in auxiliary columns (notes, similarity): lexicographic min over
-        // the remaining fields — dropDuplicates keeps an arbitrary row.
-        // A session frame carrying an UNORDERABLE aux column (e.g. a
-        // metadata MAP riding through) cannot feed min(struct)
-        // (AnalysisException); it falls to a row_number window ordered by
-        // the orderable subset — still deterministic whenever any orderable
-        // column distinguishes the duplicates (label always does for
-        // conflicts-in-waiting; ties that differ ONLY in unorderable
-        // columns have no total order to be deterministic by).
-        val others = accepted.columns.filterNot(Seq("id_a", "id_b").contains)
-        val orderable = others.filter(f =>
-          org.apache.spark.sql.catalyst.expressions.RowOrdering
-            .isOrderable(accepted.schema(f).dataType))
-        if (orderable.length == others.length)
-          accepted.groupBy("id_a", "id_b")
-            .agg(min(struct(others.map(col): _*)).as("__m"))
-            .select((Seq(col("id_a"), col("id_b")) ++
-              others.map(f => col(s"__m.$f").as(f))): _*)
-        else if (orderable.nonEmpty)
-          firstRowBy(accepted, orderable.map(col).toSeq)
-        else accepted.dropDuplicates("id_a", "id_b")
-      }
-    // session-only columns (the queue's pre-suggestion flag, the CLI's
-    // prompt order) must not grow the persistent ground-truth schema —
-    // each differently-shaped session would widen it further, null-filled
-    // for every pre-existing row
-    groundTruth.unionByName(resolved.drop("seq", "suggested"),
-      allowMissingColumns = true)
-  }
-
-  /** Deterministic per-pair survivor: the first row under `order` within
-    * each (id_a, id_b) group — the one dedup shape shared by the seq branch
-    * (prompt order) and the partially-orderable fallback.
-    */
-  private def firstRowBy(df: DataFrame, order: Seq[Column]): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("id_a", "id_b").orderBy(order: _*)
-    df.withColumn("__rn", row_number().over(w))
-      .where(col("__rn") === 1).drop("__rn")
-  }
-
-  /** get_labeling_stats (labeling_tool.py:179-207): one row of
-    * total_labeled / same_count / different_count. */
-  def stats(groundTruth: DataFrame): DataFrame =
-    groundTruth.agg(
-      count(lit(1)).as("total_labeled"),
-      count(when(col("label") === "same", 1)).as("same_count"),
-      count(when(col("label") === "different", 1)).as("different_count"))
 }

@@ -15,18 +15,17 @@ import org.apache.spark.sql.types._
   *
   * All three decode kernels are REAL, built only on JDK-public codecs:
   *   - image: `javax.imageio.ImageIO` (PNG/JPEG/BMP/GIF readers ship with
-  *     every JDK) → width/height + mean-pooled grayscale grid features.
+  *     every JDK) → width/height + mean gray level.
   *   - audio: `javax.sound.sampled.AudioSystem` (WAV/PCM) → duration + RMS
-  *     window features.
+  *     amplitude.
   *   - video: payloads are sniffed at the container level — ISO-BMFF (MP4)
   *     payloads route through [[Mp4.demux]] (pure byte-level box parsing:
-  *     dimensions, duration, frame count, per-sample byte sizes — the
-  *     metadata a crawl pipeline partitions/filters on before any pixel
-  *     decode); everything else tries the JDK GIF codec, which reads
-  *     multi-frame sequences, giving a pixel-level temporal parse —
-  *     frame count, dimensions, per-frame mean-luminance (frame-sampled)
-  *     features. Pixel decode of MP4 needs an H.264/VP9 codec no JDK
-  *     ships and stays behind the same seam.
+  *     dimensions, duration, frame count — the metadata a crawl pipeline
+  *     partitions/filters on before any pixel decode); everything else
+  *     tries the JDK GIF codec, which reads multi-frame sequences, giving a
+  *     pixel-level temporal parse — frame count, dimensions, per-frame mean
+  *     luminance. Pixel decode of MP4 needs an H.264/VP9 codec no JDK ships
+  *     and stays behind the same seam.
   */
 object Multimodal {
 
@@ -49,8 +48,6 @@ object Multimodal {
     )), nullable = true)
   ))
 
-  final case class MediaFeature(media_id: Long, kind: String, n_bytes: Int, feature: Array[Float])
-
   /** Decoded per-row media attributes — integer-exact so the whole decode
     * path is DuckDB-oracle-checkable (q57): unused attributes are 0, never
     * NULL, keeping every column a plain int64 through parquet→pandas.
@@ -60,11 +57,10 @@ object Multimodal {
   final case class MediaDecode(media_id: Long, kind: String, width: Int, height: Int,
                                gray: Int, amp: Int, duration_ms: Long, frames: Int)
 
-  /** Real image decode via ImageIO: (width, height, rounded mean gray level,
-    * grid x grid mean-pooled grayscale feature in [0,1]). None if the payload
-    * is not a decodable image.
+  /** Real image decode via ImageIO: (width, height, rounded mean gray
+    * level). None if the payload is not a decodable image.
     */
-  def decodeImage(payload: Array[Byte], grid: Int = 4): Option[(Int, Int, Int, Array[Float])] = {
+  def decodeImage(payload: Array[Byte]): Option[(Int, Int, Int)] = {
     if (payload == null || payload.isEmpty) return None
     // try/catch like the other two kernels: ImageIO.read returns null for
     // unrecognized formats but THROWS on truncated/corrupt payloads of a
@@ -72,12 +68,11 @@ object Multimodal {
     try {
       val img = ImageIO.read(new ByteArrayInputStream(payload))
       if (img == null) return None
-      decodeImageImpl(img, grid)
+      decodeImageImpl(img)
     } catch { case _: Exception => None }
   }
 
-  private def decodeImageImpl(img: java.awt.image.BufferedImage,
-                              grid: Int): Option[(Int, Int, Int, Array[Float])] = {
+  private def decodeImageImpl(img: java.awt.image.BufferedImage): Option[(Int, Int, Int)] = {
     val (w, h) = (img.getWidth, img.getHeight)
     val cm = img.getColorModel
     // Palette images (indexed PNG) sample palette INDICES, not intensities —
@@ -90,20 +85,16 @@ object Multimodal {
     // by ColorModel contract).
     val colorBands = if (!indexed && cm.hasAlpha && bands > 1) bands - 1 else bands
     // Per-band rescale to the canonical 0..255 range: a 16-bit-per-channel
-    // PNG samples up to 65535 and would push gray and the grid feature far
-    // outside their documented ranges.
+    // PNG samples up to 65535 and would push gray far outside its documented
+    // range.
     val compSize = cm.getComponentSize
     val scale = Array.tabulate(colorBands) { b =>
       val bits = if (compSize != null && b < compSize.length) compSize(b) else 8
       if (bits == 8) 1.0 else 255.0 / ((1L << bits) - 1).toDouble
     }
-    // mean-pool into a grid×grid grayscale feature + global mean in one pass
-    val cellSum = new Array[Double](grid * grid)
-    val cellN = new Array[Long](grid * grid)
     var total = 0.0
     var y = 0
     while (y < h) {
-      val cy = math.min(grid - 1, y * grid / h)
       var x = 0
       while (x < w) {
         val g =
@@ -116,23 +107,19 @@ object Multimodal {
             while (b < colorBands) { s += raster.getSampleDouble(x, y, b) * scale(b); b += 1 }
             s / colorBands
           }
-        val c = cy * grid + math.min(grid - 1, x * grid / w)
-        cellSum(c) += g; cellN(c) += 1; total += g
+        total += g
         x += 1
       }
       y += 1
     }
-    val feat = Array.tabulate(grid * grid) { c =>
-      if (cellN(c) == 0) 0f else (cellSum(c) / cellN(c) / 255.0).toFloat
-    }
-    Some((w, h, math.round(total / (w.toLong * h)).toInt, feat))
+    Some((w, h, math.round(total / (w.toLong * h)).toInt))
   }
 
   /** Real audio decode via javax.sound (WAV/PCM 16-bit): (duration ms,
-    * rounded global RMS amplitude, per-window RMS feature in [0,1]).
-    * None if the payload is not decodable audio.
+    * rounded global RMS amplitude). None if the payload is not decodable
+    * audio.
     */
-  def decodeWav(payload: Array[Byte], windows: Int = 16): Option[(Long, Int, Array[Float])] = {
+  def decodeWav(payload: Array[Byte]): Option[(Long, Int)] = {
     if (payload == null || payload.isEmpty) return None
     try {
       val in = AudioSystem.getAudioInputStream(new ByteArrayInputStream(payload))
@@ -149,21 +136,14 @@ object Multimodal {
         else (bytes(o + 1) << 8) | (bytes(o) & 0xff)
       }
       var sumsq = 0L
-      val winSumsq = new Array[Long](windows)
-      val winN = new Array[Long](windows)
       var i = 0
       while (i < frames) {
         val v = sample(i).toLong
         sumsq += v * v
-        val wdx = math.min(windows - 1, i * windows / frames)
-        winSumsq(wdx) += v * v; winN(wdx) += 1
         i += 1
       }
-      val feat = Array.tabulate(windows) { w =>
-        if (winN(w) == 0) 0f else (math.sqrt(winSumsq(w).toDouble / winN(w)) / 32768.0).toFloat
-      }
       val durationMs = frames.toLong * 1000L / fmt.getSampleRate.toLong
-      Some((durationMs, math.round(math.sqrt(sumsq.toDouble / frames)).toInt, feat))
+      Some((durationMs, math.round(math.sqrt(sumsq.toDouble / frames)).toInt))
     } catch { case _: Exception => None }
   }
 
@@ -209,43 +189,6 @@ object Multimodal {
     } catch { case _: Exception => None }
   }
 
-  private def fitDim(src: Array[Float], dim: Int): Array[Float] =
-    if (src.length == dim) src
-    else if (src.length > dim) src.take(dim)
-    else src ++ Array.fill(dim - src.length)(0f)
-
-  /** Feature extraction over media batches: `mapPartitions` on a typed
-    * Dataset — one decoder init per partition (the expensive part for real
-    * decoders), rows streamed through it. All three kinds run their REAL
-    * decode kernels; undecodable payloads map to a zero vector.
-    */
-  def extractFeatures(media: DataFrame, dim: Int = 16): Dataset[MediaFeature] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    val grid = math.max(1, math.sqrt(dim.toDouble).toInt)
-    media.select(col("media_id"), col("kind"), col("payload"))
-      .as[(Long, String, Array[Byte])]
-      .mapPartitions { rows =>
-        // ImageIO scans its reader registry on first use: per-partition init
-        rows.map { case (id, kind, payload) =>
-          val bytes = if (payload == null) Array.empty[Byte] else payload
-          val feature = kind match {
-            case "image" => decodeImage(bytes, grid).map(r => fitDim(r._4, dim))
-              .getOrElse(Array.fill(dim)(0f))
-            case "audio" => decodeWav(bytes, dim).map(r => fitDim(r._3, dim))
-              .getOrElse(Array.fill(dim)(0f))
-            case _ if Mp4.isIsoBmff(bytes) => // video: per-sample byte sizes
-              Mp4.demux(bytes)
-                .map(i => fitDim(i.sampleSizes.map(s => math.min(1f, s / 65536f)), dim))
-                .getOrElse(Array.fill(dim)(0f))
-            case _ => decodeGif(bytes, dim).map(r => fitDim(r._4, dim))
-              .getOrElse(Array.fill(dim)(0f)) // video: per-frame samples
-          }
-          MediaFeature(id, kind, bytes.length, feature)
-        }
-      }
-  }
-
   /** Oracle-checkable decode surface (q57): runs the real codecs and emits
     * integer-exact attributes — image width/height/mean-gray, audio RMS
     * amplitude/duration — with 0 (not NULL) where a field does not apply to
@@ -260,10 +203,10 @@ object Multimodal {
         rows.map { case (id, kind, payload) =>
           kind match {
             case "image" =>
-              val (w, h, g, _) = decodeImage(payload).getOrElse((0, 0, 0, Array.empty[Float]))
+              val (w, h, g) = decodeImage(payload).getOrElse((0, 0, 0))
               MediaDecode(id, kind, w, h, g, 0, 0L, if (w > 0) 1 else 0)
             case "audio" =>
-              val (d, a, _) = decodeWav(payload).getOrElse((0L, 0, Array.empty[Float]))
+              val (d, a) = decodeWav(payload).getOrElse((0L, 0))
               MediaDecode(id, kind, 0, 0, 0, a, d, 0)
             case _ if Mp4.isIsoBmff(payload) =>
               Mp4.demux(payload) match {

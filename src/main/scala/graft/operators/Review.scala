@@ -3,77 +3,10 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Review operations: split (detach a member from its cluster) and merge
-  * (combine two clusters) — SURVEY.md §2.9 Q13/Q14, reference
-  * `/root/reference/src/event_dedup/review/operations.py:20-338`.
-  *
-  * Both are INCREMENTAL reclusterings: only the affected component is
-  * touched, the rest of the label table streams through unchanged — at
-  * 10^12 nodes you never re-run global CC for one human decision. An
-  * append-only audit frame records each action
-  * (reference `models/audit_log.py`, written at operations.py:201-208).
+/** Cluster review (SURVEY.md §2.9 Q9), reference
+  * `event_dedup/api/routes/review.py:63-80`.
   */
 object Review {
-
-  /** Q13 split: detach `nodeId` from its cluster. Edges touching the node
-    * are dropped and ONLY its old component is re-clustered (the detached
-    * node becomes a singleton or seeds a new component).
-    *
-    * @param labels (node, component)
-    * @param edges  match edges (src, dst[, weight])
-    * @return (newLabels, remainingEdges, audit)
-    */
-  def splitNode(labels: DataFrame, edges: DataFrame, nodeId: Long): (DataFrame, DataFrame, DataFrame) = {
-    val spark = labels.sparkSession
-    import spark.implicits._
-    val comp = labels.where(col("node") === nodeId).select("component").as[Long].collect()
-    require(comp.nonEmpty, s"node $nodeId not labeled")
-    val oldComp = comp.head
-
-    val remainingEdges = edges.where(col("src") =!= nodeId && col("dst") =!= nodeId)
-    val affectedNodes = labels.where(col("component") === oldComp).select("node")
-    val affectedEdges = remainingEdges
-      .join(affectedNodes.withColumnRenamed("node", "src"), "src")
-    val relabeled = ConnectedComponents.labelsWithSingletons(affectedNodes, affectedEdges)
-    val newLabels = labels.where(col("component") =!= oldComp).unionByName(relabeled)
-    val audit = Seq(("split", nodeId, oldComp)).toDF("action", "node", "component")
-    (newLabels, remainingEdges, audit)
-  }
-
-  /** Q14 merge: union two clusters under the donor/target minimum label
-    * (operations.py:219-338 moves links donor→target; our label form makes
-    * that a two-sided relabel). A forced edge is recorded so a later global
-    * re-run preserves the human decision.
-    */
-  def mergeClusters(labels: DataFrame, edges: DataFrame, compA: Long, compB: Long): (DataFrame, DataFrame, DataFrame) = {
-    val spark = labels.sparkSession
-    import spark.implicits._
-    // both labels must exist: a stale/typo'd id would otherwise no-op the
-    // relabel yet still append a forced edge — a later global CC re-run
-    // would then materialize a phantom node into the surviving component,
-    // with an audit row recording a merge that never happened
-    val found = labels.where(col("component").isin(compA, compB))
-      .select("component").distinct().as[Long].collect().toSet
-    require(found == Set(compA, compB),
-      s"mergeClusters: missing component(s) ${Set(compA, compB) -- found}")
-    val target = math.min(compA, compB)
-    val newLabels = labels.withColumn("component",
-      when(col("component") === compA || col("component") === compB, target)
-        .otherwise(col("component")))
-    // forced edge between the two old component representatives. Existing
-    // tiers are PRESERVED (a tier column is only added when absent):
-    // stamping everything 'match' would erase earlier merges' forced edges
-    // — the very records a later global re-run replays human decisions from.
-    // allowMissingColumns: the documented edge shape is (src, dst[, weight])
-    // — a weightless frame must merge, not throw on the forced row's weight
-    val forced = Seq((compA, compB, 1.0, "forced")).toDF("src", "dst", "weight", "tier")
-    val withTier =
-      if (edges.columns.contains("tier")) edges
-      else edges.withColumn("tier", lit("match"))
-    val newEdges = withTier.unionByName(forced, allowMissingColumns = true)
-    val audit = Seq(("merge", compA, compB, target)).toDF("action", "component_a", "component_b", "target")
-    (newLabels, newEdges, audit)
-  }
 
   /** Q9 review queue (api/routes/review.py:63-80): flagged-or-uncertain
     * clusters ordered by ascending confidence, paginated.

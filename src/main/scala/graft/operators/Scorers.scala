@@ -6,14 +6,13 @@ import graft.config._
 import graft.functions.FuzzKernels
 
 /** The reference's four pairwise signal scorers + combiner + decision logic
-  * as pure Column functions (SURVEY.md §2.4 V1-V8). These exist for
-  * semantic parity with `/root/reference/src/event_dedup/matching/` — the
+  * (SURVEY.md §2.4 V1-V8), scored by [[scorePairs]] over a pair DataFrame.
+  * These exist for semantic parity with `event_dedup/matching/` — the
   * event-listing domain — while the webtext pipeline uses Jaccard evidence
   * ([[Decisions]]). Everything is column arithmetic (codegen'd); the only
   * custom kernels are the rapidfuzz-parity expressions in [[FuzzKernels]].
   *
-  * Convention: scorers take the two sides' columns explicitly; the pair
-  * DataFrame carries `_a`/`_b` suffixed columns
+  * Convention: the pair DataFrame carries `_a`/`_b` suffixed columns
   * (`matching/pipeline.py:123-153`'s loop body, vectorized).
   */
 object Scorers {
@@ -49,10 +48,6 @@ object Scorers {
       .otherwise(array().cast("array<string>"))
   }
 
-  /** Distinct ISO day strings of an event's dates array (date_scorer.py:37-46). */
-  def expandDates(dates: Column): Column =
-    array_distinct(flatten(transform(coalesce(dates, array()), e => expandEntry(e))))
-
   /** "HH:MM[:SS]" → minutes-since-midnight (fractional seconds), NULL if
     * missing/unparseable (strptime %H:%M:%S / %H:%M fallbacks,
     * date_scorer.py:70-85).
@@ -79,30 +74,6 @@ object Scorers {
       .when(diff <= cfg.timeCloseMinutes, cfg.closeFactor)
       .when(diff <= cfg.timeGapPenaltyHours * 60.0, cfg.farFactor)
       .otherwise(cfg.timeGapPenaltyFactor)
-  }
-
-  /** start_time of the FIRST entry covering day `d` (first-entry-wins map,
-    * date_scorer.py:49-61).
-    */
-  private def timeForDay(dates: Column, d: Column): Column =
-    get(filter(coalesce(dates, array()), e => array_contains(expandEntry(e), d)), lit(0))
-      .getField("start_time")
-
-  /** Full date score: Jaccard(date sets) × mean time-proximity over shared
-    * dates; 0 when either side empty or no overlap (date_scorer.py:97-138).
-    */
-  def dateScore(datesA: Column, datesB: Column, cfg: DateConfig = DateConfig()): Column = {
-    val da = expandDates(datesA)
-    val db = expandDates(datesB)
-    val shared = array_intersect(da, db)
-    val uni = array_union(da, db)
-    val jaccard = size(shared).cast("double") / size(uni)
-    val factors = transform(shared, d =>
-      timeProximityFactor(timeForDay(datesA, d), timeForDay(datesB, d), cfg))
-    val avgFactor = aggregate(factors, lit(0.0), (acc, x) => acc + x) / size(shared)
-    when(size(da) === 0 || size(db) === 0, 0.0)
-      .when(size(shared) === 0, 0.0)
-      .otherwise(jaccard * avgFactor)
   }
 
   // =========================================================================
@@ -133,29 +104,6 @@ object Scorers {
       .otherwise(cfg.venueMismatchFactor)
   }
 
-  /** Full geo score (geo_scorer.py:41-91): neutral on missing coords or low
-    * confidence (identical coords skip the confidence gate); linear distance
-    * decay; venue factor within venueMatchDistanceKm.
-    */
-  def geoScore(
-      latA: Column, lonA: Column, confA: Column,
-      latB: Column, lonB: Column, confB: Column,
-      locationNameA: Column, locationNameB: Column,
-      cfg: GeoConfig = GeoConfig()
-  ): Column = {
-    val missing = latA.isNull || lonA.isNull || latB.isNull || lonB.isNull
-    val coordsIdentical = abs(latA - latB) < 1e-6 && abs(lonA - lonB) < 1e-6
-    val lowConf = (confA.isNotNull && confA < cfg.minConfidence) ||
-      (confB.isNotNull && confB < cfg.minConfidence)
-    val dist = haversineKm(latA, lonA, latB, lonB)
-    val base = greatest(lit(0.0), lit(1.0) - dist / cfg.maxDistanceKm)
-    val withVenue = when(dist < cfg.venueMatchDistanceKm,
-      base * venueNameFactor(locationNameA, locationNameB, cfg)).otherwise(base)
-    when(missing, cfg.neutralScore)
-      .when(!coordsIdentical && lowConf, cfg.neutralScore)
-      .otherwise(withVenue)
-  }
-
   // =========================================================================
   // V3 title_score (matching/scorers/title_scorer.py:17-62)
   // =========================================================================
@@ -164,55 +112,6 @@ object Scorers {
     * (title_scorer.py:44-46 relies on casefold folding ß/SS).
     */
   def casefold(c: Column): Column = replace(lower(c), lit("ß"), lit("ss"))
-
-  private def blendedTitle(ta: Column, tb: Column, cfg: TitleConfig): Column = {
-    val primary = FuzzKernels.token_sort_ratio(ta, tb)
-    val secondary = FuzzKernels.token_set_ratio(ta, tb)
-    when(primary >= cfg.blendLower && primary <= cfg.blendUpper,
-      lit(cfg.primaryWeight) * primary + lit(cfg.secondaryWeight) * secondary)
-      .otherwise(primary)
-  }
-
-  /** Full title score with cross-source-type blend switch
-    * (title_scorer.py:17-62; cross config `config/matching.yaml:44-48`).
-    */
-  def titleScore(
-      titleA: Column, titleB: Column,
-      sourceTypeA: Column, sourceTypeB: Column,
-      cfg: TitleConfig = TitleConfig(),
-      crossCfg: TitleConfig = GraftConfig.default.crossSourceTitle
-  ): Column = {
-    val ta = casefold(trim(coalesce(titleA, lit(""))))
-    val tb = casefold(trim(coalesce(titleB, lit(""))))
-    val isCross = sourceTypeA =!= sourceTypeB &&
-      sourceTypeA.isin("artikel", "terminliste") && sourceTypeB.isin("artikel", "terminliste")
-    when(length(ta) === 0 || length(tb) === 0, 0.0)
-      .when(isCross, blendedTitle(ta, tb, crossCfg))
-      .otherwise(blendedTitle(ta, tb, cfg))
-  }
-
-  // =========================================================================
-  // V4 description_score (matching/scorers/desc_scorer.py:12-29)
-  // =========================================================================
-
-  def descriptionScore(
-      descA: Column, shortDescA: Column,
-      descB: Column, shortDescB: Column
-  ): Column = {
-    // Python-`or` parity (desc_scorer.py:21-22): the fallback fires on
-    // FALSY (null or empty string), not just null — `coalesce` would let
-    // an empty-string description mask a populated short_description.
-    // The reference strips AFTER the fallback chain, mirrored here.
-    def pick(d: Column, sd: Column): Column =
-      trim(when(d.isNotNull && length(d) > 0, d)
-        .when(sd.isNotNull && length(sd) > 0, sd)
-        .otherwise(lit("")))
-    val da = pick(descA, shortDescA)
-    val db = pick(descB, shortDescB)
-    when(length(da) === 0 && length(db) === 0, 0.5)
-      .when(length(da) === 0 || length(db) === 0, 0.4)
-      .otherwise(FuzzKernels.token_sort_ratio(da, db))
-  }
 
   // =========================================================================
   // V5 combined_score + V7 resolve_weights + V6 decide
@@ -266,28 +165,30 @@ object Scorers {
     * columns; appends the four signals, combined score, and decision
     * (pipeline.py:98-161 vectorized).
     *
-    * The single-Column scorers above ([[dateScore]], [[titleScore]], …) are
-    * the semantic spec, but used directly they instantiate their heavy
-    * subtrees once PER REFERENCE — the date-expansion tree (try_to_date +
-    * `sequence` day materialization inside lambda bodies, which codegen
-    * cannot reach and subexpression elimination skips) appeared 12× per row
-    * and the O(len²) fuzzy kernels 9× in the collapsed q37 plan. This
-    * DataFrame-level path stages each heavy subtree into an intermediate
-    * column evaluated exactly once per row (CollapseProject keeps
-    * multi-referenced non-cheap aliases staged), then computes the SAME
-    * score arithmetic over the staged attributes — bit-identical results,
-    * ~10× less per-row work (guide §1.2 step 2: per-task work).
+    * Written as single-Column scorers, each signal would instantiate its
+    * heavy subtrees once PER REFERENCE — the date-expansion tree
+    * (try_to_date + `sequence` day materialization inside lambda bodies,
+    * which codegen cannot reach and subexpression elimination skips)
+    * appeared 12× per row and the O(len²) fuzzy kernels 9× in the collapsed
+    * q37 plan. This DataFrame-level path stages each heavy subtree into an
+    * intermediate column evaluated exactly once per row (CollapseProject
+    * keeps multi-referenced non-cheap aliases staged), then computes the
+    * reference's score arithmetic over the staged attributes — ~10× less
+    * per-row work (guide §1.2 step 2: per-task work).
     */
   def scorePairs(pairs: org.apache.spark.sql.DataFrame, cfg: GraftConfig = GraftConfig.default,
       priority: Seq[String] = Nil, overrides: Map[String, ScoringWeights] = Map.empty
   ): org.apache.spark.sql.DataFrame = {
     // (start_time, expanded days) per dates entry, expansion run ONCE per
-    // entry — the staged form of expandDates + timeForDay's per-day re-scan
+    // entry — no per-day re-scan of the dates array
     def entryDays(dates: Column): Column =
       zip_with(coalesce(dates, array()),
         transform(coalesce(dates, array()), e => expandEntry(e)),
         (e, ds) => struct(e.getField("start_time").as("st"), ds.as("days")))
-    // descriptionScore's Python-`or` pick (falsy fallback, trim after)
+    // Python-`or` pick (desc_scorer.py:21-22): the fallback fires on FALSY
+    // (null or empty string), not just null — `coalesce` would let an
+    // empty-string description mask a populated short_description. The
+    // reference strips AFTER the fallback chain, mirrored here.
     def pick(d: Column, sd: Column): Column =
       trim(when(d.isNotNull && length(d) > 0, d)
         .when(sd.isNotNull && length(sd) > 0, sd)
@@ -309,7 +210,10 @@ object Scorers {
     val s3 = s2.select(col("*"),
       array_intersect(col("__days_a"), col("__days_b")).as("__shared"))
 
-    // date_score over the staged arrays — same formula as [[dateScore]]
+    // date_score over the staged arrays (date_scorer.py:97-138): Jaccard of
+    // the distinct day sets × mean time proximity over shared days, where a
+    // day's time is the start_time of the FIRST entry covering it
+    // (date_scorer.py:49-61); 0 when either side is empty or no day is shared
     def stOf(dz: String, d: Column): Column =
       get(filter(col(dz), p => array_contains(p.getField("days"), d)), lit(0))
         .getField("st")
@@ -324,7 +228,9 @@ object Scorers {
         .when(size(shared) === 0, 0.0)
         .otherwise(jaccard * avgFactor)
 
-    // geo_score with the haversine staged — same formula as [[geoScore]]
+    // geo_score with the haversine staged (geo_scorer.py:41-91): neutral on
+    // missing coords or low confidence (identical coords skip the confidence
+    // gate); linear distance decay; venue factor within venueMatchDistanceKm
     val (latA, lonA, confA) = (col("geo_latitude_a"), col("geo_longitude_a"), col("geo_confidence_a"))
     val (latB, lonB, confB) = (col("geo_latitude_b"), col("geo_longitude_b"), col("geo_confidence_b"))
     val missing = latA.isNull || lonA.isNull || latB.isNull || lonB.isNull
@@ -339,7 +245,8 @@ object Scorers {
       .when(!coordsIdentical && lowConf, cfg.geo.neutralScore)
       .otherwise(withVenue)
 
-    // title_score with the two kernels staged — same formula as [[titleScore]]
+    // title_score with the two kernels staged (title_scorer.py:17-62; cross
+    // config `config/matching.yaml:44-48`)
     def blend(c: TitleConfig): Column =
       when(col("__tsr") >= c.blendLower && col("__tsr") <= c.blendUpper,
         lit(c.primaryWeight) * col("__tsr") + lit(c.secondaryWeight) * col("__tset"))

@@ -27,9 +27,6 @@ object Similarity {
 
   def l2Norm(a: Column): Column = sqrt(dot(a, a))
 
-  def cosine(a: Column, b: Column, normA: Column, normB: Column): Column =
-    when(normA === 0.0 || normB === 0.0, 0.0).otherwise(dot(a, b) / (normA * normB))
-
   /** Fused cosine: one pass over both arrays, no intermediate array
     * allocation (the declarative form builds a zipped array per pair and
     * folds it boxed — the dominant cost of every pairwise re-rank). Exactly

@@ -189,27 +189,11 @@ object Synthesis {
       )
   }
 
-  /** C3 cluster coherence (coherence.py:16-65): size cap, min average
-    * internal edge weight; flagged clusters survive but are marked.
-    * `edges` = (src, dst, weight) match edges; `labels` = (node, component).
-    */
-  def coherence(labels: DataFrame, edges: DataFrame, cfg: GraftConfig): DataFrame = {
-    val lbl = labels.select(col("node"), col("component"))
-    val edgeInCluster = edges
-      .join(lbl.toDF("src", "component"), "src")
-      .groupBy("component")
-      .agg(avg(col("weight")).as("avg_weight"), count(lit(1)).as("edge_count"))
-    lbl.groupBy("component").agg(count(lit(1)).as("size"))
-      .join(edgeInCluster, Seq("component"), "left")
-      .withColumn("flagged",
-        col("size") > cfg.cluster.maxClusterSize ||
-          (col("avg_weight").isNotNull && col("avg_weight") < cfg.cluster.minInternalSimilarity))
-  }
-
   /** Per-cluster quality appended to [[canonicals]]' output `canon`:
-    * coherence flag (C3), mean match confidence (G12, NULL for singletons)
-    * and tier2_assisted (G13 analog). [[coherence]], [[clusterConfidence]]
-    * and [[tierFlags]] are the per-signal reference forms.
+    * coherence flag (C3, coherence.py:16-65), mean match confidence (G12,
+    * `matching/pipeline.py:282-301`, NULL for singletons) and
+    * tier2_assisted (G13 analog, `matching/pipeline.py:304-314`). The specs
+    * check it against one-signal-per-pass reference forms.
     *
     * `canon` already carries source_count (the per-component member count:
     * urls are the pipeline's unique key) and distinct_days, so only the
@@ -251,31 +235,6 @@ object Synthesis {
           dateClause).as("flagged"),
         col("match_confidence"),
         coalesce(col("tier2_assisted"), lit(false)).as("tier2_assisted")): _*)
-  }
-
-  /** G12 per-cluster confidence: mean match-edge weight; NULL for singletons
-    * (`matching/pipeline.py:282-301`).
-    */
-  def clusterConfidence(labels: DataFrame, edges: DataFrame): DataFrame = {
-    val lbl = labels.select(col("node"), col("component"))
-    edges.join(lbl.toDF("src", "component"), "src")
-      .groupBy("component")
-      .agg(avg(col("weight")).as("match_confidence"))
-  }
-
-  /** G13 tier flag per cluster (`matching/pipeline.py:304-314`): did any
-    * edge inside the cluster come from the second (non-default) tier?
-    * Reference analog: `ai_assisted = any(tier LIKE 'ai%')`.
-    */
-  def tierFlags(labels: DataFrame, decisions: DataFrame): DataFrame = {
-    val lbl = labels.select(col("node"), col("component"))
-    // match rows only — see clusterQuality: overlap_match edges are never
-    // inside a cluster, so they must not set its tier flag
-    decisions.where(col("decision") === "match")
-      .select(col("node_a").as("src"), col("tier"))
-      .join(lbl.toDF("src", "component"), "src")
-      .groupBy("component")
-      .agg(bool_or(col("tier") =!= "jaccard").as("tier2_assisted"))
   }
 
   /** Full event-domain canonical synthesizer (`synthesizer.py:16-126`): one

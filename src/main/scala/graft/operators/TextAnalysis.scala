@@ -46,17 +46,6 @@ object TextAnalysis {
   private val StopwordsEn = Seq("the", "and", "is", "a", "of", "to", "in", "that")
   private val StopwordsFr = Seq("le", "la", "et", "les", "des", "un", "une", "est")
 
-  /** Occurrences of a word (space-delimited token) inside the text.
-    * Whitespace runs are widened to two spaces first so adjacent tokens
-    * don't share their delimiter — then " word " occurrences are disjoint
-    * and a length-difference count is exact.
-    */
-  private def wordOccurrences(text: Column, word: String): Column = {
-    val padded = concat(lit(" "), regexp_replace(lower(text), Ws + "+", "  "), lit(" "))
-    val needle = s" $word "
-    (length(padded) - length(replace(padded, lit(needle), lit("")))) / needle.length
-  }
-
   /** Stopword hits for a language's stopword list; empty list → 0 hits
     * (not an `empty.reduceLeft` crash at plan construction).
     * Fused single walk ([[graft.functions.StopwordHits]]): the padded
@@ -64,18 +53,13 @@ object TextAnalysis {
     * WORD (langId ran 24 such passes per row); a word's padded occurrence
     * count equals the count of tokens whose lowercase is that word, and a
     * token equals at most one distinct word, so the per-list sum is one
-    * token walk against a hash set. [[stopwordHitsDeclarative]] stays as
-    * the spec side of the differential test.
+    * token walk against a hash set. The specs keep the padded form as the
+    * spec side of the differential test.
     */
   def stopwordHits(text: Column, stopwords: Seq[String]): Column =
     if (stopwords.isEmpty) lit(0.0)
     else graft.functions.toCol(
       graft.functions.StopwordHits(graft.functions.toExpr(text), stopwords))
-
-  /** The padded-occurrence-count reference chain for [[stopwordHits]]. */
-  def stopwordHitsDeclarative(text: Column, stopwords: Seq[String]): Column =
-    if (stopwords.isEmpty) lit(0.0)
-    else stopwords.map(wordOccurrences(text, _)).reduce(_ + _)
 
   /** Quality metrics struct: chars, tokens, mean token length, punct ratio,
     * stopword ratio (EN list), uppercase ratio — the length/punct/stopword
@@ -136,8 +120,4 @@ object TextAnalysis {
     */
   def fingerprintSha(text: Column): Column =
     sha2(graft.functions.TextFunctions.collapseWhitespace(lower(text)), 256)
-
-  /** 64-bit rolling content fingerprint (cheap join key at scale). */
-  def fingerprint64(text: Column): Column =
-    xxhash64(graft.functions.TextFunctions.collapseWhitespace(lower(text)))
 }

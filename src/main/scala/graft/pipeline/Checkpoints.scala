@@ -6,7 +6,7 @@ import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import com.fasterxml.jackson.databind.JsonNode
 
-/** Stage checkpointing with per-partition lineage + metrics
+/** Stage checkpointing with per-stage row counts
   * (north_rule: resumable mid-pipeline; SURVEY.md §7.2).
   *
   * Reference analog: the file-hash ingestion ledger
@@ -107,24 +107,6 @@ final class Checkpoints(spark: SparkSession, workDir: String, configHash: String
   /** Row count of each stage committed under this config key (no Spark job). */
   def stageRows(): Map[String, Long] =
     committed().filter(_.configHash == configHash).map(m => m.stage -> m.rows).toMap
-
-  /** Per-partition metrics (partition_id, rows, stage, config_hash) of every
-    * committed stage, derived from its data: one scan per stage, on demand.
-    */
-  def lineage(): DataFrame = {
-    val perStage = committed().map { m =>
-      spark.read.schema(m.schema).parquet(dataPath(m.stage))
-        .groupBy(spark_partition_id().as("partition_id"))
-        .agg(count(lit(1)).as("rows"))
-        .withColumn("stage", lit(m.stage))
-        .withColumn("config_hash", lit(m.configHash))
-    }
-    // empty-but-SCHEMA'D: a caller selecting the lineage columns before the
-    // first stage lands sees 0 rows, not an AnalysisException
-    perStage.reduceOption(_ unionByName _).getOrElse(spark.createDataFrame(
-      java.util.List.of[org.apache.spark.sql.Row](),
-      StructType.fromDDL("partition_id INT, rows BIGINT, stage STRING, config_hash STRING")))
-  }
 }
 
 object Checkpoints {

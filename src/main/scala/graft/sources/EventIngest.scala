@@ -1,135 +1,24 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 import graft.functions.TextFunctions
 
-/** JSON event-file ingestion (SURVEY.md §2.1 S1-S7, S10-S12).
+/** Event-file ingestion helpers (SURVEY.md §2.1 S3, P3).
   *
-  * The reference validates event files with a pydantic model tree
-  * (`/root/reference/src/event_dedup/ingestion/json_loader.py:10-101`),
-  * flattens nested location/geo (`ingestion/file_processor.py:68-130`),
-  * normalizes + generates blocking keys at ingest (:222-246), skips
-  * already-seen files by SHA-256 (:187-196), and dead-letters failures
-  * (:259-289). Spark-native re-expression:
-  *
-  *  - declared `StructType` + PERMISSIVE `_corrupt_record` replaces pydantic
-  *    (schema violations land in the dead-letter frame, not exceptions);
-  *  - `input_file_name()` + `sha2` drives idempotency as a left-anti join
-  *    against an ingestion-ledger table — no driver-side file loop;
-  *  - nested→flat is one `select`; the `_sanitizeResult.city` override is a
-  *    `coalesce` (file_processor.py:82-100);
-  *  - everything stays a lazy plan: ingest of 10^6 files is one distributed
-  *    read, not a per-file transaction.
+  * The reference skips already-seen files by SHA-256
+  * (`event_dedup/ingestion/file_processor.py:187-196`)
+  * and normalizes at ingest (:222-236). Spark-native re-expression: file
+  * idempotency is a left-anti join against an ingestion-ledger table (no
+  * driver-side file loop), and normalization is a column projection plus a
+  * broadcast alias join.
   */
 object EventIngest {
-
-  /** Declared schema of an event file (json_loader.py:10-78). Extra fields
-    * in files are simply not projected (pydantic `extra="allow"` analog).
-    */
-  val eventFileSchema: StructType = {
-    val geo = StructType(Seq(
-      StructField("longitude", DoubleType), StructField("latitude", DoubleType),
-      StructField("confidence", DoubleType), StructField("country", StringType)))
-    val sanitize = StructType(Seq(
-      StructField("city", StringType), StructField("district", StringType),
-      StructField("confidence", DoubleType)))
-    val location = StructType(Seq(
-      StructField("name", StringType), StructField("city", StringType),
-      StructField("district", StringType), StructField("street", StringType),
-      StructField("street_no", StringType), StructField("zipcode", StringType),
-      StructField("_sanitizeResult", sanitize), StructField("geo", geo)))
-    val eventDate = StructType(Seq(
-      StructField("date", StringType), StructField("start_time", StringType),
-      StructField("end_time", StringType), StructField("end_date", StringType)))
-    val event = StructType(Seq(
-      StructField("id", StringType), StructField("title", StringType),
-      StructField("short_description", StringType), StructField("description", StringType),
-      StructField("highlights", ArrayType(StringType)),
-      StructField("event_dates", ArrayType(eventDate)),
-      StructField("location", location),
-      StructField("source_type", StringType),
-      StructField("categories", ArrayType(StringType)),
-      StructField("is_family_event", BooleanType),
-      StructField("is_child_focused", BooleanType),
-      StructField("admission_free", BooleanType),
-      StructField("confidence_score", DoubleType)))
-    StructType(Seq(
-      StructField("events", ArrayType(event)),
-      StructField("metadata", StructType(Seq(
-        StructField("processedAt", StringType), StructField("sourceKey", StringType)))),
-      StructField("_corrupt_record", StringType)))
-  }
-
-  /** S1/S2: read event files with declared schema; malformed documents land
-    * in `_corrupt_record` (PERMISSIVE) instead of failing the job.
-    * `multiLine` because event files are one JSON document per file.
-    */
-  def readEventFiles(spark: SparkSession, path: String): DataFrame =
-    spark.read
-      .schema(eventFileSchema)
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .option("multiLine", "true")
-      .json(path)
-      .withColumn("file_name", input_file_name())
-
-  /** S7: the dead-letter frame (reference moves failed files + logs a row,
-    * file_processor.py:259-289).
-    */
-  def deadLetters(files: DataFrame): DataFrame =
-    files.where(col("_corrupt_record").isNotNull || col("events").isNull)
-      .select(col("file_name"), col("_corrupt_record"))
-
-  /** S4: source code = filename prefix before the first underscore
-    * (json_loader.py:120-132).
-    */
-  def sourceCode(fileName: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    val base = element_at(split(fileName, "/"), -1)
-    when(base.contains("_"), element_at(split(base, "_"), 1)).otherwise(lit("unknown"))
-  }
-
-  /** S5/S6: explode events, flatten nested location/geo to columns, keeping
-    * `event_dates` nested (ArrayType(Struct) — no child table needed).
-    * `_sanitizeResult.city` overrides `city` (file_processor.py:82-100).
-    */
-  def flattenEvents(files: DataFrame): DataFrame = {
-    val ok = files.where(col("_corrupt_record").isNull && col("events").isNotNull)
-    ok.select(col("file_name"), explode(col("events")).as("e"))
-      .select(
-        col("e.id").as("id"),
-        col("e.title").as("title"),
-        col("e.short_description").as("short_description"),
-        col("e.description").as("description"),
-        col("e.highlights").as("highlights"),
-        col("e.event_dates").as("dates"),
-        col("e.location.name").as("location_name"),
-        coalesce(col("e.location._sanitizeResult.city"), col("e.location.city")).as("location_city"),
-        coalesce(col("e.location._sanitizeResult.district"), col("e.location.district")).as("location_district"),
-        col("e.location.street").as("location_street"),
-        // street_no and geo.country are declared ingest fields
-        // (file_processor.py:86,100) — dropping them here made the
-        // ingest→export round trip lossy
-        col("e.location.street_no").as("location_street_no"),
-        col("e.location.zipcode").as("location_zipcode"),
-        col("e.location.geo.latitude").as("geo_latitude"),
-        col("e.location.geo.longitude").as("geo_longitude"),
-        col("e.location.geo.confidence").as("geo_confidence"),
-        col("e.location.geo.country").as("geo_country"),
-        col("e.source_type").as("source_type"),
-        col("e.categories").as("categories"),
-        coalesce(col("e.is_family_event"), lit(false)).as("is_family_event"),
-        coalesce(col("e.is_child_focused"), lit(false)).as("is_child_focused"),
-        coalesce(col("e.admission_free"), lit(false)).as("admission_free"),
-        sourceCode(col("file_name")).as("source_code"),
-        col("file_name"))
-  }
 
   /** S3: file-hash idempotency as a distributed anti-join — files whose
     * SHA-256 already appears in the ledger are skipped
     * (file_processor.py:187-196 semantics without a driver loop).
-    * Input `withHash` must carry `file_hash`; `ledger` has one column
+    * `files` must carry `file_hash`; `ledger` has one column
     * `file_hash`.
     *
     * No broadcast hint: the ledger grows without bound across runs (every
@@ -145,7 +34,7 @@ object EventIngest {
     files.join(ledger.select("file_hash"), Seq("file_hash"), "left_anti")
 
   /** File hash column for a frame carrying the raw file bytes/text. */
-  def fileHash(content: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+  def fileHash(content: Column): Column =
     sha2(content, 256)
 
   /** Ingest-time normalization (file_processor.py:222-236): normalized
@@ -175,166 +64,5 @@ object EventIngest {
         .withColumn("city_normalized", coalesce(col("city_alias"), col("city_norm_pre")))
         .drop("city_norm_pre", "city_alias")
     }
-  }
-
-  // -------------------------------------------------------------------
-  // Export (S10-S12, `export/service.py`)
-  // -------------------------------------------------------------------
-
-  /** S10: flat canonical row → nested input-format JSON
-    * (`export/service.py:16-74`).
-    */
-  def toInputFormat(canonical: DataFrame): DataFrame =
-    canonical.select(col("id"),
-      to_json(struct(
-        col("id"), col("title"), col("short_description"), col("description"),
-        col("highlights"),
-        col("dates").as("event_dates"),
-        struct(
-          col("location_name").as("name"), col("location_city").as("city"),
-          // district is part of the reference's input format
-          // (export/service.py:44-45) — omitting it made export→re-ingest
-          // lossy for any canonical carrying one
-          col("location_district").as("district"),
-          col("location_street").as("street"), col("location_zipcode").as("zipcode"),
-          struct(col("geo_latitude").as("latitude"), col("geo_longitude").as("longitude"),
-            col("geo_confidence").as("confidence")).as("geo")).as("location"),
-        col("source_type"), col("categories"),
-        col("is_family_event"), col("is_child_focused"), col("admission_free")
-      )).as("event_json"))
-
-  /** S11/S12: timestamp-filtered, id-ordered, 200-row-chunked JSON export
-    * (`export/service.py:77-163`): `maxRecordsPerFile` is the distributed
-    * chunker.
-    */
-  def export(canonical: DataFrame, outDir: String, createdAfter: Option[java.sql.Timestamp] = None,
-      chunkSize: Int = 200): Unit = {
-    val filtered = createdAfter.fold(canonical)(ts => canonical.where(col("created_at") >= lit(ts)))
-    filtered.orderBy("id")
-      .write.mode("overwrite")
-      .option("maxRecordsPerFile", chunkSize)
-      .json(outDir)
-  }
-
-  /** S11 full-parity chunked export (`export/service.py:77-133`): one JSON
-    * DOCUMENT per part — `{"events":[...],"metadata":{...}}` — named
-    * `export_<stamp>_part_<N>.json`, with the reference's metadata block
-    * (exportedAt, eventCount, part, totalParts, filters). Empty input still
-    * yields part 1 with an empty events array (service.py:93-108).
-    *
-    * `stamp`/`exportedAt` are caller-supplied (§7.5 determinism — no wall
-    * clock inside jobs).
-    *
-    * DISTRIBUTED write: part payloads never cross the driver. The only
-    * driver passes are the (part, event_count) metadata collect — two longs
-    * per part — and the per-partition count array for the global numbering;
-    * the events-array strings are written by the EXECUTORS holding them,
-    * through the Hadoop FileSystem API (so `outDir` may be any supported
-    * scheme — file://, hdfs://, s3a://; the round-2 Checkpoints lesson:
-    * `java.nio.file` silently breaks on object stores). The global id order
-    * that assigns events to parts is range-repartition + in-partition sort +
-    * cumulative per-partition offsets (r6 — the previous Window.orderBy(id)
-    * row_number forced every row through ONE task); the 100 TB bulk path
-    * remains [[export]]'s `maxRecordsPerFile` writer.
-    *
-    * @param eventsJson (id, event_json) — event_json from [[toInputFormat]]
-    * @return (filename, part, event_count) per written file
-    */
-  def exportWithMetadata(eventsJson: DataFrame, outDir: String, stamp: String,
-      exportedAt: String, chunkSize: Int = 200,
-      filtersJson: String = "null"): DataFrame = {
-    val spark = eventsJson.sparkSession
-    import spark.implicits._
-    import scala.jdk.CollectionConverters._
-    // Ship only the session's NON-DEFAULT hadoop conf entries to executors
-    // (credentials/endpoint overrides a user set via spark.hadoop.*); the
-    // executor rebuilds defaults from its own classpath. Keeps the closure
-    // tiny instead of serializing the full ~1k-entry Configuration.
-    val hadoopDefaults = new org.apache.hadoop.conf.Configuration()
-    val confOverrides: Array[(String, String)] =
-      spark.sessionState.newHadoopConf().asScala
-        .collect { case e if hadoopDefaults.get(e.getKey) != e.getValue =>
-          (e.getKey, e.getValue) }
-        .toArray
-    def fsFor(dir: String): (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) = {
-      val conf = new org.apache.hadoop.conf.Configuration()
-      confOverrides.foreach { case (k, v) => conf.set(k, v) }
-      val p = new org.apache.hadoop.fs.Path(dir)
-      (p.getFileSystem(conf), p)
-    }
-    def partContent(arr: String, n: Long, part: Long, totalParts: Long): String =
-      s"""{"events":[$arr],"metadata":{"exportedAt":"$exportedAt","eventCount":$n,"part":$part,"totalParts":$totalParts,"filters":$filtersJson}}"""
-    def writeFile(fs: org.apache.hadoop.fs.FileSystem, base: org.apache.hadoop.fs.Path,
-        name: String, content: String): Unit = {
-      val out = fs.create(new org.apache.hadoop.fs.Path(base, name), true)
-      try out.write(content.getBytes("UTF-8")) finally out.close()
-    }
-
-    // Distributed global numbering (no single-partition stage):
-    // range-repartition + in-partition sort gives globally ordered
-    // partitions; the per-partition counts (one tiny driver array) turn each
-    // row's in-partition index into its global row number. Ids are the
-    // export key (unique), so the resulting numbering is the same total
-    // order the previous Window.orderBy(id) row_number produced — without
-    // funnelling every row through one task. The checkpoint materializes the
-    // sort once for its two consumers (count pass + numbering pass).
-    val sorted = eventsJson
-      .select(col("id"), col("event_json"))
-      .repartitionByRange(col("id"))
-      .sortWithinPartitions(col("id"))
-      .select(spark_partition_id().as("__pid"), col("event_json"))
-      .localCheckpoint(true)
-    val pidCounts = sorted.groupBy("__pid").count()
-      .as[(Int, Long)].collect().sortBy(_._1)
-    val offsets: Map[Int, Long] = {
-      var acc = 0L
-      pidCounts.map { case (pid, n) => val o = (pid, acc); acc += n; o }.toMap
-    }
-    val numbered = sorted.as[(Int, String)]
-      .mapPartitions { it =>
-        var i = 0L
-        it.map { case (pid, json) => i += 1L; (offsets(pid) + i, json) }
-      }.toDF("__rn", "event_json")
-    // Within-part event order must be the reference's id order contractually:
-    // collect_list does NOT guarantee encounter order through the groupBy
-    // shuffle, so collect (rn, json) structs and sort_array them — struct
-    // order = rn order — before joining.
-    val parts = numbered
-      .withColumn("__part", (((col("__rn") - 1) / chunkSize) + 1).cast("long"))
-      .groupBy(col("__part").as("part"))
-      .agg(array_join(
-          transform(sort_array(collect_list(struct(col("__rn"), col("event_json")))),
-            s => s.getField("event_json")), ",").as("events_arr"),
-        count(lit(1)).as("event_count"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Metadata pass: ONLY (part, event_count) longs reach the driver.
-    val counts = parts.select($"part", $"event_count").as[(Long, Long)]
-      .collect().sortBy(_._1)
-    val totalParts = math.max(1L, counts.length.toLong)
-
-    val (fsDriver, basePath) = fsFor(outDir)
-    fsDriver.mkdirs(basePath)
-    if (counts.isEmpty) {
-      // reference semantics: an empty export still writes part 1
-      writeFile(fsDriver, basePath, s"export_${stamp}_part_1.json",
-        partContent("", 0L, 1L, 1L))
-    } else {
-      val (dirV, stampV, tp) = (outDir, stamp, totalParts) // avoid capturing `this`
-      parts.select($"part", $"events_arr", $"event_count").as[(Long, String, Long)]
-        .foreachPartition { (it: Iterator[(Long, String, Long)]) =>
-          if (it.hasNext) {
-            val (fs, base) = fsFor(dirV)
-            it.foreach { case (part, arr, n) =>
-              writeFile(fs, base, s"export_${stampV}_part_$part.json",
-                partContent(arr, n, part, tp))
-            }
-          }
-        }
-    }
-    parts.unpersist()
-    val written =
-      if (counts.isEmpty) Seq((s"export_${stamp}_part_1.json", 1L, 0L))
-      else counts.toSeq.map { case (part, n) => (s"export_${stamp}_part_$part.json", part, n) }
-    written.toDF("filename", "part", "event_count")
   }
 }

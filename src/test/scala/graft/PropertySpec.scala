@@ -57,8 +57,8 @@ class PropertySpec extends SparkSpec {
       }
       val df = rows.toDF("t", "ta", "tb").select(
         $"t",
-        Hashing.bandKeys(Hashing.minHash(Hashing.shingleHashes(split($"ta", " "), 1), cfg.lsh.numHashes), cfg.lsh.bands, cfg.lsh.rowsPerBand).as("ba"),
-        Hashing.bandKeys(Hashing.minHash(Hashing.shingleHashes(split($"tb", " "), 1), cfg.lsh.numHashes), cfg.lsh.bands, cfg.lsh.rowsPerBand).as("bb"))
+        Hashing.bandKeys(Oracles.minHash(Hashing.shingleHashes(split($"ta", " "), 1), cfg.lsh.numHashes), cfg.lsh.bands, cfg.lsh.rowsPerBand).as("ba"),
+        Hashing.bandKeys(Oracles.minHash(Hashing.shingleHashes(split($"tb", " "), 1), cfg.lsh.numHashes), cfg.lsh.bands, cfg.lsh.rowsPerBand).as("bb"))
       val hits = df.select((size(array_intersect($"ba", $"bb")) > 0).as("hit"))
         .where($"hit").count()
       val recall = hits.toDouble / trials
@@ -79,8 +79,8 @@ class PropertySpec extends SparkSpec {
       val a = (0 until shared).map(i => s"s$i") ++ (0 until ua).map(i => s"a$i")
       val b = (0 until shared).map(i => s"s$i") ++ (0 until ub).map(i => s"b$i")
       val row = Seq((a.mkString(" "), b.mkString(" "))).toDF("ta", "tb").select(
-        Hashing.minHash(Hashing.shingleHashes(split($"ta", " "), 1), 256).as("ma"),
-        Hashing.minHash(Hashing.shingleHashes(split($"tb", " "), 1), 256).as("mb"))
+        Oracles.minHash(Hashing.shingleHashes(split($"ta", " "), 1), 256).as("ma"),
+        Oracles.minHash(Hashing.shingleHashes(split($"tb", " "), 1), 256).as("mb"))
         .select(graft.operators.MinHashLsh.estJaccard($"ma", $"mb", 256).as("est"))
         .as[Double].collect()(0)
       val trueJ = shared.toDouble / (shared + ua + ub)

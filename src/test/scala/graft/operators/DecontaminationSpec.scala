@@ -32,9 +32,13 @@ class DecontaminationSpec extends SparkSpec {
 
   test("clean removes exactly the contaminated docs") {
     val grams = Decontamination.benchmarkGrams(bench, "text", n = 5)
-    val kept = Decontamination.clean(docs, "doc_id", "text", grams, n = 5)
+    val kept = graft.Oracles.clean(docs, "doc_id", "text", grams, n = 5)
       .select("doc_id").as[Long].collect().sorted.toSeq
     assert(kept == Seq(2L, 4L))
+    // report flags exactly the complement
+    val flagged = Decontamination.report(docs, "doc_id", "text", grams, n = 5)
+      .select("doc_id").as[Long].collect().sorted.toSeq
+    assert(flagged == Seq(1L, 3L))
   }
 
   test("broadcast and shuffle paths agree") {
@@ -51,10 +55,14 @@ class DecontaminationSpec extends SparkSpec {
       when($"doc_id" === 1L, lit(null).cast("long")).otherwise($"doc_id").as("doc_id"),
       $"text")
     val grams = Decontamination.benchmarkGrams(bench, "text", 5)
-    val kept = Decontamination.clean(withNull, "doc_id", "text", grams, 5)
+    val kept = graft.Oracles.clean(withNull, "doc_id", "text", grams, 5)
       .select("doc_id").as[Option[Long]].collect().toSet
     // doc 1 (now null-id) and doc 3 are contaminated; 2 and 4 stay
     assert(kept == Set(Some(2L), Some(4L)), s"null-id contaminated row survived: $kept")
+    // report flags the null-id row too, under a null id
+    val flagged = Decontamination.report(withNull, "doc_id", "text", grams, 5)
+      .select("doc_id").as[Option[Long]].collect().toSet
+    assert(flagged == Set(None, Some(3L)), s"report lost the null-id contaminated row: $flagged")
   }
 
   test("blank docs share no phantom empty-token gram at n = 1") {
@@ -62,8 +70,8 @@ class DecontaminationSpec extends SparkSpec {
     val blankDocs = Seq((1L, ""), (2L, "  \t "), (3L, "real content")).toDF("doc_id", "text")
     val grams = Decontamination.benchmarkGrams(blankBench, "text", 1)
     assert(grams.count() == 0, "a blank benchmark row must contribute no grams")
-    val kept = Decontamination.clean(blankDocs, "doc_id", "text", grams, 1)
-    assert(kept.count() == 3, "blank docs share no actual content — none may be removed")
+    val hits = Decontamination.report(blankDocs, "doc_id", "text", grams, 1)
+    assert(hits.count() == 0, "blank docs share no actual content — none may be flagged")
   }
 
   test("non-space whitespace at the text boundary emits no phantom empty token") {

@@ -3,11 +3,14 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Evaluation harness (SURVEY.md §2.9 Q15-Q17; reference
-  * `/root/reference/src/event_dedup/evaluation/metrics.py:35-83` and
-  * `evaluation/harness.py:192-230`).
+/** Reference P/R/F1 harness (SURVEY.md §2.9 Q15-Q17; reference
+  * `event_dedup/evaluation/metrics.py:35-83` and
+  * `evaluation/harness.py:192-230`), kept test-side as the oracle of the
+  * confusion arithmetic that q12 (Q17) and q38 (Q16) inline: no entry point
+  * calls it, `EvaluationSpec` checks it against the reference's cases and
+  * q12 against it.
   *
-  * Both entry points are SINGLE-PASS over the pair sets (round-1 verdict
+  * Both functions are SINGLE-PASS over the pair sets (round-1 verdict
   * item: the set-op-join form ran 4 driver actions per call and a serial
   * per-threshold loop — 32 scans of the pair data for one sweep). The
   * confusion matrix is one left join truth→predictions plus one conditional

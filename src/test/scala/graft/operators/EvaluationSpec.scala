@@ -1,12 +1,14 @@
 package graft.operators
 
-import graft.SparkSpec
+import graft.{SparkEntry, SparkSpec}
 import org.apache.spark.sql.functions._
 
 /** Single-pass evaluation harness: reference confusion arithmetic
   * (`evaluation/metrics.py:35-83`; P=0.5/R=1.0/F1=0.667 case from
   * `.planning/phases/01/01-03-SUMMARY.md:106`) plus plan audits that the
   * round-1 multi-action shape is gone: ONE aggregate, no per-threshold jobs.
+  * `Evaluation` is the test-side oracle of q12's inlined confusion
+  * arithmetic; the last test holds q12 to it.
   */
 class EvaluationSpec extends SparkSpec {
   import spark.implicits._
@@ -126,5 +128,30 @@ class EvaluationSpec extends SparkSpec {
     // one global aggregate + (possibly) one for the distinct() on pred
     assert(aggs <= 2, df.queryExecution.optimizedPlan.toString)
     assert(df.count() == 1)
+  }
+
+  test("q12's inlined confusion arithmetic equals pairMetrics over the same pair set") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-eval-q12").toString
+    // doc 250 sits past q12's doc_id < 200 cut and must not count
+    val docs = Seq((1L, 100, "en"), (2L, 101, "en"), (3L, 104, "en"), (4L, 102, "de"),
+      (5L, 120, "de"), (6L, 121, "de"), (7L, 107, "en"), (250L, 100, "en"))
+      .toDF("doc_id", "n_chars", "lang")
+    docs.write.parquet(s"$dir/documents.parquet")
+    val got = SparkEntry.queries("q12_prf_metrics")(spark, dir).collect()(0)
+    // q12's prediction (|Δn_chars| ≤ 2) and truth (same lang ∧ |Δn_chars| ≤ 5)
+    // as the pair frames pairMetrics takes
+    val d = docs.where($"doc_id" < 200)
+    val pairs = d.toDF("url_a", "nc_a", "lang_a")
+      .join(d.toDF("url_b", "nc_b", "lang_b"), $"url_a" < $"url_b")
+    val truth = pairs.select($"url_a", $"url_b",
+      when($"lang_a" === $"lang_b" && abs($"nc_a" - $"nc_b") <= 5, "same")
+        .otherwise("different").as("label"))
+    val pred = pairs.where(abs($"nc_a" - $"nc_b") <= 2).select("url_a", "url_b")
+    val want = Evaluation.pairMetrics(pred, truth).collect()(0)
+    // the fixture fills every cell: tp {1-2, 5-6}, fp {1-4, 2-4, 3-4}, fn {1-3, 2-3, 3-7}
+    assert((want.getAs[Long]("tp"), want.getAs[Long]("fp"), want.getAs[Long]("fn")) == ((2L, 3L, 3L)))
+    Seq("tp", "fp", "fn").foreach(c => assert(got.getAs[Long](c) == want.getAs[Long](c), c))
+    Seq("precision", "recall").foreach(c =>
+      assert(math.abs(got.getAs[Double](c) - want.getAs[Double](c)) < 1e-6, c))
   }
 }

@@ -1,12 +1,10 @@
 package graft.operators
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
-/** Labeling-session surface vs the reference CLI's behavior
-  * (labeling_tool.py): already-labeled pairs never re-enter the queue,
-  * only same/different verdicts persist, re-labeling is a no-op, and the
-  * stats block counts labels exactly.
+/** Labeling queue vs the reference CLI's behavior (labeling_tool.py):
+  * already-labeled pairs never re-enter the queue, and a pair is
+  * pre-suggested only on a real title similarity at the threshold.
   */
 class LabelingSpec extends SparkSpec {
   import spark.implicits._
@@ -26,90 +24,10 @@ class LabelingSpec extends SparkSpec {
     assert(q.toSeq == Seq(("a", "c", true), ("b", "c", false), ("c", "d", false)))
   }
 
-  test("applyLabels keeps only same/different and never overwrites (labeling_tool.py:107-173)") {
-    // seq = the CLI's prompt order: conflicting verdicts for one pair
-    // resolve first-answer-wins, deterministically.
-    val session = Seq(
-      ("a", "c", "same", 1L),       // new, persists
-      ("b", "c", "skip", 2L),       // skip never persists
-      ("a", "b", "different", 3L),  // already labeled 'same' — reference skips it
-      ("c", "d", "different", 4L), ("c", "d", "same", 5L) // first answer wins
-    ).toDF("id_a", "id_b", "label", "seq")
-    val folded = Labeling.applyLabels(truth, session)
-    assert(folded.count() == 3)
-    val ab = folded.where($"id_a" === "a" && $"id_b" === "b")
-      .select("label").as[String].collect()
-    assert(ab.toSeq == Seq("same"), "pre-existing label must win")
-    val cd = folded.where($"id_a" === "c" && $"id_b" === "d")
-      .select("label").as[String].collect()
-    assert(cd.toSeq == Seq("different"), "first answer (lowest seq) must win")
-    assert(folded.where($"label" === "skip").count() == 0)
-    // idempotent: folding the same session again adds nothing
-    assert(Labeling.applyLabels(folded, session).count() == 3)
-    // queue shrinks to exactly the unlabeled remainder
-    val left = Labeling.queue(candidates, folded)
-      .select("id_a", "id_b").as[(String, String)].collect()
-    assert(left.toSeq == Seq(("b", "c")))
-  }
-
-  test("applyLabels with seq: tied conflicting seqs fail fast; session-only columns never persist") {
-    // two conflicting verdicts sharing seq 1 — prompt order cannot resolve
-    val tied = Seq(
-      ("x", "y", "same", 1L, true),
-      ("x", "y", "different", 1L, false)
-    ).toDF("id_a", "id_b", "label", "seq", "suggested")
-    val err = intercept[IllegalArgumentException] {
-      Labeling.applyLabels(truth, tied)
-    }
-    assert(err.getMessage.contains("seq"))
-    // orderable resolution drops the session-only seq/suggested columns
-    val ok = Seq(("x", "y", "same", 2L, true)).toDF("id_a", "id_b", "label", "seq", "suggested")
-    val out = Labeling.applyLabels(truth, ok)
-    assert(!out.columns.contains("seq") && !out.columns.contains("suggested"),
-      s"session-only columns leaked into ground truth: ${out.columns.toSeq}")
-    assert(out.count() == 2)
-  }
-
   test("queue: a null title_sim reads as not-suggested, never a null flag") {
     val cands = Seq(("p", "q", null.asInstanceOf[java.lang.Double]))
       .toDF("id_a", "id_b", "title_sim")
     val q = Labeling.queue(cands, truth).select("suggested").collect()
     assert(q.length == 1 && q(0).getBoolean(0) == false)
-  }
-
-  test("applyLabels without a seq column: exact duplicates collapse, conflicts fail fast") {
-    val dupOnly = Seq(("a", "c", "same"), ("a", "c", "same"))
-      .toDF("id_a", "id_b", "label")
-    assert(Labeling.applyLabels(truth, dupOnly).count() == 2)
-    val conflict = Seq(("c", "d", "same"), ("c", "d", "different"))
-      .toDF("id_a", "id_b", "label")
-    val e = intercept[IllegalArgumentException] {
-      Labeling.applyLabels(truth, conflict)
-    }
-    assert(e.getMessage.contains("conflicting verdicts"))
-  }
-
-  test("applyLabels without seq: unorderable aux columns don't crash the fold") {
-    // a session frame carrying a MAP metadata column cannot feed the
-    // min(struct) deterministic reduce (maps have no total order) — the
-    // fold must fall back to a row_number over the ORDERABLE subset, not
-    // AnalysisException, and stay deterministic wherever an orderable
-    // column distinguishes the duplicates
-    val session = Seq(("a", "c", "same", "note-x"), ("a", "c", "same", "note-y"))
-      .toDF("id_a", "id_b", "label", "note")
-      .withColumn("meta", map(lit("src"), lit("cli")))
-    val folded = Labeling.applyLabels(truth, session)
-    assert(folded.count() == 2, "duplicates with a map column must collapse")
-    val note = folded.where($"id_a" === "a" && $"id_b" === "c")
-      .select("note").as[String].collect().toSeq
-    assert(note == Seq("note-x"),
-      s"survivor must be deterministic over the orderable columns: $note")
-  }
-
-  test("stats counts labels (labeling_tool.py:179-207)") {
-    val gt = Seq(("a", "b", "same"), ("a", "c", "same"), ("c", "d", "different"))
-      .toDF("id_a", "id_b", "label")
-    val row = Labeling.stats(gt).as[(Long, Long, Long)].head()
-    assert(row == ((3L, 2L, 1L)))
   }
 }

@@ -11,11 +11,8 @@ class MultimodalSpec extends SparkSpec {
 
   test("image decode recovers exact dimensions and gray level from real PNG bytes") {
     val png = Multimodal.encodeGrayPng(20, 13, 137)
-    val Some((w, h, gray, feat)) = Multimodal.decodeImage(png)
+    val Some((w, h, gray)) = Multimodal.decodeImage(png)
     assert(w == 20 && h == 13 && gray == 137)
-    assert(feat.length == 16)
-    // solid image: every mean-pooled cell is exactly gray/255
-    feat.foreach(f => assert(math.abs(f - 137f / 255f) < 1e-6f))
   }
 
   test("image decode: alpha is not luminance, high bit depths and palettes normalize to 0..255") {
@@ -28,15 +25,13 @@ class MultimodalSpec extends SparkSpec {
     // opaque black RGBA: averaging the alpha band in would report gray ~64
     val argb = new BufferedImage(8, 8, BufferedImage.TYPE_INT_ARGB)
     for (y <- 0 until 8; x <- 0 until 8) argb.setRGB(x, y, 0xFF000000)
-    val Some((_, _, gBlack, featBlack)) = Multimodal.decodeImage(png(argb))
+    val Some((_, _, gBlack)) = Multimodal.decodeImage(png(argb))
     assert(gBlack == 0, s"opaque black RGBA must decode to gray 0, got $gBlack")
-    featBlack.foreach(f => assert(f == 0f))
     // 16-bit gray at full scale: samples reach 65535 and must rescale to 255
     val u16 = new BufferedImage(8, 8, BufferedImage.TYPE_USHORT_GRAY)
     for (y <- 0 until 8; x <- 0 until 8) u16.getRaster.setSample(x, y, 0, 65535)
-    val Some((_, _, g16, feat16)) = Multimodal.decodeImage(png(u16))
+    val Some((_, _, g16)) = Multimodal.decodeImage(png(u16))
     assert(g16 == 255, s"full-scale 16-bit gray must decode to 255, got $g16")
-    feat16.foreach(f => assert(math.abs(f - 1f) < 1e-3f))
     // indexed PNG: raster samples are palette indices, not intensities —
     // palette slot 3 holds pure white, so the decoded gray must be 255
     val pal = {
@@ -45,17 +40,15 @@ class MultimodalSpec extends SparkSpec {
     }
     val idx = new BufferedImage(8, 8, BufferedImage.TYPE_BYTE_INDEXED, pal)
     for (y <- 0 until 8; x <- 0 until 8) idx.getRaster.setSample(x, y, 0, 3)
-    val Some((_, _, gIdx, _)) = Multimodal.decodeImage(png(idx))
+    val Some((_, _, gIdx)) = Multimodal.decodeImage(png(idx))
     assert(gIdx == 255, s"indexed white must decode to gray 255, got $gIdx")
   }
 
   test("audio decode recovers exact duration and RMS from real WAV bytes") {
     val wav = Multimodal.encodeSquareWav(880, 1500)
-    val Some((durMs, rms, feat)) = Multimodal.decodeWav(wav)
+    val Some((durMs, rms)) = Multimodal.decodeWav(wav)
     assert(durMs == 110L) // 880 samples @ 8 kHz
     assert(rms == 1500)   // square wave: RMS == amplitude exactly
-    assert(feat.length == 16)
-    feat.foreach(f => assert(math.abs(f - 1500f / 32768f) < 1e-6f))
   }
 
   test("video decode recovers exact frame count, dims and per-frame gray from real GIF bytes") {
@@ -80,7 +73,7 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("truncated payloads of a recognized format decode to None, and flow through " +
-    "extractFeatures as zero vectors instead of failing the task") {
+    "decodeMedia as zero attributes instead of failing the task") {
     // Truncation after the magic bytes is the dangerous case: the codec is
     // selected (so ImageIO.read does NOT return null) and then throws mid-parse.
     val png = Multimodal.encodeGrayPng(20, 13, 137)
@@ -110,11 +103,8 @@ class MultimodalSpec extends SparkSpec {
       .withColumn("meta", struct(lit(null).cast("int").as("width"),
         lit(null).cast("int").as("height"), lit(null).cast("long").as("duration_ms"),
         lit(null).cast("string").as("mime")))
-    val feats = Multimodal.extractFeatures(df, dim = 16).collect().sortBy(_.media_id)
-    assert(feats.length == 5)
-    (0 to 3).foreach(i => assert(feats(i).feature.forall(_ == 0f)))
-    feats(4).feature.foreach(v => assert(math.abs(v - 137f / 255f) < 1e-6f))
     val decoded = Multimodal.decodeMedia(df).collect().sortBy(_.media_id)
+    assert(decoded.length == 5)
     (0 to 3).foreach { i =>
       val r = decoded(i)
       assert(r.width == 0 && r.height == 0 && r.gray == 0 && r.amp == 0 &&
@@ -150,31 +140,5 @@ class MultimodalSpec extends SparkSpec {
           assert(r.amp == 0 && r.duration_ms == 0L)
       }
     }
-  }
-
-  test("extractFeatures: real image/audio/video features, deterministic across runs") {
-    val media = Multimodal.syntheticMedia(spark, 51)
-    val feats = Multimodal.extractFeatures(media, dim = 16).collect().sortBy(_.media_id)
-    assert(feats.length == 51)
-    assert(feats.forall(_.feature.length == 16))
-    feats.foreach { f =>
-      (f.media_id % 3) match {
-        case 0 => // solid image: all 16 grid cells == gray/255
-          val g = ((f.media_id * 37) % 256).toFloat / 255f
-          f.feature.foreach(v => assert(math.abs(v - g) < 1e-6f))
-        case 1 => // square wave: every RMS window == amp/32768
-          val a = (1000 + (f.media_id % 50) * 100).toFloat / 32768f
-          f.feature.foreach(v => assert(math.abs(v - a) < 1e-6f))
-        case _ => // video: first `frames` slots are per-frame grays, rest zero-padded
-          val frames = 2 + (f.media_id % 4).toInt
-          (0 until frames).foreach { fr =>
-            val g = ((f.media_id * 31 + fr * 17) % 256).toFloat / 255f
-            assert(math.abs(f.feature(fr) - g) < 1e-6f)
-          }
-          (frames until 16).foreach(i => assert(f.feature(i) == 0f))
-      }
-    }
-    val again = Multimodal.extractFeatures(media, dim = 16).collect().sortBy(_.media_id)
-    assert(feats.zip(again).forall { case (a, b) => a.feature.toSeq == b.feature.toSeq })
   }
 }

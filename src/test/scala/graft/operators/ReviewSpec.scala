@@ -6,61 +6,9 @@ import org.apache.spark.sql.functions._
 class ReviewSpec extends SparkSpec {
   import spark.implicits._
 
-  // cluster 1: {1,2,3} chain 1-2-3; cluster 10: {10,11}; singleton 20
-  private def labels = Seq((1L, 1L), (2L, 1L), (3L, 1L), (10L, 10L), (11L, 10L), (20L, 20L))
-    .toDF("node", "component")
-  private def edges = Seq((1L, 2L, 0.9), (2L, 3L, 0.85), (10L, 11L, 0.95))
-    .toDF("src", "dst", "weight")
-
-  test("Q13 split: detaching a bridge node splits the chain") {
-    val (newLabels, remaining, audit) = Review.splitNode(labels, edges, 2L)
-    val got = newLabels.as[(Long, Long)].collect().toMap
-    // 2 detached; 1 and 3 lose their bridge → three separate clusters
-    assert(got(2L) == 2L && got(1L) == 1L && got(3L) == 3L)
-    // untouched clusters stay
-    assert(got(10L) == 10L && got(11L) == 10L && got(20L) == 20L)
-    assert(remaining.count() == 1) // only the 10-11 edge survives
-    assert(audit.collect()(0).getAs[String]("action") == "split")
-  }
-
-  test("Q13 split: detaching a leaf keeps the rest connected") {
-    val (newLabels, _, _) = Review.splitNode(labels, edges, 3L)
-    val got = newLabels.as[(Long, Long)].collect().toMap
-    assert(got(1L) == 1L && got(2L) == 1L && got(3L) == 3L)
-  }
-
-  test("Q14 merge: clusters relabel to the min target, forced edge recorded") {
-    val (newLabels, newEdges, _) = Review.mergeClusters(labels, edges, 1L, 10L)
-    val got = newLabels.as[(Long, Long)].collect().toMap
-    assert(Seq(1L, 2L, 3L, 10L, 11L).forall(got(_) == 1L))
-    assert(got(20L) == 20L)
-    assert(newEdges.where($"tier" === "forced").count() == 1)
-  }
-
-  test("Q14 merge: a nonexistent component id fails fast instead of minting a phantom forced edge") {
-    val err = intercept[IllegalArgumentException] {
-      Review.mergeClusters(labels, edges, 999999L, 10L)
-    }
-    assert(err.getMessage.contains("999999"))
-  }
-
-  test("Q14 merge: a weightless (src, dst) edge frame merges instead of throwing") {
-    val bare = edges.select("src", "dst") // the documented optional-weight shape
-    val (_, newEdges, _) = Review.mergeClusters(labels, bare, 1L, 10L)
-    assert(newEdges.where($"tier" === "forced").count() == 1)
-  }
-
   test("Q9 review queue: page below 1 fails at the API boundary") {
     val clusters = Seq((1L, 2L, false, 0.5)).toDF("component", "size", "flagged", "match_confidence")
     intercept[IllegalArgumentException] { Review.reviewQueue(clusters, page = 0, pageSize = 10) }
-  }
-
-  test("Q14 merge: chained merges preserve earlier forced-edge tiers") {
-    val (labels2, edges2, _) = Review.mergeClusters(labels, edges, 1L, 10L)
-    // second merge must NOT restamp the first merge's forced edge to 'match'
-    val (_, edges3, _) = Review.mergeClusters(labels2, edges2, 1L, 20L)
-    assert(edges3.where($"tier" === "forced").count() == 2,
-      "an earlier merge's forced edge lost its tier")
   }
 
   test("A2 decision cache: duplicate cache entries never multiply pair rows") {

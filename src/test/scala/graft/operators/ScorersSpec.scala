@@ -43,18 +43,21 @@ class ScorersSpec extends SparkSpec {
     da.crossJoin(db)
   }
 
+  // each signal is read off `scorePairs`, the scorer the q37 query runs
+  private def signal(a: Ev, b: Ev, cfg: GraftConfig, column: String): Double =
+    Scorers.scorePairs(pairDf(a, b), cfg).select(column).as[Double].collect()(0)
+
   private def dateS(a: Ev, b: Ev, cfg: DateConfig = DateConfig()): Double =
-    pairDf(a, b).select(Scorers.dateScore($"dates_a", $"dates_b", cfg)).as[Double].collect()(0)
+    signal(a, b, GraftConfig.default.copy(date = cfg), "date_score")
 
   private def geoS(a: Ev, b: Ev, cfg: GeoConfig = GeoConfig()): Double =
-    pairDf(a, b).select(Scorers.geoScore(
-      $"geo_latitude_a", $"geo_longitude_a", $"geo_confidence_a",
-      $"geo_latitude_b", $"geo_longitude_b", $"geo_confidence_b",
-      $"location_name_a", $"location_name_b", cfg)).as[Double].collect()(0)
+    signal(a, b, GraftConfig.default.copy(geo = cfg), "geo_score")
 
   private def titleS(a: Ev, b: Ev, cfg: TitleConfig = TitleConfig()): Double =
-    pairDf(a, b).select(Scorers.titleScore($"title_a", $"title_b",
-      $"source_type_a", $"source_type_b", cfg)).as[Double].collect()(0)
+    signal(a, b, GraftConfig.default.copy(title = cfg), "title_score")
+
+  private def descS(a: Ev, b: Ev): Double =
+    signal(a, b, GraftConfig.default, "description_score")
 
   private def d(ds: String*): Ev = Ev(dates = ds.map(x => DateEntry(date = Some(x))))
 
@@ -182,8 +185,7 @@ class ScorersSpec extends SparkSpec {
   test("title: cross-source-type pairs use the set-weighted override") {
     val a = Ev(title = Some("Preismaskenball"), source_type = Some("terminliste"))
     val b = Ev(title = Some("Preismaskenball mit Hemdglunker und Musikverein"), source_type = Some("artikel"))
-    val cross = pairDf(a, b).select(Scorers.titleScore($"title_a", $"title_b",
-      $"source_type_a", $"source_type_b")).as[Double].collect()(0)
+    val cross = titleS(a, b)
     val sameType = titleS(t("Preismaskenball"), t("Preismaskenball mit Hemdglunker und Musikverein"))
     assert(cross > sameType)
   }
@@ -191,10 +193,6 @@ class ScorersSpec extends SparkSpec {
   // ----- description_score (desc_scorer.py:12-29) -----
 
   test("description: both missing 0.5, one missing 0.4, else kernel") {
-    def descS(a: Ev, b: Ev): Double =
-      pairDf(a, b).select(Scorers.descriptionScore(
-        $"description_a", $"short_description_a",
-        $"description_b", $"short_description_b")).as[Double].collect()(0)
     assert(descS(Ev(), Ev()) == 0.5)
     assert(descS(Ev(description = Some("ein Text")), Ev()) == 0.4)
     assert(descS(Ev(description = Some("gleicher Text")), Ev(description = Some("gleicher Text"))) == 1.0)

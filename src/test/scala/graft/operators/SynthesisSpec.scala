@@ -108,7 +108,7 @@ class SynthesisSpec extends SparkSpec {
         Seq((30L, 31L, 0.2)) ++
         Seq((40L, 41L, 0.95))
       ).toDF("src", "dst", "weight")
-    val flags = Synthesis.coherence(labels, edges, cfg)
+    val flags = graft.Oracles.coherence(labels, edges, cfg)
       .select($"component", $"flagged").as[(Long, Boolean)].collect().toMap
     assert(flags(100L)) // size 20 > 15
     assert(flags(200L)) // avg weight 0.2 < 0.40
@@ -119,7 +119,7 @@ class SynthesisSpec extends SparkSpec {
   test("clusterConfidence: mean edge weight per cluster, absent for singletons") {
     val labels = Seq((1L, 1L), (2L, 1L), (3L, 1L), (9L, 9L)).toDF("node", "component")
     val edges = Seq((1L, 2L, 0.8), (2L, 3L, 0.6)).toDF("src", "dst", "weight")
-    val got = Synthesis.clusterConfidence(labels, edges)
+    val got = graft.Oracles.clusterConfidence(labels, edges)
       .as[(Long, Double)].collect().toMap
     assert(math.abs(got(1L) - 0.7) < 1e-12)
     assert(!got.contains(9L))
@@ -145,11 +145,11 @@ class SynthesisSpec extends SparkSpec {
       .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
 
     val edges = Decisions.matchEdges(decisions)
-    val coh = Synthesis.coherence(labels, edges, cfg)
+    val coh = graft.Oracles.coherence(labels, edges, cfg)
       .select($"component", $"flagged", $"avg_weight")
       .as[(Long, Boolean, Option[Double])].collect()
       .map(r => r._1 -> ((r._2, r._3))).toMap
-    val tiers = Synthesis.tierFlags(labels, decisions)
+    val tiers = graft.Oracles.tierFlags(labels, decisions)
       .as[(Long, Boolean)].collect().toMap
 
     coh.keys.foreach { c =>

@@ -2,65 +2,11 @@ package graft.streaming
 
 import graft.SparkSpec
 import graft.datagen.PagesGen
-import graft.operators.MinHashLsh
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
 class PagesStreamSpec extends SparkSpec {
   import spark.implicits._
-
-  test("S13: file-source stream signs new pages incrementally and resumes") {
-    val base = Files.createTempDirectory("graft-stream").toString
-    val in = s"$base/in"; val out = s"$base/out"; val ckpt = s"$base/ckpt"
-    new java.io.File(in).mkdirs()
-
-    // batch 1: first 100 pages
-    PagesGen.pages(spark, 100L).toDF().write.mode("append").parquet(in)
-    val q1 = PagesStream.signatureStream(spark, in, out, ckpt)
-    q1.awaitTermination()
-    val n1 = spark.read.parquet(out).count()
-    assert(n1 == 100)
-
-    // batch 2: 50 more pages arrive → only the new files are processed
-    spark.range(100L, 150L).map(id => PagesGen.pageOf(42L, id)).toDF()
-      .write.mode("append").parquet(in)
-    val q2 = PagesStream.signatureStream(spark, in, out, ckpt)
-    q2.awaitTermination()
-    val after = spark.read.parquet(out)
-    assert(after.count() >= 150)
-    // signatures present and valid
-    assert(after.where($"minhash".isNotNull).count() >= 140)
-    assert(after.columns.contains("batch_id"))
-  }
-
-  test("streaming exact-dedup emits first page per fingerprint (≡ batch distinct)") {
-    val base = Files.createTempDirectory("graft-dedup-stream").toString
-    val in = s"$base/in"; val out = s"$base/out"; val ckpt = s"$base/ckpt"
-    new java.io.File(in).mkdirs()
-
-    val pages = PagesGen.pages(spark, 200L).toDF()
-    pages.write.mode("append").parquet(in)
-    PagesStream.dedupStream(spark, in, out, ckpt, watermarkDelay = "1 hour")
-      .awaitTermination()
-
-    val got = spark.read.parquet(out)
-    // batch oracle: distinct content fingerprints over the same pages
-    val expected = pages
-      .select(graft.operators.TextAnalysis.fingerprint64(
-        graft.functions.TextFunctions.extractText($"html")).as("fp"))
-      .distinct().count()
-    assert(got.count() == expected, s"stream=${got.count()} batch=$expected")
-    assert(got.count() < 200, "planted exact dups must collapse")
-    assert(got.select("fp").distinct().count() == got.count())
-
-    // resume: a second batch of NEW pages only adds new fingerprints
-    spark.range(200L, 260L).map(id => PagesGen.pageOf(42L, id)).toDF()
-      .write.mode("append").parquet(in)
-    PagesStream.dedupStream(spark, in, out, ckpt, watermarkDelay = "1 hour")
-      .awaitTermination()
-    val after = spark.read.parquet(out)
-    assert(after.count() > got.count() && after.count() <= got.count() + 60)
-  }
 
   test("windowed host stats: append mode emits watermark-closed windows ≡ batch agg") {
     val base = Files.createTempDirectory("graft-window-stream").toString
@@ -96,117 +42,5 @@ class PagesStreamSpec extends SparkSpec {
     assert(gotSet == oracleSet,
       s"stream=${gotSet.size} cells, batch=${oracleSet.size}; " +
         s"missing=${(oracleSet -- gotSet).take(3)} extra=${(gotSet -- oracleSet).take(3)}")
-  }
-
-  test("hot bucket: per-key cap bounds the pair set and the drop counter surfaces it") {
-    val base = Files.createTempDirectory("graft-hot-stream").toString
-    val in = s"$base/in"; val out = s"$base/out"; val ckpt = s"$base/ckpt"
-    new java.io.File(in).mkdirs()
-
-    val cfg0 = graft.config.GraftConfig.default
-    val cfg = cfg0.copy(lsh = cfg0.lsh.copy(maxBucketSize = 3))
-    // 20 distinct urls with IDENTICAL html → identical minhash → every node
-    // lands in the same LSH buckets (one per band): a synthetic hot bucket.
-    val html = PagesGen.htmlOf("https://hot.example/p0",
-      "boilerplate text repeated across the whole hot bucket. " * 30, "en")
-    val rows = (0 until 20).map(i => (s"https://hot.example/p$i",
-      new java.sql.Timestamp(1735689600000L + i * 1000L), html,
-      null.asInstanceOf[String], "en"))
-    rows.toDF("url", "warc_ts", "html", "text", "lang").write.mode("append").parquet(in)
-
-    val dropped = spark.sparkContext.longAccumulator("graft.lsh.dropped_candidates")
-    PagesStream.candidatePairStream(spark, in, out, ckpt, cfg,
-      stateTtl = "365 days", droppedCounter = Some(dropped)).awaitTermination()
-
-    val pairs = spark.read.parquet(out).select($"node_a", $"node_b").distinct()
-      .as[(Long, Long)].collect().toSet
-    val nodesInPairs = pairs.flatMap(p => Set(p._1, p._2))
-    // cap=3 → at most 3 nodes survive per bucket (same 3 in every bucket:
-    // deterministic smallest-node-first order) → C(3,2)=3 distinct pairs
-    assert(nodesInPairs.size == 3, s"got ${nodesInPairs.size} nodes")
-    assert(pairs.size == 3, s"got ${pairs.size} pairs")
-    // every distinct band key turned away the other 17 nodes — observable
-    val sigs = MinHashLsh.signatures(
-      rows.toDF("url", "warc_ts", "html", "text", "lang")
-        .select($"url", graft.functions.TextFunctions.extractText($"html").as("extracted_text")),
-      cfg)
-    val distinctKeys = sigs.where($"minhash".isNotNull)
-      .select(explode(graft.functions.Hashing.bandKeys(
-        $"minhash", cfg.lsh.bands, cfg.lsh.rowsPerBand)).as("key"))
-      .select("key").distinct().count()
-    assert(dropped.value == distinctKeys * 17,
-      s"dropped=${dropped.value}, keys=$distinctKeys")
-  }
-
-  test("a NULL warc_ts row cannot kill the candidate stream (dropped; the rest still pairs)") {
-    val base = Files.createTempDirectory("graft-nullts-stream").toString
-    val in = s"$base/in"; val out = s"$base/out"; val ckpt = s"$base/ckpt"
-    new java.io.File(in).mkdirs()
-
-    val cfg = graft.config.GraftConfig.default
-    // identical html → identical minhash → the two timestamped pages are a
-    // guaranteed candidate pair; the third row has NO event time. A null
-    // event time passes the late-data predicate (null ≠ late) and reaches
-    // the state function — pre-guard, `_.ts.getTime` NPE'd there and the
-    // whole query died on one dirty crawl row.
-    val html = PagesGen.htmlOf("https://nt.example/p0",
-      "near duplicate body shared by every row of this spec. " * 30, "en")
-    Seq(
-      ("https://nt.example/p1", new java.sql.Timestamp(1735689600000L), html,
-        null.asInstanceOf[String], "en"),
-      ("https://nt.example/p2", new java.sql.Timestamp(1735689601000L), html,
-        null.asInstanceOf[String], "en"),
-      ("https://nt.example/pnull", null.asInstanceOf[java.sql.Timestamp], html,
-        null.asInstanceOf[String], "en"))
-      .toDF("url", "warc_ts", "html", "text", "lang")
-      .write.mode("append").parquet(in)
-
-    PagesStream.candidatePairStream(spark, in, out, ckpt, cfg, stateTtl = "365 days")
-      .awaitTermination() // pre-guard: StreamingQueryException (NPE in state fn)
-
-    val pairs = spark.read.parquet(out).select($"node_a", $"node_b").distinct()
-      .as[(Long, Long)].collect().toSet
-    assert(pairs.size == 1, s"expected exactly the p1-p2 pair, got $pairs")
-    val nullNode = graft.operators.MinHashLsh.signatures(
-      Seq(("https://nt.example/pnull", html))
-        .toDF("url", "html")
-        .select($"url", graft.functions.TextFunctions.extractText($"html").as("extracted_text")),
-      cfg).select($"node").as[Long].head()
-    assert(!pairs.head.productIterator.contains(nullNode),
-      "the null-ts row must not enter watermarked state")
-  }
-
-  test("flatMapGroupsWithState candidate stream ≡ batch LSH candidates across two batches") {
-    val base = Files.createTempDirectory("graft-cand-stream").toString
-    val in = s"$base/in"; val out = s"$base/out"; val ckpt = s"$base/ckpt"
-    new java.io.File(in).mkdirs()
-
-    val cfg = graft.config.GraftConfig.default
-    val all = PagesGen.pages(spark, 300L).toDF().cache()
-    val batchA = all.where(xxhash64($"url") % 2 === 0)
-    val batchB = all.where(xxhash64($"url") % 2 =!= 0)
-
-    // long TTL: no state may expire between the two drains
-    batchA.write.mode("append").parquet(in)
-    PagesStream.candidatePairStream(spark, in, out, ckpt, cfg, stateTtl = "365 days")
-      .awaitTermination()
-    batchB.write.mode("append").parquet(in)
-    PagesStream.candidatePairStream(spark, in, out, ckpt, cfg, stateTtl = "365 days")
-      .awaitTermination()
-
-    val streamed = spark.read.parquet(out)
-      .select($"node_a", $"node_b").distinct()
-      .as[(Long, Long)].collect().toSet
-    // batch oracle: the band self-join over the SAME corpus (PagesGen has no
-    // hot buckets at n=300, so neither side's cap kicks in)
-    val sigs = MinHashLsh.signatures(
-      all.select($"url", graft.functions.TextFunctions.extractText($"html").as("extracted_text")),
-      cfg)
-    val expected = MinHashLsh.lshCandidates(sigs, cfg)
-      .as[(Long, Long)].collect().toSet
-    assert(streamed == expected,
-      s"stream=${streamed.size} batch=${expected.size}; " +
-        s"missing=${(expected -- streamed).take(3)} extra=${(streamed -- expected).take(3)}")
-    assert(streamed.nonEmpty, "planted near-dups must surface as candidates")
   }
 }
