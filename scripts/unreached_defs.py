@@ -1,12 +1,14 @@
 #!/usr/bin/env python3
-"""List public `def`s in src/main that no main or perfbench source calls.
+"""List public `def`s and `val`s in src/main that no main or perfbench
+source reads.
 
 Comments and string text are stripped first, so a scaladoc link or a log
 message does not count as a caller (`$name` and `${...}` splices are kept).
-A def is reached when its name appears outside imports in its own file
-other than on its `def` line, or in another file that reaches its owner:
-`Owner.name`, an import of `Owner`'s members, or any use at all when the
-owner is a class.
+A def or val is reached when its name appears outside imports in its own
+file other than on the line that declares it, or heads an import there
+(`import spark.implicits._`), or appears in another file that reaches its
+owner: `Owner.name`, an import of `Owner`'s members, or any use at all when
+the owner is a class.
 Overrides are called by Spark, not by name, and are skipped. Deleting an
 unreached def can leave its helpers unreached, so rerun after deleting.
 Exits 1 on any unreached name that is not in ALLOWED.
@@ -24,9 +26,10 @@ ALLOWED = {
     "bucketStats",  # README's "never silent" hot-bucket claim points at it
     "isComplete",   # the specs' probe of the checkpoint resume contract
     "hostOf",       # perfbench calls it
+    "canonicals",   # Synthesis.canonicals: the one-call synthesis the specs drive
 }
 FROZEN = {"Bench.scala"}  # the frozen measurement main is not scanned
-DEF = re.compile(r"^[ \t]*((?:[a-z]+[ \t]+)*)def[ \t]+([A-Za-z_]\w*)", re.M)
+DEF = re.compile(r"^[ \t]*((?:[a-z]+[ \t]+)*)(?:def|val)[ \t]+([A-Za-z_]\w*)", re.M)
 OWNER = re.compile(r"^[ \t]*(?:[a-z]+[ \t]+)*(object|class|trait)[ \t]+(\w+)", re.M)
 STRIP = re.compile(r'"""(?:.|\n)*?"""|"(?:\\.|[^"\\\n])*"|'
                    r"'(?:\\.|[^'\\\n])'|//[^\n]*|/\*(?:.|\n)*?\*/")
@@ -42,7 +45,8 @@ def strip(m):
 
 def reached(name, owner, path, files):
     word = r"\b%s\b" % name
-    if len(re.findall(word, IMPORT.sub("", files[path]))) > 1:
+    if (len(re.findall(word, IMPORT.sub("", files[path]))) > 1 or
+            re.search(r"^[ \t]*import %s\." % name, files[path], re.M)):
         return True
     kind, obj = owner
     via = r"\b%s\.(%s|_|\{[^}]*%s)" % (obj, name, word)

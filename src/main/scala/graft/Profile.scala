@@ -158,6 +158,7 @@ object Profile {
       val cands = m("candidates")(p.candidates(sigs))
       val decs = m("decisions")(p.decisions(cands, sigs, ext))
       val lbls = m("labels")(p.labels(sigs, decs))
+      m("clusters")(p.clusters(lbls, ext, Some(decs)))
       m("canonicals")(p.canonicals(lbls, ext, Some(decs)))
       println(f"${s"[profile] r$round TOTAL"}%-40s ${costs.reduce(_ + _)}")
       p.unpersistAll()

@@ -205,13 +205,16 @@ object ConnectedComponents {
     * component; ids with no edges become singleton components (their own id) —
     * reference semantics graph_cluster.py:63-66.
     *
-    * @param vertices DataFrame with a single LongType column `node`.
+    * @param vertices DataFrame with a single LongType column `node`; an id
+    *   may repeat (a url ingested twice), the output still holds ONE row per
+    *   distinct id — a repeated label row would multiply every downstream
+    *   join on `node`.
     */
   def labelsWithSingletons(vertices: DataFrame, edges: DataFrame): DataFrame = {
     val spark = vertices.sparkSession
     import spark.implicits._
     val labeled = run(edges)
-    vertices.select($"node".cast("long"))
+    vertices.select($"node".cast("long")).distinct()
       .join(labeled, Seq("node"), "left")
       .select($"node", coalesce($"component", $"node").as("component"))
   }

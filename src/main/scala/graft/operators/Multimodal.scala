@@ -7,7 +7,6 @@ import javax.sound.sampled.{AudioFileFormat, AudioFormat, AudioInputStream, Audi
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Multimodal-column processing: image/audio/video as opaque `binary` columns
   * with typed metadata, processed in partition-sized batches
@@ -34,19 +33,6 @@ object Multimodal {
   // memory, so force the heap-backed stream (once per JVM, on first use of
   // this object in an executor).
   ImageIO.setUseCache(false)
-
-  /** Typed media row: opaque payload + structured metadata. */
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("kind", StringType, nullable = false), // image | audio | video
-    StructField("payload", BinaryType, nullable = true),
-    StructField("meta", StructType(Seq(
-      StructField("width", IntegerType, nullable = true),
-      StructField("height", IntegerType, nullable = true),
-      StructField("duration_ms", LongType, nullable = true),
-      StructField("mime", StringType, nullable = true)
-    )), nullable = true)
-  ))
 
   /** Decoded per-row media attributes — integer-exact so the whole decode
     * path is DuckDB-oracle-checkable (q57): unused attributes are 0, never

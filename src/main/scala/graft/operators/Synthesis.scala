@@ -74,22 +74,31 @@ object Synthesis {
     )
 
   /** Full canonical synthesis for the webtext pipeline: labels (node,
-    * component) joined to extracted pages, grouped by component.
+    * component) joined to extracted pages, grouped by component — the
+    * narrow [[clusters]] aggregate, then the [[withText]] winner-text fetch
+    * from `labeled` itself (a url may repeat, so the fetch dedupes).
     *
     * Output: one row per cluster with canonical url (min member url — the
     * deterministic cluster key), representative text (longest extracted,
     * G1 semantics), member list, counts, time range, langs union, and a
     * field→source provenance map (G10).
     */
-  /** @param texts optional (url, extracted_text) frame for the winner-text
-    *   fetch join — pass the pre-join extracted projection (the pipeline
-    *   does) so the fetch branch reads the text column straight from the
-    *   extracted cache instead of re-running the labels join under it;
-    *   defaults to `labeled` itself for callers that only have the joined
-    *   frame.
+  def canonicals(labeled: DataFrame, cfg: GraftConfig): DataFrame =
+    withText(clusters(labeled, cfg), labeled, urlsUnique = false, cfg)
+
+  /** The text-free per-cluster aggregate behind [[canonicals]]: one row per
+    * component with `canonical_url`, the winning url `__win_url`
+    * (selectLongest order: max text length, tie → min url, empty/null text
+    * excluded; null when no member has text), counts, dates, langs, the
+    * capped member list and `__first_url`, the provenance of `first_seen`.
+    *
+    * Text bytes never enter this aggregation: it reads a precomputed
+    * `__text_len` when `labeled` carries one (the pipeline projects it
+    * BEFORE the labels join — Catalyst prunes columns through joins but
+    * does not push expressions below them) or derives it from
+    * `extracted_text`.
     */
-  def canonicals(labeled: DataFrame, cfg: GraftConfig,
-      texts: Option[DataFrame] = None): DataFrame = {
+  def clusters(labeled: DataFrame, cfg: GraftConfig): DataFrame = {
     // Member-list cap: one boilerplate mega-cluster of 10^6 members must NOT
     // materialize a 10^6-element array in a single aggregation buffer (the
     // classic CC-output killer). The labels table is the full membership
@@ -100,25 +109,11 @@ object Synthesis {
     // included) instead of the previous row_number window + second groupBy +
     // join — one narrow shuffle and a sort fewer.
     val k = cfg.cluster.maxMemberList
-    // Text bytes NEVER enter the aggregation shuffle: the groupBy runs over
-    // a narrow (component, url, warc_ts, lang, text_len) projection and
-    // selects only the WINNING url per cluster (selectLongest order: max
-    // length, tie → min url, empty/null excluded); the winner's text is
-    // fetched afterwards by one url-equi-join against the cached extracted
-    // frame. At web scale the text column is ~50× the narrow columns —
-    // shuffling it through a join + a groupBy (the previous plan) is the
-    // dominant byte cost of the whole stage; the fetch join moves each
-    // cluster's one winning text at most once, and AQE may broadcast the
-    // (component, win_url) side instead, moving ZERO text bytes.
-    // Accept a precomputed `__text_len` (the pipeline projects it BEFORE the
-    // labels join so text bytes never cross that shuffle either — Catalyst
-    // prunes columns through joins but does not push expressions below them)
-    // or derive it here for callers handing the full joined frame.
     val textLen =
       if (labeled.columns.contains("__text_len")) col("__text_len")
       else when(col("extracted_text").isNotNull && length(col("extracted_text")) > 0,
         length(col("extracted_text")))
-    val agg = labeled
+    labeled
       .select(col("component"), col("url"), col("warc_ts"), col("lang"),
         textLen.as("__text_len"))
       .groupBy(col("component"))
@@ -148,34 +143,47 @@ object Synthesis {
         selectUnionLists(filter(array(col("lang")), _.isNotNull)).as("langs"),
         graft.functions.CollectMinK.collectMinK(col("url"), k).as("member_urls")
       )
-    // One row per url on the fetch side: the aggregate above can never emit
-    // more than one row per component, and a dirty ingest with duplicate
-    // urls in `texts` must not re-multiply canonicals through this join.
-    // Scale cost: ~zero when the join shuffles (the dedup's Exchange on
-    // __wurl IS the hash partitioning the join needs — Catalyst reuses it,
-    // so text bytes still cross exactly one shuffle); only a
-    // broadcast-joinable agg side (small cluster count vs big corpus — a
-    // shape the pipeline never produces) would pay an exchange it could
-    // otherwise have skipped.
-    // max_by longest (ties by text value), NOT dropDuplicates: a dirty
-    // ingest with one url at two lengths must deterministically fetch the
-    // text whose length won the __win_url selection above — an arbitrary
-    // survivor could emit the short recrawl despite the url winning for
-    // being longest. Same Exchange on __wurl either way.
-    val textFrame = texts.getOrElse(labeled)
-      .select(col("url").as("__wurl"), col("extracted_text"))
-      .groupBy("__wurl")
-      .agg(max_by(col("extracted_text"),
-        struct(length(coalesce(col("extracted_text"), lit(""))).as("l"),
-          coalesce(col("extracted_text"), lit("")).as("t"))).as("extracted_text"))
-    agg
-      .join(textFrame, agg("__win_url") === textFrame("__wurl"), "left")
-      .select(
+  }
+
+  /** The canonical rows: each [[clusters]] row with its winner's text.
+    * Columns `clusters` carries beyond its own aggregate (the
+    * [[clusterQuality]] ones) follow `field_provenance`.
+    *
+    * The fetch is an INNER equi-join of `texts` (url, extracted_text) on
+    * `url = __win_url`, plus the clusters without a winner (text null).
+    * Inner, not left outer: a left outer join can only build its right
+    * (text) side, while an inner join lets the planner broadcast the
+    * narrow cluster table and stream the text past it — no text byte
+    * crosses a shuffle or the driver. When both sides outgrow broadcast it
+    * plans a sort-merge join, which moves each text once.
+    *
+    * @param urlsUnique the caller knows `texts` holds one row per url.
+    *   Otherwise one row per url is kept first — max_by longest (ties by
+    *   text value), NOT dropDuplicates: a dirty ingest with one url at two
+    *   lengths must fetch the text whose length won `__win_url`, or the
+    *   url would win for being longest and emit its short recrawl. That
+    *   dedupe shuffles every text once.
+    */
+  def withText(clusters: DataFrame, texts: DataFrame, urlsUnique: Boolean,
+      cfg: GraftConfig): DataFrame = {
+    val byUrl = texts.select(col("url").as("__wurl"), col("extracted_text"))
+    val fetch =
+      if (urlsUnique) byUrl
+      else byUrl.groupBy("__wurl")
+        .agg(max_by(col("extracted_text"),
+          struct(length(coalesce(col("extracted_text"), lit(""))).as("l"),
+            coalesce(col("extracted_text"), lit("")).as("t"))).as("extracted_text"))
+    val won = clusters.join(fetch, col("__win_url") === col("__wurl")).drop("__wurl")
+    val noWinner = clusters.where(col("__win_url").isNull)
+      .withColumn("extracted_text", lit(null).cast("string"))
+    val extra = clusters.columns.filterNot(ClusterColumns.contains)
+    won.unionByName(noWinner)
+      .select(Seq(
         col("component"),
         col("canonical_url"),
         col("extracted_text").as("text"),
         col("member_urls"),
-        (col("source_count") > k).as("members_truncated"),
+        (col("source_count") > cfg.cluster.maxMemberList).as("members_truncated"),
         col("source_count"),
         col("first_seen"),
         col("last_seen"),
@@ -185,20 +193,25 @@ object Synthesis {
           lit("text"), col("__win_url"),
           lit("first_seen"), col("__first_url"),
           lit("langs"), lit("union_all_sources")
-        ).as("field_provenance")
-      )
+        ).as("field_provenance")) ++ extra.map(col): _*)
   }
 
-  /** Per-cluster quality appended to [[canonicals]]' output `canon`:
-    * coherence flag (C3, coherence.py:16-65), mean match confidence (G12,
-    * `matching/pipeline.py:282-301`, NULL for singletons) and
-    * tier2_assisted (G13 analog, `matching/pipeline.py:304-314`). The specs
-    * check it against one-signal-per-pass reference forms.
+  /** The columns [[clusters]] emits. */
+  private val ClusterColumns = Set("component", "canonical_url", "__win_url",
+    "source_count", "first_seen", "__first_url", "last_seen", "distinct_days",
+    "langs", "member_urls")
+
+  /** Per-cluster quality appended to `canon`, a [[clusters]] or
+    * [[canonicals]] output: coherence flag (C3, coherence.py:16-65), mean
+    * match confidence (G12, `matching/pipeline.py:282-301`, NULL for
+    * singletons) and tier2_assisted (G13 analog,
+    * `matching/pipeline.py:304-314`). The specs check it against
+    * one-signal-per-pass reference forms.
     *
-    * `canon` already carries source_count (the per-component member count:
-    * urls are the pipeline's unique key) and distinct_days, so only the
-    * match-edge aggregation needs its own join, over a frame bounded by the
-    * matched pairs (≪ corpus; empty for all-singleton corpora).
+    * `canon` already carries source_count (the per-component member count)
+    * and distinct_days, so only the match-edge aggregation needs its own
+    * join, over a frame bounded by the matched pairs (≪ corpus; empty for
+    * all-singleton corpora). It reads no text.
     */
   def clusterQuality(canon: DataFrame, labels: DataFrame, decisions: DataFrame,
       cfg: GraftConfig): DataFrame = {

@@ -9,7 +9,7 @@ import graft.operators._
 /** The flagship near-duplicate pipeline (SURVEY.md §3.1 Spark lifecycle):
   *
   *   pages → extracted → signatures → candidates → decisions → labels →
-  *   canonicals
+  *   clusters → canonicals
   *
   * Each stage optionally checkpoints (parquet data + a meta sidecar, see
   * [[Checkpoints]]) so a killed run resumes from the last complete stage —
@@ -175,14 +175,17 @@ final class DedupPipeline(
       // NO tier-1-style semi-join reduction here, deliberately (measured:
       // adding one costs ~2x on q53). The ambiguous band is a small,
       // decision-filtered subset — broadcastable by construction — so the
-      // planner broadcasts the PAIR side of both the LCS joins and the
-      // text-hash joins, and the corpus text/hashes stream from the
-      // extracted cache without ever shuffling. Tier-1 differs: its
-      // candidate-pair frame outgrows the broadcast budget while its node
-      // SET still fits, which is exactly when the reduction pays. If an
-      // ambiguous band ever outgrew broadcast, the node-set broadcast
-      // would not fit either — the right move at that scale is a
-      // shuffled/bloom semi-join, not this one.
+      // planner broadcasts the PAIR side of the first LCS join (node_a)
+      // and streams the corpus text from the extracted cache past it. The
+      // second LCS join (node_b) does NOT: its pair side already carries
+      // text_a and is estimated as a join product, so the planner
+      // broadcasts the other side, the whole corpus text (on mirror_skew
+      // all 2,820 texts, an 8.5 MB BroadcastExchange collected through the
+      // driver). Tier-1 differs: its candidate-pair frame outgrows the
+      // broadcast budget while its node SET still fits, which is exactly
+      // when the reduction pays. If an ambiguous band ever outgrew
+      // broadcast, the node-set broadcast would not fit either — the right
+      // move at that scale is a shuffled/bloom semi-join, not this one.
       val ambOverlaps = SuffixOverlap.verify(ambPairs, byNode.as[(Long, String)], cfg)
       Decisions.resolveAmbiguous(tier1, byNode, ambOverlaps, cfg)
     }
@@ -197,26 +200,61 @@ final class DedupPipeline(
     ConnectedComponents.labelsWithSingletons(vertices, edges)
   }
 
-  /** Canonicals enriched with the cluster-quality columns of
-    * [[Synthesis.clusterQuality]] when decisions are given.
+  /** The narrow per-cluster table ([[Synthesis.clusters]]: canonical url,
+    * winning url, counts, dates, langs, member list), enriched with the
+    * cluster-quality columns of [[Synthesis.clusterQuality]] when decisions
+    * are given. No text column: `__text_len` is projected BEFORE the labels
+    * join, so text bytes cross neither the node join nor the per-cluster
+    * aggregation shuffle.
     */
-  def canonicals(labelsDf: DataFrame, extractedDf: DataFrame,
+  def clusters(labelsDf: DataFrame, extractedDf: DataFrame,
       decisionsDf: Option[DataFrame] = None): DataFrame =
-    stage("canonicals", (Seq(labelsDf, extractedDf) ++ decisionsDf.toSeq): _*) {
-    // Narrow labels join: `__text_len` is projected BEFORE the join so the
-    // extracted text column never crosses the node shuffle; the winner-text
-    // fetch inside canonicals reads (url, extracted_text) straight off the
-    // extracted cache — text bytes cross at most the ONE fetch join, never
-    // the labels join or the per-cluster aggregation shuffle.
+    stage("clusters", (Seq(labelsDf, extractedDf) ++ decisionsDf.toSeq): _*) {
     val labeled = extractedDf
       .select(xxhash64(col("url")).as("node"), col("url"), col("warc_ts"), col("lang"),
         when(col("extracted_text").isNotNull && length(col("extracted_text")) > 0,
           length(col("extracted_text"))).as("__text_len"))
       .join(labelsDf, "node")
-    val base = Synthesis.canonicals(labeled, cfg,
-      texts = Some(extractedDf.select(col("url"), col("extracted_text"))))
-    decisionsDf.fold(base)(Synthesis.clusterQuality(base, labelsDf, _, cfg))
+    val agg = Synthesis.clusters(labeled, cfg)
+    decisionsDf.fold(agg)(Synthesis.clusterQuality(agg, labelsDf, _, cfg))
   }
+
+  /** One canonical row per cluster: the [[clusters]] table with each
+    * winner's text fetched from `extractedDf` ([[Synthesis.withText]]).
+    *
+    * `clusters` is a stage, so the fetch join sees it as a leaf with its
+    * measured size: the planner broadcasts the small cluster table and
+    * streams (url, extracted_text) from the extracted leaf past it — no
+    * text byte crosses a shuffle or the driver. At web scale it plans a
+    * sort-merge join that moves each text once.
+    *
+    * The fetch dedupes text versions per url only when a url can repeat.
+    * The row counts this pipeline already holds decide it, with no Spark
+    * job: `labels` has one row per distinct node (= per distinct url), so
+    * `rows(extracted) == rows(labels)` means the urls are unique.
+    */
+  def canonicals(labelsDf: DataFrame, extractedDf: DataFrame,
+      decisionsDf: Option[DataFrame] = None): DataFrame =
+    stage("canonicals", (Seq(labelsDf, extractedDf) ++ decisionsDf.toSeq): _*) {
+    val urlsUnique = (for {
+      e <- stageRows("extracted", extractedDf)
+      l <- stageRows("labels", labelsDf)
+    } yield e == l).getOrElse(false)
+    Synthesis.withText(clusters(labelsDf, extractedDf, decisionsDf), extractedDf,
+      urlsUnique, cfg)
+  }
+
+  /** The row count of stage `name` when `df` is the frame this pipeline
+    * returned for it: the checkpoint meta `rows`, or the persisted leaf's
+    * measured count. None for any other frame. Runs no Spark job.
+    */
+  private def stageRows(name: String, df: DataFrame): Option[Long] =
+    stageCache.get(name).filter(_ eq df).flatMap { leaf =>
+      ckpt match {
+        case Some(c) => c.stageRows().get(name)
+        case None => leaf.queryExecution.optimizedPlan.stats.rowCount.map(_.toLong)
+      }
+    }
 
   /** Run end-to-end; returns the canonicals DataFrame. */
   def run(pages: DataFrame): DataFrame = {

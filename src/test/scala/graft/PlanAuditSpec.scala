@@ -110,13 +110,49 @@ class PlanAuditSpec extends SparkSpec {
         p.runAll(pages).canonicals.write.mode("overwrite").parquet(out)
       }
       val lines = Seq("extracted", "signatures", "candidates", "tier1_decisions",
-        "decisions", "labels", "canonicals").map { s =>
+        "decisions", "labels", "clusters", "canonicals").map { s =>
         s -> p.computedStage(s).queryExecution.analyzed.treeString.linesIterator.size
       }
       // at 400 docs leaf stages measure ≤ 73 lines per stage and about
       // 0.32 M chars per run; with the lineage carried, 2,849 and 28.2 M
       assert(lines.forall(_._2 <= 200), s"analyzed plan lines per stage: $lines")
       assert(chars <= 2000000L, s"plan description chars posted in one run: $chars")
+    } finally p.unpersistAll()
+  }
+
+  /** The physical plan a no-checkpoint stage ran: the cached AQE plan,
+    * final once the stage is computed.
+    */
+  private def cachedPlan(p: graft.pipeline.DedupPipeline, stage: String) =
+    p.computedStage(stage).queryExecution.withCachedData.collectFirst {
+      case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r.cacheBuilder.cachedPlan
+    }.getOrElse(fail(s"the $stage stage is not cached"))
+
+  private object AQE extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
+  test("canonical text streams past the cluster table: no exchange carries the text") {
+    // the winner-text fetch used to shuffle every text by url for a
+    // dedupe, then broadcast the whole text side to the cluster rows
+    val pages = graft.datagen.PagesGen.pages(spark, 400L).toDF()
+    val p = new graft.pipeline.DedupPipeline(spark, graft.config.GraftConfig.default)
+    try {
+      p.runAll(pages)
+      for (stage <- Seq("clusters", "canonicals")) {
+        val plan = cachedPlan(p, stage)
+        val carrying = AQE.collect(plan) {
+          case e: org.apache.spark.sql.execution.exchange.Exchange
+              if e.output.exists(_.name == "extracted_text") => e
+        }
+        assert(carrying.isEmpty, s"$stage: an exchange outputs extracted_text:\n$plan")
+      }
+      // urls are unique here: the fetch plans no per-url dedupe and so no
+      // shuffle at all — the text streams from the extracted leaf
+      val canon = cachedPlan(p, "canonicals")
+      val shuffles = AQE.collect(canon) {
+        case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => e
+      }
+      assert(shuffles.isEmpty && !canon.toString.contains("max_by"),
+        s"canonicals plan:\n$canon")
     } finally p.unpersistAll()
   }
 
@@ -151,11 +187,7 @@ class PlanAuditSpec extends SparkSpec {
     // (its verify branch is estimated as a join product) and AQE could
     // shuffle the stream side before switching it to a broadcast
     withDecisionStages { p =>
-      val cached = p.computedStage("decisions").queryExecution.withCachedData.collectFirst {
-        case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r.cacheBuilder.cachedPlan
-      }
-      assert(cached.isDefined, "the decisions stage is not cached")
-      val initial = cached.get match {
+      val initial = cachedPlan(p, "decisions") match {
         case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.initialPlan
         case plan => plan
       }

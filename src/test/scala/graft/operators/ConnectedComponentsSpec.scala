@@ -54,6 +54,15 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert((5L to 10L).forall(i => got(i) == i))
   }
 
+  test("labelsWithSingletons emits one row per distinct vertex") {
+    // a url ingested twice is one vertex listed twice
+    val vertices = Seq(1L, 2L, 2L, 3L, 3L, 3L).toDF("node")
+    val edges = Seq((1L, 2L)).toDF("src", "dst")
+    val got = ConnectedComponents.labelsWithSingletons(vertices, edges)
+      .as[(Long, Long)].collect().sorted.toSeq
+    assert(got == Seq((1L, 1L), (2L, 1L), (3L, 3L)))
+  }
+
   test("negative ids (xxhash64 node ids are signed)") {
     val got = cc(Seq((-5L, 3L), (3L, 7L)))
     assert(got.values.forall(_ == -5L))

@@ -108,6 +108,45 @@ class DedupPipelineSpec extends SparkSpec {
     assert(bad == 0)
   }
 
+  test("a url ingested twice: one label row, one canonical per cluster, longest text wins") {
+    // 40 PagesGen pages plus two urls ingested twice, with unrelated texts
+    // so each is its cluster's text winner: `a` as a short and a longer
+    // recrawl, `b` as two different texts of one length
+    def words(tag: String, n: Int) = (1 to n).map(i => s"$tag$i").mkString(" ")
+    val ts = new java.sql.Timestamp(1735689600000L)
+    def page(url: String, text: String) =
+      graft.datagen.Page(url, ts, PagesGen.htmlOf(url, text, "en"), text, "en")
+    val (a, b) = ("https://dup.example/a", "https://dup.example/b")
+    val (shortA, tieB) = (words("alpha", 60), words("bravo", 60))
+    val input = PagesGen.pages(spark, 40L).toDF().union(Seq(
+      page(a, shortA), page(a, shortA + " " + words("tail", 20)),
+      page(b, tieB + " zz"), page(b, tieB + " zy")).toDF())
+    val dir = java.nio.file.Files.createTempDirectory("graft-dup-url").toString
+    val plain = new DedupPipeline(spark, cfg)
+    try {
+      for (p <- Seq(plain, new DedupPipeline(spark, cfg, Some(dir)))) {
+        val r = p.runAll(input)
+        val labels = r.labels
+        assert(labels.count() == 42L && labels.select("node").distinct().count() == 42L)
+        val canon = r.canonicals
+        assert(canon.agg(sum($"source_count")).as[Long].head() == 44L)
+        assert(canon.count() == labels.select("component").distinct().count(),
+          "one canonical row per cluster")
+        assert(canon.select("component").distinct().count() == canon.count())
+        // the longest version wins; a same-length tie goes to the max text
+        def winner(url: String) = r.extracted.where($"url" === url)
+          .select("extracted_text").as[String].collect().maxBy(t => (t.length, t))
+        def textOf(url: String) = canon.where(element_at($"field_provenance", "text") === url)
+          .select("text").as[String].collect().toSeq
+        assert(textOf(a) == Seq(winner(a)) && winner(a).contains("tail"))
+        assert(textOf(b) == Seq(winner(b)) && winner(b).endsWith("zz"))
+      }
+      // 44 extracted rows over 42 labels: the fetch keeps the per-url dedupe
+      assert(plain.computedStage("canonicals").queryExecution.executedPlan.toString
+        .contains("max_by"))
+    } finally plain.unpersistAll()
+  }
+
   test("decision stats expose tiers (reference tier concept)") {
     val stats = result.decisions.groupBy("decision", "tier").count()
       .as[(String, String, Long)].collect()
