@@ -17,8 +17,12 @@ even pairs the change first, so a slow host window hits both sides alike.
 Prints one line per run and, at the end, for every metric of BENCHMARK.json
 present in the results: each side's median and interquartile range, the
 change/base ratio of the medians, and in how many pairs the change was
-better, worse or equal. With --log, every run's result JSON is appended to
-FILE as one line {"side", "seed", "order", "code", "result"}.
+better, worse or equal. The summary line also names the seeds whose two
+runs report a different `attempted` count: a workload that repeats its
+program call for --seconds (small_batches runs the next batch each time)
+then took its medians over different work on the two sides. With --log,
+every run's result JSON is appended to FILE as one line {"side", "seed",
+"order", "code", "result"}.
 """
 import argparse
 import json
@@ -113,6 +117,7 @@ def main():
     order_names = [m["name"] for m in bench["end_to_end"] + bench.get("per_layer", [])]
 
     results = {"base": {}, "change": {}}
+    attempted = {"base": {}, "change": {}}
     failed = 0
     for i, seed in enumerate(seeds_of(a.seeds)):
         order = ("base", "change") if i % 2 == 0 else ("change", "base")
@@ -122,6 +127,7 @@ def main():
             failed += 0 if ok else 1
             metrics = {k: v["value"] for k, v in (res or {}).get("metrics", {}).items()}
             results[side][seed] = metrics if ok else None
+            attempted[side][seed] = (res or {}).get("attempted")
             shown = " ".join(f"{k}={metrics[k]:.4g}" for k in
                              [m["name"] for m in bench["end_to_end"]] if k in metrics)
             shown = shown or f"({len(metrics)} metrics)"
@@ -134,8 +140,11 @@ def main():
 
     pairs = [s for s in results["base"]
              if results["base"][s] is not None and results["change"].get(s) is not None]
-    print(f"\n[ab] {a.workload}: {len(pairs)} complete pairs, {failed} failed runs "
-          f"(--seconds {a.seconds:g}, --trace {a.trace})")
+    unequal = [p for p in pairs if attempted["base"][p] != attempted["change"][p]]
+    print(f"\n[ab] {a.workload}: {len(pairs)} complete pairs, {failed} failed runs, "
+          f"{len(unequal)} pairs with unequal attempted"
+          + (f" (seeds {','.join(map(str, unequal))})" if unequal else "")
+          + f" (--seconds {a.seconds:g}, --trace {a.trace})")
     print(f"{'metric':34s} {'better':6s} {'base median':>12s} {'IQR':>9s} "
           f"{'change median':>14s} {'IQR':>9s} {'ratio':>7s}  change better/worse/equal")
     for name in order_names:

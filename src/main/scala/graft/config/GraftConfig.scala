@@ -123,6 +123,10 @@ final case class GraftConfig(
   // would silently degrade to star pairs or be dropped
   require(lsh.maxBucketSize >= 1,
     s"lsh.max_bucket_size must be ≥ 1, got ${lsh.maxBucketSize}")
+  // an overlap bar below 1 is met by any pair, even one with no text:
+  // tier 2 would resolve every ambiguous pair to overlap_match
+  require(overlap.minOverlapChars >= 1,
+    s"overlap.min_overlap_chars must be ≥ 1, got ${overlap.minOverlapChars}")
 
   /** Stable hash of the config, used to key stage checkpoints (reference
     * analog: content-hash cache keys, `ai_matching/cache.py:21-57`).

@@ -36,71 +36,60 @@ object Decisions {
       .withColumn("decision", tier1(col("exact_jaccard"), cfg))
       .withColumn("tier", lit("jaccard"))
 
-  /** Tier-2: resolve ambiguous pairs deterministically (A1/A4 seam).
+  /** Tier-2: resolve the ambiguous band in one pass (A1/A4 seam).
+    *
+    * Each ambiguous pair becomes `match`/`exact_text` when its two nodes'
+    * texts are byte-identical, else `overlap_match`/`overlap` when they
+    * share a run of at least `cfg.overlap.minOverlapChars` chars (exact
+    * LCS, [[SuffixOverlap.lcsLength]]), else `no_match` with tier
+    * `jaccard`. Settled rows pass through untouched.
+    *
+    * A url ingested twice gives one node several text versions. Exact text
+    * compares each node's min text hash, the same rule as the cache's
+    * [[canonicalEntries]]; a NULL text (failed extraction) has no hash, so
+    * two such nodes never read as identical. Overlap holds if any version
+    * pair shares the run. A node with no text row resolves on the other
+    * evidence, and a tier-1 row duplicated for one pair stays duplicated.
+    *
+    * The text is fetched once: [[MinHashLsh.pruneToPairNodes]] streams
+    * `extractedByNode` past the band's node set, and that slice, broadcast,
+    * is attached to both pair sides. Both verdicts come out of one
+    * aggregate per pair, whose shuffle carries hashes and lengths, never
+    * text; the verdict is broadcast back onto the band's rows.
     *
     * @param decisions output of [[decide]]
     * @param extractedByNode (node, extracted_text) projection
-    * @param overlaps verified overlap pairs (node_a, node_b, overlap_len)
-    *   among the ambiguous pairs only — this side is broadcast
     */
   def resolveAmbiguous(
       decisions: DataFrame,
       extractedByNode: DataFrame,
-      overlaps: DataFrame,
       cfg: GraftConfig
   ): DataFrame = {
     val amb = decisions.where(col("decision") === "ambiguous")
     val settled = decisions.where(col("decision") =!= "ambiguous")
-    // hash only non-null text: xxhash64(NULL) returns the (constant) seed,
-    // so two extraction-failed docs would otherwise compare h_a === h_b and
-    // false-match as exact_text. With a null hash the equality is NULL and
-    // the pair falls through to the overlap check / no_match.
-    // ONE row per node: a dirty ingest with duplicate urls (same node id,
-    // differing text versions) would otherwise fan each ambiguous pair
-    // into one row per version — with potentially CONTRADICTORY decisions
-    // for one pair. min() is the deterministic representative (the same
-    // rule as canonicalEntries; min skips nulls, so a node with any real
-    // text version never reads as extraction-failed).
-    //
-    // Semi-join prune FIRST (r6): the pair joins below are LEFT OUTER, so
-    // the planner can only build the `t` side — it cannot broadcast the
-    // (small) pair side the way the inner LCS joins do — and an unpruned
-    // `t` therefore hashes and shuffles the FULL corpus per run even though
-    // only ambiguous-pair nodes can ever be probed. The broadcast node-set
-    // prune scales with the ambiguous band (broadcastable by construction —
-    // the same bound the band's own broadcast relies on), and behind it
-    // both the xxhash64 over the text bytes and the dedup aggregation run
-    // on the pruned slice only. Results are identical: left-join probes
-    // outside the pruned set produced NULL h_a/h_b before via no match row.
-    val t = MinHashLsh.pruneToPairNodes(extractedByNode, amb.select("node_a", "node_b"))
-      .select(col("node"),
-        when(col("extracted_text").isNotNull, xxhash64(col("extracted_text"))).as("text_h"))
-      .groupBy("node").agg(min(col("text_h")).as("text_h"))
-    // left joins: a pair whose node is missing from the text projection
-    // must resolve (to no_match absent other evidence), never silently
-    // vanish from the decision frame
+    val pairs = amb.select("node_a", "node_b")
+    val text = broadcast(MinHashLsh.pruneToPairNodes(extractedByNode, pairs))
+    // xxhash64(NULL) is the constant seed: hash non-null text only
+    def hash(t: String): Column = when(col(t).isNotNull, xxhash64(col(t)))
+    val verdict = pairs
+      .join(text.toDF("node_a", "text_a"), Seq("node_a"), "left")
+      .join(text.toDF("node_b", "text_b"), Seq("node_b"), "left")
+      .select(col("node_a"), col("node_b"), hash("text_a").as("h_a"), hash("text_b").as("h_b"),
+        SuffixOverlap.lcsLength(col("text_a"), col("text_b")).as("lcs"))
+      .groupBy("node_a", "node_b")
+      .agg((min(col("h_a")) === min(col("h_b"))).as("same_text"),
+        (max(col("lcs")) >= cfg.overlap.minOverlapChars).as("has_overlap"))
     val resolved = amb
-      .join(t.toDF("node_a", "h_a"), Seq("node_a"), "left")
-      .join(t.toDF("node_b", "h_b"), Seq("node_b"), "left")
-      // dropDuplicates: SuffixOverlap.verify multiplies rows per duplicate
-      // text version too — the flag is pair-level, so one row per pair.
-      // broadcast: the overlaps are a subset of the ambiguous band
-      // (broadcastable by construction), but the planner's size estimate
-      // of the verify branch is a join product far over the threshold, so
-      // unhinted this join starts as a sort-merge join and AQE may shuffle
-      // the stream side before it switches to a broadcast
-      .join(broadcast(overlaps.select(col("node_a"), col("node_b"), lit(true).as("has_overlap"))
-          .dropDuplicates("node_a", "node_b")),
-        Seq("node_a", "node_b"), "left")
+      .join(broadcast(verdict), Seq("node_a", "node_b"), "left")
       .withColumn("decision",
-        when(col("h_a") === col("h_b"), "match")
+        when(col("same_text"), "match")
           .when(col("has_overlap"), "overlap_match")
           .otherwise("no_match"))
       .withColumn("tier",
-        when(col("h_a") === col("h_b"), "exact_text")
+        when(col("same_text"), "exact_text")
           .when(col("has_overlap"), "overlap")
           .otherwise(col("tier")))
-      .drop("h_a", "h_b", "has_overlap")
+      .drop("same_text", "has_overlap")
     settled.unionByName(resolved)
   }
 

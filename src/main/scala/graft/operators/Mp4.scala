@@ -29,7 +29,7 @@ object Mp4 {
     */
   final case class Mp4Info(brand: String, width: Int, height: Int,
                            durationMs: Long, frames: Int,
-                           totalSampleBytes: Long, sampleSizes: Array[Int])
+                           totalSampleBytes: Long)
 
   // ---- big-endian primitive readers (bounds-checked by callers) ----------
   private def u32(b: Array[Byte], o: Int): Long =
@@ -125,26 +125,23 @@ object Mp4 {
       val uniform = u32(payload, stsz.from + 4)
       val nSamples = u32(payload, stsz.from + 8)
       if (nSamples < 0 || nSamples > (1L << 24)) return None // sanity cap
-      // Header fields are attacker/corruption-controlled: never let them
-      // size an allocation the payload can't justify (a 100-byte blob
-      // declaring 2^24 uniform samples must degrade to None, not a 64 MB
-      // Array per row), and a size >= 2^31 must not wrap to a negative Int.
+      // Header fields are attacker/corruption-controlled: a sample size
+      // >= 2^31 is corrupt, and a sum the payload can't hold fails the
+      // total check below (2^24 samples × 2^31 bytes cannot overflow a Long)
       if (uniform > Int.MaxValue) return None
-      val sizes: Array[Int] =
-        if (uniform != 0L) {
-          if (nSamples > payload.length) return None
-          Array.fill(nSamples.toInt)(uniform.toInt)
-        } else {
+      val total: Long =
+        if (uniform != 0L) uniform * nSamples
+        else {
           if (stsz.from + 12 + 4L * nSamples > stsz.until) return None
-          val a = new Array[Int](nSamples.toInt)
+          var sum = 0L
           var i = 0
-          while (i < a.length) {
+          while (i < nSamples) {
             val v = u32(payload, stsz.from + 12 + 4 * i)
             if (v > Int.MaxValue) return None
-            a(i) = v.toInt
+            sum += v
             i += 1
           }
-          a
+          sum
         }
 
       // stts cross-check: sum of sample_counts must equal the stsz count
@@ -158,14 +155,12 @@ object Mp4 {
       }
       if (sttsFrames.exists(_ != nSamples)) return None
 
-      var total = 0L
-      sizes.foreach(total += _)
       // the declared sample bytes must fit in the payload (they live in
       // mdat): a 300-byte blob claiming terabytes of total_sample_bytes is
       // corrupt metadata, and downstream partitioning/frame-sampling
       // decisions key off this number
       if (total > payload.length) return None
-      Some(Mp4Info(brand.get, w, h, durationMs, nSamples.toInt, total, sizes))
+      Some(Mp4Info(brand.get, w, h, durationMs, nSamples.toInt, total))
     } catch { case _: Exception => None }
   }
 

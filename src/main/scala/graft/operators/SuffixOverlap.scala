@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import graft.config.GraftConfig
 
@@ -20,7 +20,9 @@ import graft.config.GraftConfig
   *     p ≈ (15/16)^193 < 1e-5). Join on fingerprint → candidate pairs.
   *  2. **Exact verification**: per candidate pair, the true longest common
   *     substring length via a suffix automaton of the shorter text
-  *     (O(n+m) per pair), again `mapPartitions` over a typed Dataset.
+  *     (O(n+m) per pair), as the [[lcsLength]] Column. The pipeline's
+  *     tier-2 ([[Decisions.resolveAmbiguous]]) evaluates the same Column
+  *     over the ambiguous band, so one LCS path serves both.
   *
   * Reference seam: this replaces the external AI tier as OUR deterministic
   * second-tier resolver (SURVEY.md §2.5 A3) and supplies the north_rule's
@@ -72,6 +74,18 @@ object SuffixOverlap {
     sam.longestMatch(t)
   }
 
+  /** [[longestCommonSubstring]] of two string Columns; 0 when either is
+    * NULL or empty.
+    */
+  def lcsLength(a: Column, b: Column): Column = lcsUdf(a, b)
+
+  // Marked nondeterministic only so the optimizer keeps it where it is
+  // written: a Filter on a deterministic projected value is pushed below
+  // the projection (into verify's join condition), which would run the
+  // LCS twice for every row that passes.
+  private val lcsUdf =
+    udf((a: String, b: String) => longestCommonSubstring(a, b)).asNondeterministic()
+
   /** Verify candidates: (node_a, node_b, overlap_len). Pairs below
     * cfg.overlap.minOverlapChars are filtered out.
     */
@@ -80,19 +94,13 @@ object SuffixOverlap {
       texts: Dataset[(Long, String)],
       cfg: GraftConfig
   ): DataFrame = {
-    val spark = cands.sparkSession
-    import spark.implicits._
     val tdf = texts.toDF("node", "text")
-    val joined = cands
+    cands
       .join(tdf.toDF("node_a", "text_a"), "node_a")
       .join(tdf.toDF("node_b", "text_b"), "node_b")
-      .select("node_a", "node_b", "text_a", "text_b")
-      .as[(Long, Long, String, String)]
-    val minLen = cfg.overlap.minOverlapChars
-    joined.mapPartitions { it =>
-      it.map { case (na, nb, ta, tb) => (na, nb, longestCommonSubstring(ta, tb)) }
-        .filter(_._3 >= minLen)
-    }.toDF("node_a", "node_b", "overlap_len")
+      .select(col("node_a"), col("node_b"),
+        lcsLength(col("text_a"), col("text_b")).as("overlap_len"))
+      .where(col("overlap_len") >= cfg.overlap.minOverlapChars)
   }
 }
 

@@ -29,8 +29,6 @@ final class DedupPipeline(
     // instead of silently replaying the previous batch's checkpoints.
     ckptKeyExtra: String = ""
 ) {
-  import spark.implicits._
-
   /** Full checkpoint identity: config hash, plus the caller's input key. */
   val checkpointKey: String =
     if (ckptKeyExtra.isEmpty) cfg.configHash else s"${cfg.configHash}-$ckptKeyExtra"
@@ -149,14 +147,14 @@ final class DedupPipeline(
     * split inside resolveAmbiguous) and each re-run would repeat the
     * shingle-array verify join — the most expensive per-pair work.
     *
-    * Tier-2 runs the exact suffix-automaton LCS **only on the ambiguous
-    * band**: `resolveAmbiguous` consults overlaps for ambiguous pairs alone,
-    * so verifying anything else is wasted work — and at 10^12 docs a
-    * corpus-wide fingerprint shuffle would dwarf the band join. Direct LCS on
-    * the ambiguous pairs is also strictly more exact than the sampled
-    * fingerprint candidate pass (no content-sampling misses); the corpus-wide
-    * fingerprint path, [[SuffixOverlap.candidates]], serves syndication scans
-    * (q21).
+    * Tier-2 ([[Decisions.resolveAmbiguous]]) reads text **only for the
+    * ambiguous band**: one pruned text fetch feeds both the exact-text and
+    * the suffix-automaton LCS verdict, so no text outside the band crosses
+    * a join, and at 10^12 docs a corpus-wide fingerprint shuffle would
+    * dwarf the band join. Direct LCS on the ambiguous pairs is also
+    * strictly more exact than the sampled fingerprint candidate pass (no
+    * content-sampling misses); the corpus-wide fingerprint path,
+    * [[SuffixOverlap.candidates]], serves syndication scans (q21).
     */
   def decisions(cands: DataFrame, sigs: DataFrame, extractedDf: DataFrame): DataFrame = {
     val tier1 = stage("tier1_decisions", cands, sigs) {
@@ -170,24 +168,8 @@ final class DedupPipeline(
       Decisions.decide(MinHashLsh.verify(cands, shingleSide, cfg), cfg)
     }
     stage("decisions", cands, sigs, extractedDf) {
-      val byNode = extractedDf.select(xxhash64(col("url")).as("node"), col("extracted_text"))
-      val ambPairs = tier1.where(col("decision") === "ambiguous").select("node_a", "node_b")
-      // NO tier-1-style semi-join reduction here, deliberately (measured:
-      // adding one costs ~2x on q53). The ambiguous band is a small,
-      // decision-filtered subset — broadcastable by construction — so the
-      // planner broadcasts the PAIR side of the first LCS join (node_a)
-      // and streams the corpus text from the extracted cache past it. The
-      // second LCS join (node_b) does NOT: its pair side already carries
-      // text_a and is estimated as a join product, so the planner
-      // broadcasts the other side, the whole corpus text (on mirror_skew
-      // all 2,820 texts, an 8.5 MB BroadcastExchange collected through the
-      // driver). Tier-1 differs: its candidate-pair frame outgrows the
-      // broadcast budget while its node SET still fits, which is exactly
-      // when the reduction pays. If an ambiguous band ever outgrew
-      // broadcast, the node-set broadcast would not fit either — the right
-      // move at that scale is a shuffled/bloom semi-join, not this one.
-      val ambOverlaps = SuffixOverlap.verify(ambPairs, byNode.as[(Long, String)], cfg)
-      Decisions.resolveAmbiguous(tier1, byNode, ambOverlaps, cfg)
+      Decisions.resolveAmbiguous(tier1,
+        extractedDf.select(xxhash64(col("url")).as("node"), col("extracted_text")), cfg)
     }
   }
 

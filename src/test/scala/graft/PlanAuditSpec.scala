@@ -156,11 +156,22 @@ class PlanAuditSpec extends SparkSpec {
     } finally p.unpersistAll()
   }
 
-  /** Runs the pipeline through `decisions` on 400 PagesGen docs (tier 2
-    * has ambiguous pairs to resolve there), then releases its caches.
+  /** Runs the pipeline through `decisions` on 400 PagesGen docs plus three
+    * pairs whose second page extends the first by 60 words (Jaccard about
+    * 0.77, so tier 2 has ambiguous pairs to resolve), then releases its
+    * caches.
     */
   private def withDecisionStages(body: graft.pipeline.DedupPipeline => Unit): Unit = {
-    val pages = graft.datagen.PagesGen.pages(spark, 400L).toDF()
+    def words(tag: String, n: Int) = (1 to n).map(i => s"$tag$i").mkString(" ")
+    val ts = new java.sql.Timestamp(1735689600000L)
+    def page(url: String, text: String) = graft.datagen.Page(url, ts,
+      graft.datagen.PagesGen.htmlOf(url, text, "en"), text, "en")
+    val extended = Seq("a", "b", "c").flatMap { t =>
+      val base = words(s"${t}x", 200)
+      Seq(page(s"https://amb.example/$t/1", base),
+        page(s"https://amb.example/$t/2", base + " " + words(s"${t}y", 60)))
+    }
+    val pages = graft.datagen.PagesGen.pages(spark, 400L).toDF().union(extended.toDF())
     val p = new graft.pipeline.DedupPipeline(spark, graft.config.GraftConfig.default)
     try {
       val ext = p.extracted(pages)
@@ -194,6 +205,37 @@ class PlanAuditSpec extends SparkSpec {
       val text = initial.toString
       assert(text.contains("BroadcastHashJoin"), text)
       assert(!text.contains("SortMergeJoin"), "initial decisions plan:\n" + text)
+    }
+  }
+
+  test("decisions stage: text crosses no shuffle and is broadcast only past the band-node prune") {
+    // the text tier 2 reads must be band-sized, never the whole corpus
+    withDecisionStages { p =>
+      assert(p.computedStage("decisions").where($"tier" === "overlap").count() > 0,
+        "the fixture must leave tier 2 a band to resolve")
+      val plan = cachedPlan(p, "decisions")
+      import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, ExprId}
+      // the attributes that hold extracted_text, under any rename
+      val renames = AQE.flatMap(plan)(_.expressions.flatMap(_.collect {
+        case a @ Alias(r: AttributeReference, _) => r.exprId -> a.exprId
+      }))
+      def closure(ids: Set[ExprId]): Set[ExprId] = {
+        val next = ids ++ renames.collect { case (from, to) if ids(from) => to }
+        if (next == ids) ids else closure(next)
+      }
+      val text = closure(AQE.flatMap(plan)(_.output).filter(_.name == "extracted_text").map(_.exprId).toSet)
+      val carrying = AQE.collect(plan) {
+        case e: org.apache.spark.sql.execution.exchange.Exchange
+            if e.output.exists(a => text(a.exprId)) => e
+      }
+      val shuffled = carrying.filter(_.isInstanceOf[org.apache.spark.sql.execution.exchange.ShuffleExchangeLike])
+      assert(shuffled.isEmpty, s"a shuffle outputs text:\n$plan")
+      val unpruned = carrying.filterNot(e => AQE.collect(e) {
+        case j: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+            if j.joinType == org.apache.spark.sql.catalyst.plans.LeftSemi => j
+      }.nonEmpty)
+      assert(carrying.nonEmpty && unpruned.isEmpty,
+        s"a text broadcast does not sit over the band-node prune:\n$plan")
     }
   }
 

@@ -95,6 +95,19 @@ class GraftConfigSpec extends AnyFunSuite {
     assert(GraftConfig.fromMap(Map("lsh.max_bucket_size" -> "1")).lsh.maxBucketSize == 1)
   }
 
+  test("overlap.min_overlap_chars below 1 fails fast at config build") {
+    // a bar of 0 (or less) is met by every ambiguous pair, text or not:
+    // tier 2 would resolve them all to overlap_match
+    for (bad <- Seq("0", "-1")) {
+      val e = intercept[IllegalArgumentException](
+        GraftConfig.fromMap(Map("overlap.min_overlap_chars" -> bad)))
+      assert(e.getMessage.contains("min_overlap_chars"))
+    }
+    intercept[IllegalArgumentException](
+      GraftConfig.default.copy(overlap = GraftConfig.default.overlap.copy(minOverlapChars = 0)))
+    assert(GraftConfig.fromMap(Map("overlap.min_overlap_chars" -> "1")).overlap.minOverlapChars == 1)
+  }
+
   test("overlap.seed is rejected as an unknown key: fingerprint sampling takes no seed") {
     val e = intercept[IllegalArgumentException](
       GraftConfig.fromMap(Map("overlap.seed" -> "7")))
