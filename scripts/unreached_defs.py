@@ -24,9 +24,7 @@ SOURCES = [ROOT / "src" / "main", ROOT / "perfbench" / "src"]
 ALLOWED = {
     "main", "apply",
     "bucketStats",  # README's "never silent" hot-bucket claim points at it
-    "isComplete",   # the specs' probe of the checkpoint resume contract
     "hostOf",       # perfbench calls it
-    "canonicals",   # Synthesis.canonicals: the one-call synthesis the specs drive
 }
 FROZEN = {"Bench.scala"}  # the frozen measurement main is not scanned
 DEF = re.compile(r"^[ \t]*((?:[a-z]+[ \t]+)*)(?:def|val)[ \t]+([A-Za-z_]\w*)", re.M)

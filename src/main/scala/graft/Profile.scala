@@ -4,6 +4,7 @@ import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
 import graft.config.GraftConfig
+import graft.operators.ConnectedComponents
 import graft.pipeline.DedupPipeline
 
 /** The profiler main; `graft.Bench` stays the frozen measurement surface.
@@ -15,6 +16,9 @@ import graft.pipeline.DedupPipeline
   *    after one `warm` run that the min leaves out; `bench` is the set
   *    `Bench` times; `plansDir` gets each formatted plan.
   *  - `scale <nDocs> <reps> <level...>`: the pipeline, min of reps, per level.
+  *  - `cc <nEdges> [reps]`: `ConnectedComponents.run` on a planted graph of
+  *    `nEdges` edges ([[plantedGraph]]), per rep (default 2) once fully
+  *    distributed (`driverFinishEdges = 0`) and once at the default cutover.
   * A level is `N` (`local[N]`) or `WxC` (`local-cluster`, W executor JVMs ×
   * C cores; needs SPARK_HOME and SPARK_SCALA_VERSION; `-Dgraft.execMemGb`,
   * default 10, sizes each executor). Corpora are `Bench.corpusPath`'s, built
@@ -30,6 +34,7 @@ object Profile {
   final case class Stages(level: String, docs: Long, rounds: Int, ckpt: Boolean) extends Run
   final case class Queries(names: Seq[String], reps: Int, plansDir: Option[String]) extends Run
   final case class Scale(docs: Long, reps: Int, levels: Seq[String]) extends Run
+  final case class Cc(edges: Long, reps: Int) extends Run
 
   // Bench skips the same four: intentionally quadratic oracle configs and
   // streaming-harness startup, not engine throughput
@@ -53,7 +58,8 @@ object Profile {
   def parse(args: Seq[String]): Run = {
     def bad(what: String, s: String) =
       throw new IllegalArgumentException(s"$what must be an integer >= 1, got '$s'")
-    def docs(s: String): Long = s.toLongOption.filter(_ >= 1).getOrElse(bad("nDocs", s))
+    def positive(what: String, s: String): Long = s.toLongOption.filter(_ >= 1).getOrElse(bad(what, s))
+    def docs(s: String): Long = positive("nDocs", s)
     def reps(s: Option[String], default: Int): Int =
       s.fold(default)(r => r.toIntOption.filter(_ >= 1).getOrElse(bad("reps", r)))
     args match {
@@ -76,8 +82,11 @@ object Profile {
       case Seq("scale", n, r, levels @ _*) if levels.nonEmpty =>
         levels.foreach(parseLevel)
         Scale(docs(n), reps(Some(r), 1), levels)
+      case Seq("cc", n, rest @ _*) if rest.length <= 1 =>
+        Cc(positive("nEdges", n), reps(rest.headOption, 2))
       case _ => throw new IllegalArgumentException("usage: stages <level> <nDocs> [rounds] " +
-        "[ckpt] | queries <all|bench|prefix,...> [reps] [plansDir] | scale <nDocs> <reps> <level...>")
+        "[ckpt] | queries <all|bench|prefix,...> [reps] [plansDir] | scale <nDocs> <reps> <level...> " +
+        "| cc <nEdges> [reps]")
     }
   }
 
@@ -216,12 +225,44 @@ object Profile {
     }
   }
 
+  /** `n` edges in the shape of a sparse match graph: one path over the
+    * first n/24 edges (ids 0 to n/24), then trees of four edges over the
+    * rest (five ids each: a root, two children, one grandchild under each
+    * child; the last tree may be cut short). At 470,000 edges that is a
+    * path of 19,584 nodes and 112,605 trees.
+    */
+  private[graft] def plantedGraph(spark: SparkSession, n: Long): DataFrame = {
+    import org.apache.spark.sql.functions.{col, lit, shiftright}
+    val pathEdges = n / 24
+    val path = spark.range(pathEdges).select(col("id").as("src"), (col("id") + 1).as("dst"))
+    val root = lit(pathEdges + 1) + shiftright(col("id"), 2) * 5
+    val child = col("id") % 4 + 1
+    path.union(spark.range(n - pathEdges)
+      .select((root + shiftright(child - 1, 1)).as("src"), (root + child).as("dst")))
+  }
+
+  private def cc(r: Cc): Unit = {
+    val spark = session(cpus.toString)
+    val edges = plantedGraph(spark, r.edges)
+    val runs = Seq[(String, () => DataFrame)](
+      "distributed" -> (() => ConnectedComponents.run(edges, driverFinishEdges = 0)),
+      "cutover" -> (() => ConnectedComponents.run(edges)))
+    val costs = (1 to r.reps).map { i =>
+      runs.map { case (name, run) => measure(spark, s"[cc] n=${r.edges} $name rep$i")(run())._2 }
+    }
+    runs.map(_._1).zipWithIndex.foreach { case (name, j) =>
+      println(f"${s"[cc] n=${r.edges} $name best"}%-40s ${costs.map(_(j)).minBy(_.wall)}")
+    }
+    spark.stop()
+  }
+
   def main(args: Array[String]): Unit = {
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     parse(args.toSeq) match {
       case r: Stages => stages(r)
       case r: Queries => queries(r)
       case r: Scale => scale(r)
+      case r: Cc => cc(r)
     }
   }
 }

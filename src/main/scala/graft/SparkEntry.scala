@@ -282,7 +282,7 @@ object SparkEntry {
   private def q18(s: SparkSession, dir: String): DataFrame = {
     val sigs = docSigs(s, dir)
     val cands = MinHashLsh.lshCandidates(sigs, cfg)
-    MinHashLsh.verify(cands, sigs, cfg)
+    MinHashLsh.verify(cands, sigs)
       .where(col("exact_jaccard") >= cfg.lsh.jaccardThreshold)
       .select(col("node_a").as("doc_id_a"), col("node_b").as("doc_id_b"))
   }
@@ -324,7 +324,7 @@ object SparkEntry {
   private def q20(s: SparkSession, dir: String): DataFrame = {
     val sigs = docSigs(s, dir)
     val cands = MinHashLsh.lshCandidates(sigs, cfg)
-    MinHashLsh.verify(cands, sigs, cfg)
+    MinHashLsh.verify(cands, sigs)
       .where(col("exact_jaccard") >= 0.5)
       .select(col("node_a").as("doc_id_a"), col("node_b").as("doc_id_b"),
         round(col("exact_jaccard"), 4).as("jaccard"))
@@ -357,7 +357,7 @@ object SparkEntry {
   private def q22(s: SparkSession, dir: String): DataFrame = {
     val sigs = docSigs(s, dir)
     val cands = MinHashLsh.lshCandidates(sigs, cfg)
-    val verified = MinHashLsh.verify(cands, sigs, cfg)
+    val verified = MinHashLsh.verify(cands, sigs)
     val edges = verified.where(col("exact_jaccard") >= cfg.lsh.jaccardThreshold)
       .select(col("node_a").as("src"), col("node_b").as("dst"))
     ConnectedComponents.run(edges)
@@ -665,7 +665,7 @@ object SparkEntry {
     val sigs = MinHashLsh.signatures(corpus, cfg).withColumn("node", col("doc_id"))
       .localCheckpoint(true)
     val cands = d.select(col("doc_id").as("node_a"), (col("doc_id") + 1000000L).as("node_b"))
-    val verified = MinHashLsh.verify(cands, sigs, cfg)
+    val verified = MinHashLsh.verify(cands, sigs)
     Decisions.decide(verified, cfg).groupBy("decision").agg(count(lit(1)).as("n"))
   }
 
@@ -773,7 +773,7 @@ object SparkEntry {
   private def q48(s: SparkSession, dir: String): DataFrame = {
     val sigs = docSigs(s, dir)
     val cands = MinHashLsh.lshCandidates(sigs, cfg)
-    val edges = MinHashLsh.verify(cands, sigs, cfg)
+    val edges = MinHashLsh.verify(cands, sigs)
       .where(col("exact_jaccard") >= cfg.lsh.jaccardThreshold)
       .select(col("node_a").as("src"), col("node_b").as("dst"))
     val docs = t(s, dir, "documents")

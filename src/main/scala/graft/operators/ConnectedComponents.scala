@@ -24,6 +24,11 @@ import org.apache.spark.storage.StorageLevel
   */
 object ConnectedComponents {
 
+  /** Distributed rounds before [[run]] gives up: far beyond any real
+    * graph's contraction depth.
+    */
+  private val MaxRounds = 50
+
   /** @param edges DataFrame with two LongType columns `src`, `dst` (undirected;
     *              orientation/duplicates are fine — symmetrized internally).
     * @param driverFinishEdges adaptive small-graph cutover: when the ACTIVE
@@ -44,39 +49,40 @@ object ConnectedComponents {
     *         in `edges`, where component = min node id of its component.
     *         Callers union in singletons from the vertex universe themselves
     *         (graph_cluster.py:65-66 semantics).
+    *
+    * The cutover take reads `edges` once; the distributed branch reads it a
+    * second time. In the pipeline `edges` is the `decisions` stage leaf.
     */
-  def run(edges: DataFrame, maxIterations: Int = 50,
-      driverFinishEdges: Int = 1 << 20): DataFrame = {
+  def run(edges: DataFrame, driverFinishEdges: Int = 1 << 20): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
 
-    // canonicalize orientation + dedup + drop self-loops: (b,a) must
-    // collapse onto (a,b) BEFORE distinct(), or symmetrically-recorded
-    // edge lists double the round-1 shuffle and inflate the edge count the
-    // driver-finish cutover is gated on (a 600k-unique-edge graph recorded
-    // both ways would read as 1.2M > 2^20 and skip the local finisher)
-    var e = edges
+    // canonical orientation, self-loops dropped: (b,a) becomes (a,b).
+    // Duplicate rows cannot change union-find labels, so the finisher takes
+    // the rows as they come; only the distributed rounds need them unique.
+    val canonical = edges
       .select($"src".cast("long"), $"dst".cast("long"))
       .where($"src" =!= $"dst")
       .select(least($"src", $"dst").as("src"), greatest($"src", $"dst").as("dst"))
-      .distinct()
-      .localCheckpoint(true)
 
     if (driverFinishEdges > 0) {
       // one bounded take: if it comes back short we already hold the edges
-      val head = e.take(driverFinishEdges + 1)
-      if (head.length <= driverFinishEdges) {
-        val out = localLabels(spark, head.map(r => (r.getLong(0), r.getLong(1))))
-        e.unpersist()
-        return out
-      }
+      val head = canonical.take(driverFinishEdges + 1)
+      if (head.length <= driverFinishEdges)
+        return localLabels(spark, head.map(r => (r.getLong(0), r.getLong(1))))
     }
 
+    // Round 1's shuffle grows with every repeated row, so dedup here. A
+    // graph whose repeats (say, every edge recorded both ways) push its raw
+    // count over the cutover starts distributed; once round 1 has deduped
+    // and contracted it, the per-round count check below hands it back to
+    // the finisher.
+    var e = canonical.distinct().localCheckpoint(true)
     var converged = false
     var iter = 0
     var prevSig: (Long, String) = (-1L, "")
 
-    while (!converged && iter < maxIterations) {
+    while (!converged && iter < MaxRounds) {
       val ls = largeStar(e)
       // lazy checkpoint: the convergence aggregation below is the ONE action
       // per round and materializes the checkpoint as a side effect — two
@@ -106,12 +112,10 @@ object ConnectedComponents {
     // Labels below assume the star invariant, which only holds AFTER
     // convergence — deriving them from a non-converged edge set would
     // silently label one true component as several (under-merge). Fail
-    // loud instead; 50 default rounds is far beyond any real graph's
-    // contraction depth, so hitting this means something is wrong.
+    // loud instead: hitting MaxRounds means something is wrong.
     if (!converged)
       throw new IllegalStateException(
-        s"connected components did not converge within $maxIterations rounds; " +
-          "raise maxIterations (or driverFinishEdges for a bounded local finish)")
+        s"connected components did not converge within $MaxRounds rounds")
 
     // After convergence every edge is (node > min) -> min: the star. Labels:
     val nodeToMin = e.select($"src".as("node"), $"dst".as("component"))

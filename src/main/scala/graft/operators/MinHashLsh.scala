@@ -31,32 +31,37 @@ object MinHashLsh {
     * signature + SimHash. One narrow projection, no shuffle.
     *
     * Input: (url, extracted_text, …); output adds
-    * (node, n_tokens, shingles, minhash, simhash).
+    * (node, n_tokens, shingles, simhash, band_keys). The 128-long MinHash
+    * never leaves this projection: its only consumers are the LSH band keys
+    * ([[graft.functions.BandKeys]], 16 longs), so that is what a signature
+    * row carries.
     * `node` is the 64-bit xxhash of the url — the CC node id. At 10^12 docs
     * 64-bit birthday collisions appear (~3%); production would widen to a
     * 128-bit id, the pipeline only needs ids orderable + hashable.
     */
-  def signatures(extracted: DataFrame, cfg: GraftConfig, textCol: String = "extracted_text"): DataFrame = {
+  def signatures(extracted: DataFrame, cfg: GraftConfig): DataFrame = {
     // One fused byte-walk per document ([[graft.functions.DocSignature]])
     // instead of split×3 + four interpreted trees; exposed through
     // `inline(array(...))` so the struct is evaluated exactly ONCE per row
     // (four GetStructField projections would re-run the sketch 4×: projection
     // collapse inlines struct fields, and common-subexpression elimination
     // does not reach into CodegenFallback subtrees).
-    val sig = Hashing.docSignature(col(textCol),
+    val sig = Hashing.docSignature(col("extracted_text"),
       cfg.lsh.shingleSize, cfg.lsh.numHashes, cfg.lsh.seed, cfg.simhash.seed)
     extracted
       .withColumn("node", xxhash64(col("url")))
       .select(col("*"), inline(array(sig)))
+      .withColumn("band_keys", Hashing.bandKeys(col("minhash"), cfg.lsh.bands, cfg.lsh.rowsPerBand))
+      .drop("minhash")
   }
 
   /** Exploded (node, band_key) table. Band keys are already salted with the
     * band index (see [[graft.functions.BandKeys]]), so a single-column join
     * suffices.
     */
-  def bands(sigs: DataFrame, cfg: GraftConfig): DataFrame =
-    sigs.where(col("minhash").isNotNull)
-      .select(col("node"), explode(Hashing.bandKeys(col("minhash"), cfg.lsh.bands, cfg.lsh.rowsPerBand)).as("band_key"))
+  def bands(sigs: DataFrame): DataFrame =
+    sigs.where(col("band_keys").isNotNull)
+      .select(col("node"), explode(col("band_keys")).as("band_key"))
 
   /** Bucket-size distribution + how many buckets the cap drops — the
     * reference logs blocking reduction stats the same way
@@ -164,7 +169,7 @@ object MinHashLsh {
     * across bands, hot buckets dropped (observable via [[bucketStats]]).
     */
   def lshCandidates(sigs: DataFrame, cfg: GraftConfig): DataFrame = {
-    val (cold, _) = splitHotBuckets(bands(sigs, cfg), "band_key", cfg.lsh.maxBucketSize)
+    val (cold, _) = splitHotBuckets(bands(sigs), "band_key", cfg.lsh.maxBucketSize)
     bucketSelfJoin(cold, "band_key")
       .select(col("a.node").as("node_a"), col("b.node").as("node_b"))
       .dropDuplicates("node_a", "node_b")
@@ -205,19 +210,12 @@ object MinHashLsh {
     */
   def fusedCandidates(sigs: DataFrame, cfg: GraftConfig): DataFrame = {
     val d = cfg.simhash.maxHammingDistance
-    // Accept either a precomputed `band_keys` column (the pipeline persists
-    // those 16 longs instead of the 128-long minhash — 8x fewer cached
-    // bytes on the stage every candidate/verify scan reads) or derive the
-    // keys from `minhash` on the fly.
-    val bandKeysCol =
-      if (sigs.columns.contains("band_keys")) col("band_keys")
-      else Hashing.bandKeys(col("minhash"), cfg.lsh.bands, cfg.lsh.rowsPerBand)
     // tier travels as one byte until the final projection: the exploded key
     // frame is the widest shuffle of the pipeline, and a 3-16 char UTF8
     // string per row is pure overhead there ('0' lsh < '1' simhash < '2'
     // star keeps the same min-wins dedup priority).
-    val banded = sigs.withColumn("bk", bandKeysCol).where(col("bk").isNotNull)
-      .select(col("node"), col("simhash"), explode(col("bk")).as("key"))
+    val banded = sigs.where(col("band_keys").isNotNull)
+      .select(col("node"), col("simhash"), explode(col("band_keys")).as("key"))
       .withColumn("tier", lit(0).cast("tinyint"))
     val blocked = sigs.where(col("simhash").isNotNull)
       .select(col("node"), col("simhash"),
@@ -253,16 +251,6 @@ object MinHashLsh {
         when(col("t") === 0, "lsh").when(col("t") === 1, "simhash")
           .otherwise("star").as("cand_tier"))
   }
-
-  /** Signature-estimated Jaccard: fraction of agreeing MinHash components.
-    * The scale path — at 10^12 docs you verify from the 128-long signature
-    * you already carry instead of re-joining full shingle sets.
-    */
-  def estJaccard(sigA: Column, sigB: Column, k: Int): Column =
-    aggregate(
-      zip_with(sigA, sigB, (x, y) => when(x === y, 1).otherwise(0)),
-      lit(0), (acc, x) => acc + x
-    ).cast("double") / k
 
   /** Exact shingle-set Jaccard. Inputs must be ascending, distinct shingle
     * arrays — what [[signatures]] emits ([[graft.functions.DocSignature]]
@@ -302,36 +290,16 @@ object MinHashLsh {
     * `matching/pipeline.py:117-125`) and score exact shingle Jaccard.
     *
     * Input: candidates (node_a, node_b [, tier]); output adds
-    * (url_a, url_b, exact_jaccard) — plus `est_jaccard` ONLY when `sigs`
-    * carries a `minhash` column. The pipeline's signature stage persists
-    * band keys instead of the 128-long minhash (8× fewer cached bytes), so
-    * the hot path intentionally skips the est diagnostic; pass a frame from
-    * [[signatures]] directly to get it.
+    * (url_a, url_b, exact_jaccard).
     */
-  def verify(candidates: DataFrame, sigs: DataFrame, cfg: GraftConfig): DataFrame = {
-    val hasMinhash = sigs.columns.contains("minhash")
-    if (hasMinhash) {
-      val side = sigs.select(col("node"), col("url"), col("shingles"), col("minhash"))
-      val a = side.toDF("node_a", "url_a", "sh_a", "mh_a")
-      val b = side.toDF("node_b", "url_b", "sh_b", "mh_b")
-      candidates
-        .join(a, "node_a")
-        .join(b, "node_b")
-        .withColumn("est_jaccard", estJaccard(col("mh_a"), col("mh_b"), cfg.lsh.numHashes))
-        .withColumn("exact_jaccard", exactJaccard(col("sh_a"), col("sh_b")))
-        .drop("sh_a", "sh_b", "mh_a", "mh_b")
-    } else {
-      // pipeline hot path: signatures carry band keys, not the raw minhash
-      // — decisions read exact Jaccard only, so skip the est diagnostic
-      // instead of shuffling 1 KB/doc of signature just to compute it
-      val side = sigs.select(col("node"), col("url"), col("shingles"))
-      val a = side.toDF("node_a", "url_a", "sh_a")
-      val b = side.toDF("node_b", "url_b", "sh_b")
-      candidates
-        .join(a, "node_a")
-        .join(b, "node_b")
-        .withColumn("exact_jaccard", exactJaccard(col("sh_a"), col("sh_b")))
-        .drop("sh_a", "sh_b")
-    }
+  def verify(candidates: DataFrame, sigs: DataFrame): DataFrame = {
+    val side = sigs.select(col("node"), col("url"), col("shingles"))
+    val a = side.toDF("node_a", "url_a", "sh_a")
+    val b = side.toDF("node_b", "url_b", "sh_b")
+    candidates
+      .join(a, "node_a")
+      .join(b, "node_b")
+      .withColumn("exact_jaccard", exactJaccard(col("sh_a"), col("sh_b")))
+      .drop("sh_a", "sh_b")
   }
 }

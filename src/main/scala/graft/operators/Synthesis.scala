@@ -73,20 +73,7 @@ object Synthesis {
       coalesce(min(when(flag, id)), min(id)).as("src")
     )
 
-  /** Full canonical synthesis for the webtext pipeline: labels (node,
-    * component) joined to extracted pages, grouped by component — the
-    * narrow [[clusters]] aggregate, then the [[withText]] winner-text fetch
-    * from `labeled` itself (a url may repeat, so the fetch dedupes).
-    *
-    * Output: one row per cluster with canonical url (min member url — the
-    * deterministic cluster key), representative text (longest extracted,
-    * G1 semantics), member list, counts, time range, langs union, and a
-    * field→source provenance map (G10).
-    */
-  def canonicals(labeled: DataFrame, cfg: GraftConfig): DataFrame =
-    withText(clusters(labeled, cfg), labeled, urlsUnique = false, cfg)
-
-  /** The text-free per-cluster aggregate behind [[canonicals]]: one row per
+  /** The text-free per-cluster aggregate of canonical synthesis: one row per
     * component with `canonical_url`, the winning url `__win_url`
     * (selectLongest order: max text length, tie → min url, empty/null text
     * excluded; null when no member has text), counts, dates, langs, the
@@ -202,7 +189,7 @@ object Synthesis {
     "langs", "member_urls")
 
   /** Per-cluster quality appended to `canon`, a [[clusters]] or
-    * [[canonicals]] output: coherence flag (C3, coherence.py:16-65), mean
+    * [[withText]] output: coherence flag (C3, coherence.py:16-65), mean
     * match confidence (G12, `matching/pipeline.py:282-301`, NULL for
     * singletons) and tier2_assisted (G13 analog,
     * `matching/pipeline.py:304-314`). The specs check it against

@@ -66,7 +66,7 @@ final class Checkpoints(spark: SparkSession, workDir: String, configHash: String
     try out.write(node.toString.getBytes("UTF-8")) finally out.close()
   }
 
-  def isComplete(stage: String): Boolean = readMeta(stage).exists(_.configHash == configHash)
+  private[graft] def isComplete(stage: String): Boolean = readMeta(stage).exists(_.configHash == configHash)
 
   /** Run `compute` unless this stage already checkpointed under the current
     * config hash; always return the stage read back FROM the checkpoint so

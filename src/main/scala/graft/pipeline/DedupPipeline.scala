@@ -114,23 +114,16 @@ final class DedupPipeline(
     * the scan bandwidth of every consumer (candidate join, verify ×2,
     * vertex universe) — on one box memory bandwidth is the scaling ceiling.
     *
-    * The 128-long minhash itself is NOT persisted: its only pipeline
-    * consumers are the 16 LSH band keys (computed here, 128 B vs 1 KB per
-    * doc). The shingle array IS persisted: it is a free byproduct of the
-    * fused sketch (DocSignature computes it on the way to the minhash), and
+    * The shingle array is persisted: it is a free byproduct of the fused
+    * sketch (DocSignature computes it on the way to the minhash), and
     * measured at 1M docs re-deriving it at verify time costs more CPU than
     * the cache write saves in bandwidth — instead the verify JOIN prunes
     * its shuffle to candidate-pair nodes only ([[decisions]]), which is
-    * where the corpus-wide shingle bytes actually moved. The full signature
-    * remains available from [[MinHashLsh.signatures]] for the
-    * carried-signature verification path at 10^12-doc scale.
+    * where the corpus-wide shingle bytes actually moved.
     */
   def signatures(extractedDf: DataFrame): DataFrame = stage("signatures", extractedDf) {
     MinHashLsh.signatures(extractedDf, cfg)
-      .select(col("url"), col("node"), col("shingles"),
-        graft.functions.Hashing.bandKeys(col("minhash"), cfg.lsh.bands, cfg.lsh.rowsPerBand)
-          .as("band_keys"),
-        col("simhash"))
+      .select(col("url"), col("node"), col("shingles"), col("band_keys"), col("simhash"))
   }
 
   /** Candidate pairs from the fused MinHash-band + SimHash-block join,
@@ -165,7 +158,7 @@ final class DedupPipeline(
       // inject here ([[MinHashLsh.pruneToPairNodes]]).
       val shingleSide = MinHashLsh.pruneToPairNodes(
         sigs.select(col("node"), col("url"), col("shingles")), cands)
-      Decisions.decide(MinHashLsh.verify(cands, shingleSide, cfg), cfg)
+      Decisions.decide(MinHashLsh.verify(cands, shingleSide), cfg)
     }
     stage("decisions", cands, sigs, extractedDf) {
       Decisions.resolveAmbiguous(tier1,

@@ -133,6 +133,32 @@ object Oracles {
     when(normA === 0.0 || normB === 0.0, 0.0)
       .otherwise(graft.operators.Similarity.dot(a, b) / (normA * normB))
 
+  // ---- Synthesis: the one-call form and the per-signal forms -------------
+
+  /** Full canonical synthesis in one call: labels (node, component) joined
+    * to extracted pages, grouped by component — the narrow
+    * `Synthesis.clusters` aggregate, then the `Synthesis.withText`
+    * winner-text fetch from `labeled` itself (a url may repeat, so the fetch
+    * dedupes). The pipeline runs the same two steps as separate stages.
+    *
+    * Output: one row per cluster with canonical url (min member url — the
+    * deterministic cluster key), representative text (longest extracted,
+    * G1 semantics), member list, counts, time range, langs union, and a
+    * field→source provenance map (G10).
+    */
+  def canonicals(labeled: DataFrame, cfg: GraftConfig): DataFrame =
+    graft.operators.Synthesis.withText(graft.operators.Synthesis.clusters(labeled, cfg),
+      labeled, urlsUnique = false, cfg)
+
+  /** Signature-estimated Jaccard: the fraction of agreeing MinHash
+    * components, the unbiased estimate banding is tuned around.
+    */
+  def estJaccard(sigA: Column, sigB: Column, k: Int): Column =
+    aggregate(
+      zip_with(sigA, sigB, (x, y) => when(x === y, 1).otherwise(0)),
+      lit(0), (acc, x) => acc + x
+    ).cast("double") / k
+
   // ---- Synthesis: the per-signal forms of clusterQuality's fused pass ----
 
   /** C3 cluster coherence (coherence.py:16-65): size cap, min average

@@ -40,4 +40,12 @@ class ProfileSpec extends AnyFunSuite {
     for (args <- bad)
       withClue(args.mkString("'", " ", "'"))(intercept[IllegalArgumentException](parse(args)))
   }
+
+  test("cc takes nEdges and reps; a bad count fails in parse") {
+    assert(parse(Seq("cc", "470000")) == Cc(470000L, 2))
+    assert(parse(Seq("cc", "1000", "1")) == Cc(1000L, 1))
+    for (args <- Seq(Seq("cc"), Seq("cc", "0"), Seq("cc", "470k"), Seq("cc", "-5"),
+        Seq("cc", "1000", "0"), Seq("cc", "1000", "1", "extra")))
+      withClue(args.mkString("'", " ", "'"))(intercept[IllegalArgumentException](parse(args)))
+  }
 }

@@ -81,7 +81,7 @@ class PropertySpec extends SparkSpec {
       val row = Seq((a.mkString(" "), b.mkString(" "))).toDF("ta", "tb").select(
         Oracles.minHash(Hashing.shingleHashes(split($"ta", " "), 1), 256).as("ma"),
         Oracles.minHash(Hashing.shingleHashes(split($"tb", " "), 1), 256).as("mb"))
-        .select(graft.operators.MinHashLsh.estJaccard($"ma", $"mb", 256).as("est"))
+        .select(Oracles.estJaccard($"ma", $"mb", 256).as("est"))
         .as[Double].collect()(0)
       val trueJ = shared.toDouble / (shared + ua + ub)
       // 256 hashes → σ = sqrt(j(1-j)/256) ≤ 0.032; allow 4σ

@@ -43,7 +43,7 @@ class HashingSpec extends SparkSpec {
       .select(
         (size(array_intersect($"sha", $"shb")).cast("double") /
           size(array_union($"sha", $"shb"))).as("jac"),
-        graft.operators.MinHashLsh.estJaccard($"ma", $"mb", 256).as("est")
+        Oracles.estJaccard($"ma", $"mb", 256).as("est")
       )
     val (jac, est) = df.as[(Double, Double)].collect()(0)
     assert(math.abs(jac - est) < 0.12, s"jaccard=$jac est=$est")

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.graft.ShuffleAndBlocks
 import org.apache.spark.sql.functions._
 
 class ConnectedComponentsSpec extends SparkSpec {
@@ -80,6 +81,51 @@ class ConnectedComponentsSpec extends SparkSpec {
     val distributed = ConnectedComponents.run(df, driverFinishEdges = 0)
       .as[(Long, Long)].collect().toMap
     assert(local == distributed)
+  }
+
+  test("below the cutover run writes no shuffle bytes and stores no RDD block") {
+    // a chain recorded both ways with self-loops: the finisher takes the raw
+    // rows, so nothing deduplicates or checkpoints them
+    val edges = spark.range(0, 200, 1, 4)
+      .select($"id".as("src"), ($"id" + 1).as("dst"))
+      .union(spark.range(0, 200, 1, 4).select(($"id" + 1).as("src"), $"id".as("dst")))
+      .union(spark.range(0, 20, 1, 2).select($"id".as("src"), $"id".as("dst")))
+    val (labels, shuffleBytes, rddBlocks) = ShuffleAndBlocks(spark.sparkContext)(
+      ConnectedComponents.run(edges).as[(Long, Long)].collect())
+    assert(labels.length == 201 && labels.forall(_._2 == 0L))
+    assert(shuffleBytes == 0L, s"wrote $shuffleBytes shuffle bytes")
+    assert(rddBlocks == 0, s"stored $rddBlocks RDD blocks")
+  }
+
+  test("repeats over the cutover run one distributed round, then the finisher") {
+    // trees of three edges, each edge recorded both ways, twice: 60 unique
+    // edges in 240 rows. A cutover of 61 sends the raw rows distributed;
+    // round 1 dedups and contracts them to 60 star edges, under the cutover
+    val unique = (0L until 20L).flatMap { t =>
+      val a = t * 10
+      Seq((a, a + 1), (a, a + 2), (a + 2, a + 3))
+    }
+    val raw = Seq.fill(2)(unique ++ unique.map(_.swap)).flatten
+    val df = raw.toDF("src", "dst")
+    val cutover = unique.length + 1
+    assert(unique.length < cutover && cutover < raw.length)
+    val (viaRound1, shuffleBytes, _) = ShuffleAndBlocks(spark.sparkContext)(
+      ConnectedComponents.run(df, driverFinishEdges = cutover).as[(Long, Long)].collect().toMap)
+    assert(shuffleBytes > 0L, "the raw count is over the cutover, so round 1 runs distributed")
+    val distributed = ConnectedComponents.run(df, driverFinishEdges = 0)
+      .as[(Long, Long)].collect().toMap
+    assert(viaRound1 == distributed && viaRound1.size == 80)
+  }
+
+  test("Profile's planted graph: a path and four-edge trees, same labels both ways") {
+    // 240 edges: a path over ids 0-10, then 57 full trees and one of 2 edges
+    val edges = graft.Profile.plantedGraph(spark, 240)
+    assert(edges.count() == 240)
+    val local = ConnectedComponents.run(edges).as[(Long, Long)].collect().toMap
+    assert(local.size == 11 + 57 * 5 + 3 && local.values.toSet.size == 1 + 58)
+    assert((0L to 10L).forall(local(_) == 0L))
+    assert(local == ConnectedComponents.run(edges, driverFinishEdges = 0)
+      .as[(Long, Long)].collect().toMap)
   }
 
   test("in-loop cutover after contraction shrinks the frontier") {

@@ -20,25 +20,30 @@ class MinHashLshSpec extends SparkSpec {
     val docs = Seq((1L, base), (2L, near), (3L, (1000 to 1120).map(i => s"z$i").mkString(" ")))
     val sigs = sigsOf(docs, cfg)
     val pairs = MinHashLsh.fusedCandidates(sigs, cfg)
-    val verified = MinHashLsh.verify(pairs, sigs, cfg)
+    val verified = MinHashLsh.verify(pairs, sigs)
       .where(col("exact_jaccard") >= cfg.lsh.jaccardThreshold)
       .select("node_a", "node_b").as[(Long, Long)].collect().toSet
     assert(verified == Set((1L, 2L)))
   }
 
-  test("mega-bucket star handling: huge exact-dup bucket still fully clustered") {
-    // 300 identical docs with maxBucketSize 50 → every band bucket is hot →
-    // star candidates only; CC must still recover ONE 300-member cluster.
-    val cfg = GraftConfig.default.copy(lsh = GraftConfig.default.lsh.copy(maxBucketSize = 50))
+  // 300 identical docs with maxBucketSize 50 → every band bucket is hot →
+  // star candidates only for them; doc 900 shares no bucket
+  private val megaCfg = GraftConfig.default.copy(lsh = GraftConfig.default.lsh.copy(maxBucketSize = 50))
+  private val megaDocs = {
     val text = (1 to 80).map(i => s"boiler$i").mkString(" ")
-    val docs = (1L to 300L).map(id => (id, text)) :+ (900L, (1 to 80).map(i => s"other$i").mkString(" "))
-    val sigs = sigsOf(docs, cfg)
+    (1L to 300L).map(id => (id, text)) :+ (900L, (1 to 80).map(i => s"other$i").mkString(" "))
+  }
+
+  test("mega-bucket star handling: huge exact-dup bucket still fully clustered") {
+    // CC must still recover ONE 300-member cluster from the star candidates
+    val cfg = megaCfg
+    val sigs = sigsOf(megaDocs, cfg)
     val cands = MinHashLsh.fusedCandidates(sigs, cfg)
     // star fan-out is linear, not quadratic
     val nCands = cands.count()
     assert(nCands < 5000, s"expected O(n) candidates, got $nCands")
     assert(cands.where(col("cand_tier") === "star").count() > 0)
-    val verified = MinHashLsh.verify(cands, sigs, cfg)
+    val verified = MinHashLsh.verify(cands, sigs)
       .where(col("exact_jaccard") >= cfg.lsh.jaccardThreshold)
     val edges = verified.select(col("node_a").as("src"), col("node_b").as("dst"))
     val labels = ConnectedComponents.labelsWithSingletons(sigs.select(col("node")), edges)
@@ -47,15 +52,33 @@ class MinHashLshSpec extends SparkSpec {
     assert(labels(900L) == 900L)
   }
 
-  test("est_jaccard from signatures tracks exact jaccard (scale verification path)") {
+  test("lshCandidates and fusedCandidates' lsh tier read the same band keys") {
+    // the mega-bucket fixture plus two cold near-dup pairs: hot buckets are
+    // dropped by one and starred by the other, the cold pairs are 'lsh' in both
+    val near = (1 to 120).map(i => s"w$i")
+    val docs = megaDocs ++ Seq((1001L, near.mkString(" ")),
+      (1002L, near.updated(59, "swapped").mkString(" ")),
+      (1003L, near.map(_ + "q").mkString(" ")), (1004L, near.map(_ + "q").mkString(" ")))
+    val sigs = sigsOf(docs, megaCfg)
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.select("node_a", "node_b").as[(Long, Long)].collect().toSet
+    val lsh = pairs(MinHashLsh.lshCandidates(sigs, megaCfg))
+    assert(lsh.contains((1001L, 1002L)) && lsh.contains((1003L, 1004L)), s"cold pairs missing: $lsh")
+    assert(lsh == pairs(MinHashLsh.fusedCandidates(sigs, megaCfg).where(col("cand_tier") === "lsh")))
+  }
+
+  test("est_jaccard over the fused signature's minhash tracks exact jaccard") {
     val cfg = GraftConfig.default
     val base = (1 to 200).map(i => s"t$i").mkString(" ")
     val variant = (1 to 200).map(i => if (i % 17 == 0) s"x$i" else s"t$i").mkString(" ")
-    val sigs = sigsOf(Seq((1L, base), (2L, variant)), cfg)
-    val pairs = Seq((1L, 2L)).toDF("node_a", "node_b")
-    val row = MinHashLsh.verify(pairs, sigs, cfg)
-      .select("est_jaccard", "exact_jaccard").as[(Double, Double)].collect()(0)
-    assert(math.abs(row._1 - row._2) < 0.15, s"est=${row._1} exact=${row._2}")
+    def sig(c: String) = graft.functions.Hashing.docSignature(col(c),
+      cfg.lsh.shingleSize, cfg.lsh.numHashes, cfg.lsh.seed, cfg.simhash.seed)
+    val (est, exact) = Seq((base, variant)).toDF("a", "b")
+      .select(sig("a").as("sa"), sig("b").as("sb"))
+      .select(graft.Oracles.estJaccard(col("sa.minhash"), col("sb.minhash"), cfg.lsh.numHashes),
+        MinHashLsh.exactJaccard(col("sa.shingles"), col("sb.shingles")))
+      .as[(Double, Double)].collect()(0)
+    assert(math.abs(est - exact) < 0.15, s"est=$est exact=$exact")
   }
 
   test("hotKeyArray is exact at the cap boundary and across thin partition spread") {
@@ -96,7 +119,7 @@ class MinHashLshSpec extends SparkSpec {
     val text = (1 to 50).map(i => s"same$i").mkString(" ")
     val docs = (1L to 40L).map(id => (id, text))
     val sigs = sigsOf(docs, cfg)
-    val stats = MinHashLsh.bucketStats(MinHashLsh.bands(sigs, cfg), cfg).collect()(0)
+    val stats = MinHashLsh.bucketStats(MinHashLsh.bands(sigs), cfg).collect()(0)
     assert(stats.getAs[Long]("max_bucket") == 40L)
     assert(stats.getAs[Long]("capped_buckets") >= 16L) // every band bucket is hot
   }

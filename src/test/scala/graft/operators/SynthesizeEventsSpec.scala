@@ -76,14 +76,14 @@ class SynthesizeEventsSpec extends SparkSpec {
       (f"https://x/$i%02d", new java.sql.Timestamp(1735689600000L + i * 1000L),
         "de", s"text $i", 1L))
       .toDF("url", "warc_ts", "lang", "extracted_text", "component")
-    val row = Synthesis.canonicals(labeled, cfg).collect()(0)
+    val row = graft.Oracles.canonicals(labeled, cfg).collect()(0)
     assert(row.getAs[collection.Seq[String]]("member_urls").toSeq ==
       Seq("https://x/01", "https://x/02", "https://x/03"))
     assert(row.getAs[Boolean]("members_truncated"))
     assert(row.getAs[Long]("source_count") == 10L)
     // under the cap: full list, not truncated
     val small = labeled.where(length(col("url")) > 0).limit(2)
-    val r2 = Synthesis.canonicals(small, cfg).collect()(0)
+    val r2 = graft.Oracles.canonicals(small, cfg).collect()(0)
     assert(!r2.getAs[Boolean]("members_truncated"))
     assert(r2.getAs[collection.Seq[String]]("member_urls").length == 2)
   }
@@ -101,7 +101,7 @@ class SynthesizeEventsSpec extends SparkSpec {
     val decisions = Seq(
       (1L, 2L, 0.95, "match", "jaccard"), (10L, 11L, 0.95, "match", "jaccard")
     ).toDF("node_a", "node_b", "exact_jaccard", "decision", "tier")
-    val canon = Synthesis.canonicals(labeled, cfg)
+    val canon = graft.Oracles.canonicals(labeled, cfg)
     def flagged(c: GraftConfig): Map[Long, Boolean] =
       Synthesis.clusterQuality(canon, labeled, decisions, c)
         .select("component", "flagged").as[(Long, Boolean)].collect().toMap

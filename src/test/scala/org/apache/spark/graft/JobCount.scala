@@ -2,7 +2,8 @@ package org.apache.spark.graft
 
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 import org.apache.spark.SparkContext
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, SparkListenerEvent,
+  SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
 
 /** Runs a block under a fresh job group with a listener built for that
@@ -38,6 +39,31 @@ object JobCount {
           jobs.incrementAndGet(): Unit
     })(body)
     (result, jobs.get)
+  }
+}
+
+/** Sums the shuffle bytes that the tasks of a block's jobs write, and counts
+  * the RDD blocks stored while the block runs. Block updates carry no job
+  * group, so the block count takes in every RDD block stored meanwhile.
+  */
+object ShuffleAndBlocks {
+  def apply[T](sc: SparkContext)(body: => T): (T, Long, Int) = {
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val bytes = new AtomicLong
+    val blocks = new AtomicInteger
+    val result = GroupListener(sc, group => new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties)
+            .exists(_.getProperty(SparkContext.SPARK_JOB_GROUP_ID) == group))
+          e.stageIds.foreach(stages.add)
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId) && e.taskMetrics != null)
+          bytes.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten): Unit
+      override def onBlockUpdated(e: SparkListenerBlockUpdated): Unit =
+        if (e.blockUpdatedInfo.blockId.isRDD && e.blockUpdatedInfo.storageLevel.isValid)
+          blocks.incrementAndGet(): Unit
+    })(body)
+    (result, bytes.get, blocks.get)
   }
 }
 
