@@ -127,6 +127,10 @@ final case class GraftConfig(
   // tier 2 would resolve every ambiguous pair to overlap_match
   require(overlap.minOverlapChars >= 1,
     s"overlap.min_overlap_chars must be ≥ 1, got ${overlap.minOverlapChars}")
+  // the member preview keeps the k smallest urls; k below 1 would fail
+  // only at the clusters stage, after every upstream stage has run
+  require(cluster.maxMemberList >= 1,
+    s"cluster.max_member_list must be ≥ 1, got ${cluster.maxMemberList}")
 
   /** Stable hash of the config, used to key stage checkpoints (reference
     * analog: content-hash cache keys, `ai_matching/cache.py:21-57`).

@@ -49,11 +49,18 @@ object ConnectedComponents {
     *         in `edges`, where component = min node id of its component.
     *         Callers union in singletons from the vertex universe themselves
     *         (graph_cluster.py:65-66 semantics).
+    * @param maxEdgeRows an upper bound on the rows of `edges` the caller
+    *              knows without a job (the pipeline passes the `decisions`
+    *              stage's row count). At most `driverFinishEdges`, the edges
+    *              are collected in one job; otherwise the cutover is a
+    *              bounded take, which Spark runs incrementally, one job per
+    *              growing batch of partitions.
     *
     * The cutover take reads `edges` once; the distributed branch reads it a
     * second time. In the pipeline `edges` is the `decisions` stage leaf.
     */
-  def run(edges: DataFrame, driverFinishEdges: Int = 1 << 20): DataFrame = {
+  def run(edges: DataFrame, driverFinishEdges: Int = 1 << 20,
+      maxEdgeRows: Option[Long] = None): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
 
@@ -66,8 +73,12 @@ object ConnectedComponents {
       .select(least($"src", $"dst").as("src"), greatest($"src", $"dst").as("dst"))
 
     if (driverFinishEdges > 0) {
-      // one bounded take: if it comes back short we already hold the edges
-      val head = canonical.take(driverFinishEdges + 1)
+      // one bounded take: if it comes back short we already hold the edges.
+      // Not coalesce(1) for the known-small case: at scale one task would
+      // scan serially for the first driverFinishEdges + 1 edges.
+      val head =
+        if (maxEdgeRows.exists(_ <= driverFinishEdges)) canonical.collect()
+        else canonical.take(driverFinishEdges + 1)
       if (head.length <= driverFinishEdges)
         return localLabels(spark, head.map(r => (r.getLong(0), r.getLong(1))))
     }
@@ -213,11 +224,13 @@ object ConnectedComponents {
     *   may repeat (a url ingested twice), the output still holds ONE row per
     *   distinct id — a repeated label row would multiply every downstream
     *   join on `node`.
+    * @param maxEdgeRows a job-free upper bound on the rows of `edges`, see [[run]].
     */
-  def labelsWithSingletons(vertices: DataFrame, edges: DataFrame): DataFrame = {
+  def labelsWithSingletons(vertices: DataFrame, edges: DataFrame,
+      maxEdgeRows: Option[Long] = None): DataFrame = {
     val spark = vertices.sparkSession
     import spark.implicits._
-    val labeled = run(edges)
+    val labeled = run(edges, maxEdgeRows = maxEdgeRows)
     vertices.select($"node".cast("long")).distinct()
       .join(labeled, Seq("node"), "left")
       .select($"node", coalesce($"component", $"node").as("component"))

@@ -84,6 +84,12 @@ object Synthesis {
     * BEFORE the labels join — Catalyst prunes columns through joins but
     * does not push expressions below them) or derives it from
     * `extracted_text`.
+    *
+    * Every row of `labeled` enters the `groupBy(component)` shuffle as a
+    * partial aggregate buffer, one per component and map task. The
+    * pipeline therefore hands it only the rows that sit in a match edge;
+    * a row in none is the sole member of its component and gets the same
+    * cluster row from [[singletonClusters]] without a shuffle.
     */
   def clusters(labeled: DataFrame, cfg: GraftConfig): DataFrame = {
     // Member-list cap: one boilerplate mega-cluster of 10^6 members must NOT
@@ -131,6 +137,36 @@ object Synthesis {
         graft.functions.CollectMinK.collectMinK(col("url"), k).as("member_urls")
       )
   }
+
+  /** [[clusterQuality]] over [[clusters]] for rows that are each their own
+    * cluster, as a per-row projection: no aggregate, so no shuffle. The
+    * caller guarantees every row of `labeled` is the only member of its
+    * component and sits in no match edge; `labeled` carries `__text_len`.
+    *
+    * Exact because each column is the value the aggregate takes over one
+    * row: min, max and the winner of a one-row group are the row's own, a
+    * null `warc_ts` counts no day, and a null `lang` or `url` adds no
+    * element. The member list keeps `url` whole, since
+    * `cluster.max_member_list` is at least 1 for every config that loads.
+    * With no match edge the confidence is null, the cluster is not tier-2
+    * assisted, and `flagged` is the expression [[clusterQuality]] uses.
+    */
+  def singletonClusters(labeled: DataFrame, cfg: GraftConfig): DataFrame =
+    labeled.select(
+      col("component"),
+      col("url").as("canonical_url"),
+      when(col("__text_len").isNotNull, col("url")).as("__win_url"),
+      lit(1L).as("source_count"),
+      col("warc_ts").as("first_seen"),
+      when(col("warc_ts").isNotNull, col("url")).as("__first_url"),
+      col("warc_ts").as("last_seen"),
+      when(col("warc_ts").isNotNull, lit(1L)).otherwise(lit(0L)).as("distinct_days"),
+      filter(array(col("lang")), _.isNotNull).as("langs"),
+      // array_compact, not filter: its elements are non-null, like CollectMinK's
+      array_compact(array(col("url"))).as("member_urls"))
+      .select(col("*"), flagged(lit(null).cast("double"), cfg),
+        lit(null).cast("double").as("match_confidence"),
+        lit(false).as("tier2_assisted"))
 
   /** The canonical rows: each [[clusters]] row with its winner's text.
     * Columns `clusters` carries beyond its own aggregate (the
@@ -218,6 +254,18 @@ object Synthesis {
       .agg(
         avg(col("match_weight")).as("match_confidence"),
         bool_or(col("is_tier2")).as("tier2_assisted"))
+    canon.join(matchAgg, Seq("component"), "left")
+      .select(canon.columns.map(col) ++ Seq(
+        flagged(col("match_confidence"), cfg),
+        col("match_confidence"),
+        coalesce(col("tier2_assisted"), lit(false)).as("tier2_assisted")): _*)
+  }
+
+  /** The coherence flag (C3, coherence.py:16-65) over a row carrying
+    * `source_count` and `distinct_days`, given the cluster's mean match
+    * confidence (null without a match edge).
+    */
+  private def flagged(confidence: Column, cfg: GraftConfig): Column = {
     // coherence check (c) webtext analog: date spread = distinct warc_ts
     // days. OPT-IN (cfg.cluster.warcDateCriterion): recrawls of one page
     // across many days are normal in web dedup, so flagging on crawl-day
@@ -227,14 +275,9 @@ object Synthesis {
       if (cfg.cluster.warcDateCriterion)
         col("distinct_days") > cfg.cluster.maxDistinctDates
       else lit(false)
-    canon.join(matchAgg, Seq("component"), "left")
-      .select(canon.columns.map(col) ++ Seq(
-        (col("source_count") > cfg.cluster.maxClusterSize ||
-          (col("match_confidence").isNotNull &&
-            col("match_confidence") < cfg.cluster.minInternalSimilarity) ||
-          dateClause).as("flagged"),
-        col("match_confidence"),
-        coalesce(col("tier2_assisted"), lit(false)).as("tier2_assisted")): _*)
+    (col("source_count") > cfg.cluster.maxClusterSize ||
+      (confidence.isNotNull && confidence < cfg.cluster.minInternalSimilarity) ||
+      dateClause).as("flagged")
   }
 
   /** Full event-domain canonical synthesizer (`synthesizer.py:16-126`): one

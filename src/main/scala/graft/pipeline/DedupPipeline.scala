@@ -167,12 +167,14 @@ final class DedupPipeline(
   }
 
   /** Cluster labels over the full vertex universe (singletons preserved,
-    * graph_cluster.py:65-66).
+    * graph_cluster.py:65-66). The match edges are a subset of the
+    * `decisions` rows, so that stage's row count, known without a job,
+    * bounds them for [[ConnectedComponents.run]].
     */
   def labels(sigs: DataFrame, decisionsDf: DataFrame): DataFrame = stage("labels", sigs, decisionsDf) {
     val vertices = sigs.select(col("node"))
     val edges = Decisions.matchEdges(decisionsDf)
-    ConnectedComponents.labelsWithSingletons(vertices, edges)
+    ConnectedComponents.labelsWithSingletons(vertices, edges, stageRows("decisions", decisionsDf))
   }
 
   /** The narrow per-cluster table ([[Synthesis.clusters]]: canonical url,
@@ -181,6 +183,20 @@ final class DedupPipeline(
     * are given. No text column: `__text_len` is projected BEFORE the labels
     * join, so text bytes cross neither the node join nor the per-cluster
     * aggregation shuffle.
+    *
+    * Only members of multi-member clusters are aggregated. With decisions
+    * given and urls unique ([[urlsUnique]]), a row whose node is in no
+    * match edge (`node_a` or `node_b` of a `match` decision, exactly the
+    * edges `labels` ran connected components on) got no component label,
+    * so its component is its own node and it is the only row there: it
+    * becomes its cluster row by [[Synthesis.singletonClusters]], a
+    * projection. The other rows go through the aggregate and
+    * `clusterQuality`, and the two branches meet in a union. In a crawl
+    * most components are singletons, so the aggregate's shuffle carries
+    * only the few multi-member clusters. The quality join stays below the
+    * union: above it, AQE can plan the union's shuffle on `component`
+    * before it turns the join into a broadcast, and the singleton rows
+    * then cross a shuffle after all.
     */
   def clusters(labelsDf: DataFrame, extractedDf: DataFrame,
       decisionsDf: Option[DataFrame] = None): DataFrame =
@@ -190,8 +206,18 @@ final class DedupPipeline(
         when(col("extracted_text").isNotNull && length(col("extracted_text")) > 0,
           length(col("extracted_text"))).as("__text_len"))
       .join(labelsDf, "node")
-    val agg = Synthesis.clusters(labeled, cfg)
-    decisionsDf.fold(agg)(Synthesis.clusterQuality(agg, labelsDf, _, cfg))
+    decisionsDf match {
+      case Some(dec) if urlsUnique(labelsDf, extractedDf) =>
+        val edges = Decisions.matchEdges(dec)
+        val matched = edges.select(col("src").as("node"))
+          .union(edges.select(col("dst").as("node")))
+        val multi = Synthesis.clusters(labeled.join(matched, Seq("node"), "left_semi"), cfg)
+        Synthesis.clusterQuality(multi, labelsDf, dec, cfg).unionByName(
+          Synthesis.singletonClusters(labeled.join(matched, Seq("node"), "left_anti"), cfg))
+      case _ =>
+        val agg = Synthesis.clusters(labeled, cfg)
+        decisionsDf.fold(agg)(Synthesis.clusterQuality(agg, labelsDf, _, cfg))
+    }
   }
 
   /** One canonical row per cluster: the [[clusters]] table with each
@@ -203,21 +229,32 @@ final class DedupPipeline(
     * text byte crosses a shuffle or the driver. At web scale it plans a
     * sort-merge join that moves each text once.
     *
-    * The fetch dedupes text versions per url only when a url can repeat.
-    * The row counts this pipeline already holds decide it, with no Spark
-    * job: `labels` has one row per distinct node (= per distinct url), so
-    * `rows(extracted) == rows(labels)` means the urls are unique.
+    * Only the members of multi-member clusters cross the `clusters`
+    * aggregate's shuffle; each row in no match edge gets its cluster row
+    * by projection (see [[clusters]]). Both branches yield the same
+    * columns, so the fetch treats every cluster row alike.
+    *
+    * The fetch dedupes text versions per url only when a url can repeat
+    * ([[urlsUnique]]).
     */
   def canonicals(labelsDf: DataFrame, extractedDf: DataFrame,
       decisionsDf: Option[DataFrame] = None): DataFrame =
     stage("canonicals", (Seq(labelsDf, extractedDf) ++ decisionsDf.toSeq): _*) {
-    val urlsUnique = (for {
+    Synthesis.withText(clusters(labelsDf, extractedDf, decisionsDf), extractedDf,
+      urlsUnique(labelsDf, extractedDf), cfg)
+  }
+
+  /** Whether every url of `extractedDf` is unique, decided from the row
+    * counts this pipeline already holds, with no Spark job: `labels` has
+    * one row per distinct node (= per distinct url), so
+    * `rows(extracted) == rows(labels)` means the urls are unique. False
+    * when either count is unknown.
+    */
+  private def urlsUnique(labelsDf: DataFrame, extractedDf: DataFrame): Boolean =
+    (for {
       e <- stageRows("extracted", extractedDf)
       l <- stageRows("labels", labelsDf)
     } yield e == l).getOrElse(false)
-    Synthesis.withText(clusters(labelsDf, extractedDf, decisionsDf), extractedDf,
-      urlsUnique, cfg)
-  }
 
   /** The row count of stage `name` when `df` is the frame this pipeline
     * returned for it: the checkpoint meta `rows`, or the persisted leaf's

@@ -156,6 +156,39 @@ class PlanAuditSpec extends SparkSpec {
     } finally p.unpersistAll()
   }
 
+  test("clusters stage: no exchange above the union; singleton rows cross no exchange") {
+    // every row used to reach the output through the cluster aggregate's
+    // shuffle; a quality join above the union let AQE shuffle the union
+    val pages = graft.datagen.PagesGen.pages(spark, 400L).toDF()
+    val p = new graft.pipeline.DedupPipeline(spark, graft.config.GraftConfig.default)
+    try {
+      p.runAll(pages)
+      val plan = cachedPlan(p, "clusters")
+      // the union of cluster rows, not the one of matched node ids
+      def isClusterUnion(n: org.apache.spark.sql.execution.SparkPlan) =
+        n.isInstanceOf[org.apache.spark.sql.execution.UnionExec] &&
+          n.output.exists(_.name == "canonical_url")
+      val unions = AQE.collect(plan) { case u if isClusterUnion(u) => u }
+      assert(unions.size == 1, s"clusters plan:\n$plan")
+      val above = AQE.collect(plan) {
+        case e: org.apache.spark.sql.execution.exchange.Exchange
+            if AQE.find(e)(isClusterUnion).isDefined => e
+      }
+      assert(above.isEmpty, s"an exchange sits above the union:\n$plan")
+      // the singleton branch: the one the anti join feeds. Its only
+      // exchanges are broadcasts, the build sides of its joins
+      val single = unions.head.children.filter(c => AQE.collect(c) {
+        case j: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+            if j.joinType == org.apache.spark.sql.catalyst.plans.LeftAnti => j
+      }.nonEmpty)
+      assert(single.size == 1, s"no anti-join branch under the union:\n$plan")
+      val shuffles = AQE.collect(single.head) {
+        case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => e
+      }
+      assert(shuffles.isEmpty, s"the singleton branch crosses a shuffle:\n$plan")
+    } finally p.unpersistAll()
+  }
+
   /** Runs the pipeline through `decisions` on 400 PagesGen docs plus three
     * pairs whose second page extends the first by 60 words (Jaccard about
     * 0.77, so tier 2 has ambiguous pairs to resolve), then releases its

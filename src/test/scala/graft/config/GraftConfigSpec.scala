@@ -108,6 +108,19 @@ class GraftConfigSpec extends AnyFunSuite {
     assert(GraftConfig.fromMap(Map("overlap.min_overlap_chars" -> "1")).overlap.minOverlapChars == 1)
   }
 
+  test("cluster.max_member_list below 1 fails fast at config build") {
+    // the member preview keeps the k smallest urls: k below 1 used to
+    // load and then fail the run at the clusters stage
+    for (bad <- Seq("0", "-1")) {
+      val e = intercept[IllegalArgumentException](
+        GraftConfig.fromMap(Map("cluster.max_member_list" -> bad)))
+      assert(e.getMessage.contains("max_member_list"))
+    }
+    intercept[IllegalArgumentException](
+      GraftConfig.default.copy(cluster = GraftConfig.default.cluster.copy(maxMemberList = 0)))
+    assert(GraftConfig.fromMap(Map("cluster.max_member_list" -> "1")).cluster.maxMemberList == 1)
+  }
+
   test("overlap.seed is rejected as an unknown key: fingerprint sampling takes no seed") {
     val e = intercept[IllegalArgumentException](
       GraftConfig.fromMap(Map("overlap.seed" -> "7")))

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
-import org.apache.spark.graft.ShuffleAndBlocks
+import org.apache.spark.graft.{JobCount, ShuffleAndBlocks}
 import org.apache.spark.sql.functions._
 
 class ConnectedComponentsSpec extends SparkSpec {
@@ -95,6 +95,25 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(labels.length == 201 && labels.forall(_._2 == 0L))
     assert(shuffleBytes == 0L, s"wrote $shuffleBytes shuffle bytes")
     assert(rddBlocks == 0, s"stored $rddBlocks RDD blocks")
+  }
+
+  test("a known edge bound at most the cutover collects the edges in one job") {
+    // 8 partitions of an RDD, whose row count the planner does not know:
+    // the bounded take scans 1, then 4, then the last 3 partitions, one job
+    // each, before it knows the edges are few
+    val edges = spark.sparkContext
+      .parallelize((0L until 100L).map(i => (2 * i, 2 * i + 1)), 8).toDF("src", "dst")
+    val (bounded, boundedJobs) = JobCount(spark.sparkContext)(
+      ConnectedComponents.run(edges, maxEdgeRows = Some(100L)))
+    val (taken, takeJobs) = JobCount(spark.sparkContext)(ConnectedComponents.run(edges))
+    assert(boundedJobs == 1, s"the finisher's edges took $boundedJobs jobs")
+    assert(takeJobs > 1, s"without a bound the incremental take ran $takeJobs jobs")
+    val want = (0L until 100L).flatMap(i => Seq(2 * i -> 2 * i, (2 * i + 1) -> 2 * i)).toMap
+    assert(bounded.as[(Long, Long)].collect().toMap == want)
+    assert(taken.as[(Long, Long)].collect().toMap == want)
+    // a bound over the cutover keeps the bounded take and the distributed rounds
+    assert(ConnectedComponents.run(edges, driverFinishEdges = 50, maxEdgeRows = Some(100L))
+      .as[(Long, Long)].collect().toMap == want)
   }
 
   test("repeats over the cutover run one distributed round, then the finisher") {

@@ -158,4 +158,39 @@ class SynthesisSpec extends SparkSpec {
       assert(fused(c)._3.getOrElse(false) == tiers.getOrElse(c, false), s"tier mismatch at $c")
     }
   }
+
+  test("singletonClusters == clusterQuality over clusters on one-member clusters") {
+    val ts = java.sql.Timestamp.valueOf("2025-01-01 10:00:00")
+    val rows = Seq[(Long, String, java.sql.Timestamp, String, String)](
+      (1L, "https://s.example/1", ts, "en", "some text"),
+      (2L, null, ts, "de", "text of a null url"),
+      (3L, "https://s.example/3", ts, "en", null),
+      (4L, "https://s.example/4", ts, "en", ""),
+      (5L, "https://s.example/5", ts, null, "text"),
+      (6L, "https://s.example/6", null, "fr", "text"),
+      (7L, null, null, null, null))
+    val labeled = rows.toDF("node", "url", "warc_ts", "lang", "extracted_text")
+      .select($"node", $"node".as("component"), $"url", $"warc_ts", $"lang",
+        when(length($"extracted_text") > 0, length($"extracted_text")).as("__text_len"))
+    val labels = labeled.select($"node", $"component")
+    val noDecisions = Seq.empty[(Long, Long, Double, String, String)]
+      .toDF("node_a", "node_b", "exact_jaccard", "decision", "tier")
+    val base = GraftConfig.default
+    val cfgs = Seq(
+      base,
+      base.copy(cluster = base.cluster.copy(maxMemberList = 1)),
+      base.copy(cluster = base.cluster.copy(warcDateCriterion = true, maxDistinctDates = 0)),
+      base.copy(cluster = base.cluster.copy(maxClusterSize = 0)))
+    for (cfg <- cfgs) {
+      val agg = Synthesis.clusterQuality(Synthesis.clusters(labeled, cfg), labels, noDecisions, cfg)
+      val single = Synthesis.singletonClusters(labeled, cfg)
+      assert(single.columns.toSeq == agg.columns.toSeq)
+      assert(single.schema.map(_.dataType) == agg.schema.map(_.dataType))
+      def asJson(df: org.apache.spark.sql.DataFrame) =
+        df.select(to_json(struct(df.columns.map(col): _*))).as[String].collect().sorted.toSeq
+      val want = asJson(agg)
+      assert(want.size == rows.size)
+      assert(asJson(single) == want, s"cluster config ${cfg.cluster}")
+    }
+  }
 }

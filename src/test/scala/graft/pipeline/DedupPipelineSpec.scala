@@ -108,6 +108,52 @@ class DedupPipelineSpec extends SparkSpec {
     assert(bad == 0)
   }
 
+  /** The pipeline's canonicals against the one-call oracle (every row
+    * through the cluster aggregate, then the quality join), as multisets of
+    * rows with every column, `field_provenance` included, as JSON.
+    */
+  private def assertCanonicalsMatchOracle(r: DedupResult): Unit = {
+    val labeled = r.extracted.select(xxhash64($"url").as("node"), $"*").join(r.labels, "node")
+    val oracle = graft.operators.Synthesis.clusterQuality(
+      graft.Oracles.canonicals(labeled, cfg), r.labels, r.decisions, cfg)
+    def asJson(df: org.apache.spark.sql.DataFrame) =
+      df.select(to_json(struct(oracle.columns.map(col): _*))).as[String].collect().sorted.toSeq
+    val (got, want) = (asJson(r.canonicals), asJson(oracle))
+    assert(r.canonicals.columns.toSet == oracle.columns.toSet)
+    assert(got.size == want.size && got == want,
+      s"${got.diff(want).take(3)} vs ${want.diff(got).take(3)}")
+  }
+
+  test("canonicals equal the all-aggregate oracle; singletons skip the cluster aggregate") {
+    assertCanonicalsMatchOracle(result)
+    val labels = result.labels
+    val multi = labels.groupBy("component").count().where($"count" > 1).count()
+    val single = labels.groupBy("component").count().where($"count" === 1).count()
+    assert(multi > 10 && single > 10, s"$multi multi-member and $single singleton clusters")
+    // urls are unique, so the clusters stage splits on the match edges
+    val plan = pipeline.computedStage("clusters").queryExecution.executedPlan.toString
+    assert(plan.contains("LeftAnti") && plan.contains("LeftSemi"), plan)
+  }
+
+  test("clusters on a mostly-singleton corpus shuffles only multi-member rows") {
+    // every component used to cross the aggregate's shuffle as one partial
+    // buffer: here about 90 bytes per component
+    val p = new DedupPipeline(spark, cfg)
+    try {
+      val ext = p.extracted(pages)
+      val sigs = p.signatures(ext)
+      val decs = p.decisions(p.candidates(sigs), sigs, ext)
+      val lbls = p.labels(sigs, decs)
+      val sizes = lbls.groupBy("component").count().as[(Long, Long)].collect().map(_._2)
+      val (components, singletons) = (sizes.length, sizes.count(_ == 1))
+      assert(singletons * 2 > components, s"$singletons singletons of $components components")
+      val (_, bytes, _) = org.apache.spark.graft.ShuffleAndBlocks(spark.sparkContext)(
+        p.clusters(lbls, ext, Some(decs)))
+      assert(bytes < 30L * components,
+        s"clusters wrote $bytes shuffle bytes for $components components")
+    } finally p.unpersistAll()
+  }
+
   test("a url ingested twice: one label row, one canonical per cluster, longest text wins") {
     // 40 PagesGen pages plus two urls ingested twice, with unrelated texts
     // so each is its cluster's text winner: `a` as a short and a longer
@@ -140,10 +186,14 @@ class DedupPipelineSpec extends SparkSpec {
           .select("text").as[String].collect().toSeq
         assert(textOf(a) == Seq(winner(a)) && winner(a).contains("tail"))
         assert(textOf(b) == Seq(winner(b)) && winner(b).endsWith("zz"))
+        assertCanonicalsMatchOracle(r)
       }
       // 44 extracted rows over 42 labels: the fetch keeps the per-url dedupe
       assert(plain.computedStage("canonicals").queryExecution.executedPlan.toString
         .contains("max_by"))
+      // and every row goes through the cluster aggregate: no singleton split
+      assert(!plain.computedStage("clusters").queryExecution.executedPlan.toString
+        .contains("LeftAnti"))
     } finally plain.unpersistAll()
   }
 
