@@ -1,9 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
-import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.config.GraftConfig
-import graft.pipeline.{Checkpoints, DedupPipeline}
+import graft.pipeline.DedupPipeline
 
 /** Production spark-submit entrypoint for the flagship dedup pipeline —
   * the north_rule's "runs via spark-submit on a multi-executor cluster"
@@ -156,26 +155,19 @@ object RunDedup {
     // exit, a failed output write included: the session outlives this run
     try {
       val result = pipeline.runAll(pages)
-      val written = Observation()
-      writeOutput(result.canonicals.observe(written, count(lit(1)).as("rows")), a.output)
+      writeOutput(result.canonicals, a.output)
       // Side tables a downstream consumer needs for audit/incremental folds.
       if (a.stagesOut) {
         writeOutput(result.decisions, s"${a.output.stripSuffix("/")}_decisions")
         writeOutput(result.labels, s"${a.output.stripSuffix("/")}_labels")
       }
 
-      val stats = Map(
-        "canonical_rows" -> written.get("rows").asInstanceOf[Long],
+      // each stage's row count as the pipeline recorded it when it made
+      // the stage: no Spark job, with or without a checkpoint dir
+      val rows = pipeline.stageRowCounts
+      rows.map { case (stage, n) => s"rows_$stage" -> n } ++ Map(
+        "canonical_rows" -> rows("canonicals"),
         "wall_ms" -> (System.nanoTime() - t0) / 1000000L)
-      // Per-stage row counts come from THIS run's checkpoint key's meta
-      // sidecars (no Spark job; a reused dir's older configs/inputs are
-      // excluded); without a checkpoint dir they'd cost a full re-count per
-      // stage, so only canonical_rows is reported.
-      val stageRows = a.checkpoint.fold(Map.empty[String, Long]) { dir =>
-        new Checkpoints(spark, dir, pipeline.checkpointKey).stageRows()
-          .map { case (stage, rows) => s"rows_$stage" -> rows }
-      }
-      stats ++ stageRows
     } finally if (a.checkpoint.isEmpty) pipeline.unpersistAll()
   }
 

@@ -79,11 +79,10 @@ object Synthesis {
     * excluded; null when no member has text), counts, dates, langs, the
     * capped member list and `__first_url`, the provenance of `first_seen`.
     *
-    * Text bytes never enter this aggregation: it reads a precomputed
-    * `__text_len` when `labeled` carries one (the pipeline projects it
-    * BEFORE the labels join — Catalyst prunes columns through joins but
-    * does not push expressions below them) or derives it from
-    * `extracted_text`.
+    * Text bytes never enter this aggregation: it reads the precomputed
+    * `__text_len` of `labeled` (the length of a non-empty text, else null;
+    * the pipeline projects it BEFORE the labels join — Catalyst prunes
+    * columns through joins but does not push expressions below them).
     *
     * Every row of `labeled` enters the `groupBy(component)` shuffle as a
     * partial aggregate buffer, one per component and map task. The
@@ -102,13 +101,8 @@ object Synthesis {
     // included) instead of the previous row_number window + second groupBy +
     // join — one narrow shuffle and a sort fewer.
     val k = cfg.cluster.maxMemberList
-    val textLen =
-      if (labeled.columns.contains("__text_len")) col("__text_len")
-      else when(col("extracted_text").isNotNull && length(col("extracted_text")) > 0,
-        length(col("extracted_text")))
     labeled
-      .select(col("component"), col("url"), col("warc_ts"), col("lang"),
-        textLen.as("__text_len"))
+      .select(col("component"), col("url"), col("warc_ts"), col("lang"), col("__text_len"))
       .groupBy(col("component"))
       .agg(
         min(col("url")).as("canonical_url"),
@@ -252,7 +246,7 @@ object Synthesis {
       .join(labels.select(col("node"), col("component")), "node")
       .groupBy("component")
       .agg(
-        avg(col("match_weight")).as("match_confidence"),
+        exactMean(col("match_weight")).as("match_confidence"),
         bool_or(col("is_tier2")).as("tier2_assisted"))
     canon.join(matchAgg, Seq("component"), "left")
       .select(canon.columns.map(col) ++ Seq(
@@ -260,6 +254,15 @@ object Synthesis {
         col("match_confidence"),
         coalesce(col("tier2_assisted"), lit(false)).as("tier2_assisted")): _*)
   }
+
+  /** The mean of `weight`, a double in [0, 1], independent of the order
+    * the rows are summed in: each weight is cast to `decimal(38,18)`,
+    * whose sums are exact, and the mean is cast back to double. A double
+    * `avg` adds in the partial-aggregate layout's order, so its last bits
+    * would follow the physical plan (the join strategy above it).
+    */
+  def exactMean(weight: Column): Column =
+    avg(weight.cast("decimal(38,18)")).cast("double")
 
   /** The coherence flag (C3, coherence.py:16-65) over a row carrying
     * `source_count` and `distinct_days`, given the cluster's mean match

@@ -40,7 +40,7 @@ final class Checkpoints(spark: SparkSession, workDir: String, configHash: String
   private def fs(p: String): FileSystem =
     new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private case class Meta(stage: String, configHash: String, rows: Long, schema: StructType)
+  private case class Meta(configHash: String, rows: Long, schema: StructType)
 
   /** The stage's commit record under any config key; None if the sidecar is
     * missing, unreadable or lacks a field (an older layout recomputes), or
@@ -51,7 +51,7 @@ final class Checkpoints(spark: SparkSession, workDir: String, configHash: String
       .filter(_ => fs(workDir).exists(new Path(dataPath(stage))))
     def field(k: String) = j.flatMap(n => Option(n.get(k)))
     for (hash <- field("config_hash"); rows <- field("rows"); schema <- field("schema"))
-      yield Meta(stage, hash.asText, rows.asLong,
+      yield Meta(hash.asText, rows.asLong,
         DataType.fromJson(schema.toString).asInstanceOf[StructType])
   }
 
@@ -71,10 +71,11 @@ final class Checkpoints(spark: SparkSession, workDir: String, configHash: String
   /** Run `compute` unless this stage already checkpointed under the current
     * config hash; always return the stage read back FROM the checkpoint so
     * downstream lineage starts at the parquet scan (bounded plans, stable
-    * partitioning).
+    * partitioning), with its row count: the meta's `rows` when the stage
+    * was complete, else the count the write just observed.
     */
-  def stage(name: String)(compute: => DataFrame): DataFrame = {
-    val schema = readMeta(name).filter(_.configHash == configHash).map(_.schema).getOrElse {
+  def stage(name: String)(compute: => DataFrame): (DataFrame, Long) = {
+    val meta = readMeta(name).filter(_.configHash == configHash).getOrElse {
       val t0 = System.nanoTime()
       // Invalidate the meta sidecar BEFORE the data overwrite: the
       // overwrite deletes the previous config's files first, so a crash
@@ -87,26 +88,15 @@ final class Checkpoints(spark: SparkSession, workDir: String, configHash: String
       val written = Observation()
       df.observe(written, count(lit(1)).as("rows"))
         .write.mode("overwrite").parquet(dataPath(name))
+      val m = Meta(configHash, written.get("rows").asInstanceOf[Long], df.schema)
       writeJson(new Path(metaPath(name)), Checkpoints.json.createObjectNode()
-        .put("stage", name).put("config_hash", configHash)
-        .put("rows", written.get("rows").asInstanceOf[Long])
+        .put("stage", name).put("config_hash", configHash).put("rows", m.rows)
         .put("wall_ms", (System.nanoTime() - t0) / 1000000L)
         .set[JsonNode]("schema", Checkpoints.json.readTree(df.schema.json)))
-      df.schema
+      m
     }
-    spark.read.schema(schema).parquet(dataPath(name))
+    (spark.read.schema(meta.schema).parquet(dataPath(name)), meta.rows)
   }
-
-  /** Every stage committed in `workDir`, under any config key. */
-  private def committed(): Seq[Meta] =
-    (try fs(workDir).listStatus(new Path(workDir)).toSeq
-    catch { case _: java.io.FileNotFoundException => Nil })
-      .map(_.getPath.getName).filter(_.endsWith("__meta.json"))
-      .flatMap(n => readMeta(n.stripSuffix("__meta.json")))
-
-  /** Row count of each stage committed under this config key (no Spark job). */
-  def stageRows(): Map[String, Long] =
-    committed().filter(_.configHash == configHash).map(m => m.stage -> m.rows).toMap
 }
 
 object Checkpoints {

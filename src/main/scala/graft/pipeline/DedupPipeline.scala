@@ -30,72 +30,85 @@ final class DedupPipeline(
     ckptKeyExtra: String = ""
 ) {
   /** Full checkpoint identity: config hash, plus the caller's input key. */
-  val checkpointKey: String =
+  private val checkpointKey: String =
     if (ckptKeyExtra.isEmpty) cfg.configHash else s"${cfg.configHash}-$ckptKeyExtra"
 
   private val ckpt = workDir.map(new Checkpoints(spark, _, checkpointKey))
 
-  /** Without a checkpoint dir, every stage is persisted: each one feeds
+  /** One record per stage this pipeline made: the leaf it hands
+    * downstream, the input plans it was made from, the persisted frame
+    * behind the leaf, and the row count, known without a Spark job when
+    * the leaf is made (the checkpoint meta's `rows`, or the filled cache's
+    * measured count).
+    *
+    * Without a checkpoint dir every stage is persisted: each one feeds
     * multiple downstream branches (extracted ×3, signatures ×3, decisions
     * via settled/ambiguous unions) and the recompute blow-up is
-    * multiplicative. The stage hands downstream a leaf over the persisted
-    * data ([[org.apache.spark.sql.graftbridge.Bridge.planLeaf]]): its plan
-    * is built and planned once, and no downstream plan analyzes, plans or
-    * prints it again. With a checkpoint dir the parquet read-back plays
-    * both roles. Stage DataFrames are memoized per pipeline instance so
-    * repeated calls share one leaf.
+    * multiplicative. The leaf is a plan over the persisted data
+    * ([[org.apache.spark.sql.graftbridge.Bridge.planLeaf]]): its plan is
+    * built and planned once, and no downstream plan analyzes, plans or
+    * prints it again. `persisted` owns the cache entry (unpersisting a
+    * leaf releases nothing). With a checkpoint dir the parquet read-back
+    * is the leaf and nothing is persisted.
     */
-  private val stageCache = scala.collection.mutable.HashMap.empty[String, DataFrame]
+  private final class StageRecord(val leaf: DataFrame,
+      val inputs: Seq[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan],
+      val persisted: Option[DataFrame], val rows: Option[Long])
 
-  // The persisted frames behind the no-checkpoint leaves: the handles that
-  // own the cache entries (unpersisting a leaf releases nothing).
-  private val persisted = scala.collection.mutable.HashMap.empty[String, DataFrame]
-
-  // Memoization is keyed by stage NAME: one pipeline instance serves ONE
-  // corpus. Remember each stage's input plans and fail fast if the stage is
-  // re-invoked with a different input — the silent alternative returns
-  // corpus A's cached stage for corpus B.
-  private val stageInputs = scala.collection.mutable.HashMap
-    .empty[String, Seq[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]]
+  // Keyed by stage NAME: one pipeline instance serves ONE corpus, so a
+  // stage re-invoked with a different input fails fast — the silent
+  // alternative returns corpus A's stage for corpus B.
+  private val stages = scala.collection.mutable.HashMap.empty[String, StageRecord]
 
   // synchronized (reentrant, so stages computing other stages in one
   // thread still work): two threads sharing one pipeline instance must not
-  // race the mutable memo maps or compute one stage twice. The ONE coarse
+  // race the record map or compute one stage twice. The ONE coarse
   // monitor deliberately serializes even different-stage computes:
   // single-flight correctness over a parallelism no pipeline use case
   // needs (stages form one dependency chain; per-name single-flight
   // futures would buy nothing but complexity here)
-  private def stage(name: String, inputs: DataFrame*)(compute: => DataFrame): DataFrame = stageCache.synchronized {
+  private def stage(name: String, inputs: DataFrame*)(compute: => DataFrame): DataFrame = stages.synchronized {
     val plans = inputs.map(_.queryExecution.analyzed)
-    stageInputs.get(name) match {
-      case Some(prev) =>
-        require(prev.length == plans.length &&
-          prev.lazyZip(plans).forall((a, b) => a.sameResult(b)),
+    stages.get(name) match {
+      case Some(r) =>
+        require(r.inputs.length == plans.length &&
+          r.inputs.lazyZip(plans).forall((a, b) => a.sameResult(b)),
           s"DedupPipeline stage '$name' was already computed for a different " +
             "input — stage results are memoized per instance; build a new " +
             "DedupPipeline for a new corpus")
-      case None => stageInputs(name) = plans
-    }
-    stageCache.getOrElseUpdate(name, ckpt match {
-      case Some(c) => c.stage(name)(compute)
+        r.leaf
       case None =>
-        val df = persisted.getOrElseUpdate(name,
-          compute.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-        org.apache.spark.sql.graftbridge.Bridge.planLeaf(df)
-    })
+        val r = ckpt match {
+          case Some(c) =>
+            val (leaf, rows) = c.stage(name)(compute)
+            new StageRecord(leaf, plans, None, Some(rows))
+          case None =>
+            val df = compute.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            val leaf =
+              try org.apache.spark.sql.graftbridge.Bridge.planLeaf(df)
+              catch { case e: Throwable => df.unpersist(false); throw e }
+            new StageRecord(leaf, plans, Some(df),
+              leaf.queryExecution.optimizedPlan.stats.rowCount.map(_.toLong))
+        }
+        stages(name) = r
+        r.leaf
+    }
   }
 
   /** The plan a no-checkpoint stage computed and persisted — not the leaf
     * it handed downstream — for plan audits.
     */
   private[graft] def computedStage(name: String): DataFrame =
-    stageCache.synchronized(persisted(name))
+    stages.synchronized(stages(name).persisted.get)
+
+  /** The row count of every stage this pipeline made. Runs no Spark job. */
+  private[graft] def stageRowCounts: Map[String, Long] =
+    stages.synchronized(stages.flatMap { case (name, r) => r.rows.map(name -> _) }.toMap)
 
   /** Release persisted stage data (no-checkpoint mode). */
-  def unpersistAll(): Unit = stageCache.synchronized {
-    persisted.values.foreach(_.unpersist(false))
-    persisted.clear()
-    stageCache.clear()
+  def unpersistAll(): Unit = stages.synchronized {
+    stages.values.flatMap(_.persisted).foreach(_.unpersist(false))
+    stages.clear()
   }
 
   /** Extraction: html bytes → normalized text (byte-identical per url). */
@@ -235,13 +248,16 @@ final class DedupPipeline(
     * columns, so the fetch treats every cluster row alike.
     *
     * The fetch dedupes text versions per url only when a url can repeat
-    * ([[urlsUnique]]).
+    * ([[urlsUnique]]). `clusters` is made first, like `tier1_decisions` in
+    * [[decisions]], so a run that reads `canonicals` back from its
+    * checkpoint still holds the `clusters` record.
     */
   def canonicals(labelsDf: DataFrame, extractedDf: DataFrame,
-      decisionsDf: Option[DataFrame] = None): DataFrame =
+      decisionsDf: Option[DataFrame] = None): DataFrame = {
+    val clustersDf = clusters(labelsDf, extractedDf, decisionsDf)
     stage("canonicals", (Seq(labelsDf, extractedDf) ++ decisionsDf.toSeq): _*) {
-    Synthesis.withText(clusters(labelsDf, extractedDf, decisionsDf), extractedDf,
-      urlsUnique(labelsDf, extractedDf), cfg)
+      Synthesis.withText(clustersDf, extractedDf, urlsUnique(labelsDf, extractedDf), cfg)
+    }
   }
 
   /** Whether every url of `extractedDf` is unique, decided from the row
@@ -257,26 +273,13 @@ final class DedupPipeline(
     } yield e == l).getOrElse(false)
 
   /** The row count of stage `name` when `df` is the frame this pipeline
-    * returned for it: the checkpoint meta `rows`, or the persisted leaf's
-    * measured count. None for any other frame. Runs no Spark job.
+    * returned for it; None for any other frame. Runs no Spark job.
     */
   private def stageRows(name: String, df: DataFrame): Option[Long] =
-    stageCache.get(name).filter(_ eq df).flatMap { leaf =>
-      ckpt match {
-        case Some(c) => c.stageRows().get(name)
-        case None => leaf.queryExecution.optimizedPlan.stats.rowCount.map(_.toLong)
-      }
-    }
+    stages.get(name).filter(_.leaf eq df).flatMap(_.rows)
 
   /** Run end-to-end; returns the canonicals DataFrame. */
-  def run(pages: DataFrame): DataFrame = {
-    val ext = extracted(pages)
-    val sigs = signatures(ext)
-    val cands = candidates(sigs)
-    val decs = decisions(cands, sigs, ext)
-    val lbls = labels(sigs, decs)
-    canonicals(lbls, ext, Some(decs))
-  }
+  def run(pages: DataFrame): DataFrame = runAll(pages).canonicals
 
   /** All intermediate stages, for tests/metrics. */
   def runAll(pages: DataFrame): DedupResult = {

@@ -146,9 +146,12 @@ object Oracles {
     * G1 semantics), member list, counts, time range, langs union, and a
     * field→source provenance map (G10).
     */
-  def canonicals(labeled: DataFrame, cfg: GraftConfig): DataFrame =
-    graft.operators.Synthesis.withText(graft.operators.Synthesis.clusters(labeled, cfg),
+  def canonicals(labeled: DataFrame, cfg: GraftConfig): DataFrame = {
+    val text = col("extracted_text")
+    val withLen = labeled.withColumn("__text_len", when(length(text) > 0, length(text)))
+    graft.operators.Synthesis.withText(graft.operators.Synthesis.clusters(withLen, cfg),
       labeled, urlsUnique = false, cfg)
+  }
 
   /** Signature-estimated Jaccard: the fraction of agreeing MinHash
     * components, the unbiased estimate banding is tuned around.
@@ -170,7 +173,7 @@ object Oracles {
     val edgeInCluster = edges
       .join(lbl.toDF("src", "component"), "src")
       .groupBy("component")
-      .agg(avg(col("weight")).as("avg_weight"), count(lit(1)).as("edge_count"))
+      .agg(graft.operators.Synthesis.exactMean(col("weight")).as("avg_weight"), count(lit(1)).as("edge_count"))
     lbl.groupBy("component").agg(count(lit(1)).as("size"))
       .join(edgeInCluster, Seq("component"), "left")
       .withColumn("flagged",
@@ -185,7 +188,7 @@ object Oracles {
     val lbl = labels.select(col("node"), col("component"))
     edges.join(lbl.toDF("src", "component"), "src")
       .groupBy("component")
-      .agg(avg(col("weight")).as("match_confidence"))
+      .agg(graft.operators.Synthesis.exactMean(col("weight")).as("match_confidence"))
   }
 
   /** G13 tier flag per cluster (`matching/pipeline.py:304-314`): did any

@@ -17,6 +17,18 @@ class GraftConfigSpec extends AnyFunSuite {
     assert(GraftConfig.fromMap(Map("lsh.ambiguous_low" -> "0.6")).lsh.ambiguousLow == 0.6)
   }
 
+  test("every known key is read: a non-default value changes the config hash") {
+    // a key KnownKeys accepts but fromMap never reads would be ignored
+    val value = Map("cluster.warc_date_criterion" -> "true",
+      // keep bands × rows_per_band ≤ num_hashes (16 × 8 ≤ 128 by default)
+      "lsh.num_hashes" -> "256", "lsh.bands" -> "8", "lsh.rows_per_band" -> "4")
+      .withDefaultValue("7") // differs from every numeric default
+    val base = GraftConfig.default.configHash
+    val ignored = GraftConfig.KnownKeys.toSeq.sorted
+      .filter(k => GraftConfig.fromMap(Map(k -> value(k))).configHash == base)
+    assert(ignored.isEmpty, s"keys accepted but not read: $ignored")
+  }
+
   test("properties-file round trip") {
     val f = java.nio.file.Files.createTempFile("graft", ".properties")
     java.nio.file.Files.write(f,

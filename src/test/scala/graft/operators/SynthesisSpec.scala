@@ -159,6 +159,28 @@ class SynthesisSpec extends SparkSpec {
     }
   }
 
+  test("clusterQuality: match_confidence does not follow the partition layout") {
+    // (0.1 + 0.2) + 0.3 != (0.2 + 0.3) + 0.1 in doubles: a double avg over
+    // these partials differs in its last bits between the two layouts
+    val labels = Seq((1L, 1L), (2L, 1L), (3L, 1L), (4L, 1L)).toDF("node", "component")
+    val canon = Seq((1L, 4L, 0L)).toDF("component", "source_count", "distinct_days")
+    def confidence(weights: Seq[Double]): Double = {
+      // parallelize slices 3 rows into [w0] and [w1, w2]
+      val rows = spark.sparkContext.parallelize(
+        weights.zipWithIndex.map { case (w, i) => (i + 1L, i + 2L, w, "match", "jaccard") }, 2)
+      val decisions = rows.toDF("node_a", "node_b", "exact_jaccard", "decision", "tier")
+      assert(decisions.rdd.glom().map(_.length).collect().toSeq == Seq(1, 2))
+      Synthesis.clusterQuality(canon, labels, decisions, GraftConfig.default)
+        .select($"match_confidence").as[Double].collect().toSeq match {
+        case Seq(c) => c
+      }
+    }
+    val a = confidence(Seq(0.3, 0.1, 0.2)) // [0.3] + [0.1, 0.2]
+    val b = confidence(Seq(0.1, 0.2, 0.3)) // [0.1] + [0.2, 0.3]
+    assert(a == b, s"$a != $b")
+    assert(math.abs(a - 0.2) < 1e-15)
+  }
+
   test("singletonClusters == clusterQuality over clusters on one-member clusters") {
     val ts = java.sql.Timestamp.valueOf("2025-01-01 10:00:00")
     val rows = Seq[(Long, String, java.sql.Timestamp, String, String)](

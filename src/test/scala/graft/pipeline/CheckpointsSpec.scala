@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions._
 
 /** The checkpoint commit protocol's cost and on-disk format: a commit is the
   * stage's own write and nothing else, a read-back launches no job, the meta
-  * sidecar alone records rows and schema, and a sidecar whose data dir is
-  * gone reads as incomplete.
+  * sidecar alone records rows and schema (`stage` returns the rows with the
+  * read-back), and a sidecar whose data dir is gone reads as incomplete.
   */
 class CheckpointsSpec extends SparkSpec {
   import spark.implicits._
@@ -21,9 +21,9 @@ class CheckpointsSpec extends SparkSpec {
 
   test("a narrow stage commits in exactly one Spark job") {
     val ck = new Checkpoints(spark, workDir("commit"), "h")
-    val (_, n) = jobs(ck.stage("urls")(pages.select("url")))
+    val ((_, rows), n) = jobs(ck.stage("urls")(pages.select("url")))
     assert(n == 1, s"commit launched $n jobs")
-    assert(ck.stageRows() == Map("urls" -> 200L))
+    assert(rows == 200L)
   }
 
   test("reading back a complete stage launches no job, in the same or a fresh instance") {
@@ -31,9 +31,9 @@ class CheckpointsSpec extends SparkSpec {
     val ck = new Checkpoints(spark, dir, "h")
     ck.stage("urls")(pages.select("url"))
     Seq(ck, new Checkpoints(spark, dir, "h")).foreach { c =>
-      val (back, n) = jobs(c.stage("urls")(fail("a complete stage must not recompute")))
+      val ((back, rows), n) = jobs(c.stage("urls")(fail("a complete stage must not recompute")))
       assert(n == 0, s"read-back launched $n jobs")
-      assert(back.columns.toSeq == Seq("url"))
+      assert(back.columns.toSeq == Seq("url") && rows == 200L)
     }
   }
 
@@ -42,11 +42,11 @@ class CheckpointsSpec extends SparkSpec {
     val filtered = pages.select($"url", $"warc_ts").where(lit(false))
     val local = spark.createDataFrame(java.util.List.of[Row](), filtered.schema)
     val ck = new Checkpoints(spark, dir, "h")
-    ck.stage("filtered")(filtered)
-    ck.stage("local")(local)
-    assert(ck.stageRows() == Map("filtered" -> 0L, "local" -> 0L))
+    assert(ck.stage("filtered")(filtered)._2 == 0L)
+    assert(ck.stage("local")(local)._2 == 0L)
     Seq("filtered", "local").foreach { name =>
-      val back = new Checkpoints(spark, dir, "h").stage(name)(fail("must not recompute"))
+      val (back, rows) = new Checkpoints(spark, dir, "h").stage(name)(fail("must not recompute"))
+      assert(rows == 0L)
       assert(back.schema.map(f => f.name -> f.dataType) ==
         filtered.schema.map(f => f.name -> f.dataType))
       assert(back.count() == 0L)
@@ -64,16 +64,23 @@ class CheckpointsSpec extends SparkSpec {
     finally out.close()
     assert(!ck.isComplete("s"))
     var recomputed = false
-    val back = ck.stage("s") { recomputed = true; Seq(1, 2, 3).toDF("v") }
-    assert(recomputed && back.count() == 3L && ck.isComplete("s"))
+    val (back, rows) = ck.stage("s") { recomputed = true; Seq(1, 2, 3).toDF("v") }
+    assert(recomputed && back.count() == 3L && rows == 3L && ck.isComplete("s"))
   }
 
-  test("stageRows() holds each multi-partition stage's committed row count") {
-    val ck = new Checkpoints(spark, workDir("rows"), "h")
-    ck.stage("a")(pages.select("url").repartition(5))
-    ck.stage("b")(spark.range(0L, 1000L, 1L, 7).toDF("id"))
-    ck.stage("c")(pages.select("url").where(lit(false)))
-    assert(ck.stageRows() == Map("a" -> 200L, "b" -> 1000L, "c" -> 0L))
+  test("stage() returns each multi-partition stage's committed row count") {
+    val dir = workDir("rows")
+    val ck = new Checkpoints(spark, dir, "h")
+    val stages = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "a" -> (() => pages.select("url").repartition(5)),
+      "b" -> (() => spark.range(0L, 1000L, 1L, 7).toDF("id")),
+      "c" -> (() => pages.select("url").where(lit(false))))
+    val want = Map("a" -> 200L, "b" -> 1000L, "c" -> 0L)
+    assert(stages.map { case (n, df) => n -> ck.stage(n)(df())._2 }.toMap == want)
+    // read back from the meta sidecar by a fresh instance
+    val again = new Checkpoints(spark, dir, "h")
+    assert(stages.map { case (n, _) => n -> again.stage(n)(fail("must not recompute"))._2 }
+      .toMap == want)
   }
 
   test("isComplete self-heals when the data dir is gone but the meta sidecar survives") {
@@ -87,6 +94,6 @@ class CheckpointsSpec extends SparkSpec {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(s"$wd/s"), true)
     assert(!ck.isComplete("s"), "orphaned meta must not claim completeness")
-    assert(ck.stage("s")(Seq(1, 2, 3).toDF("v")).count() == 3, "stage must recompute")
+    assert(ck.stage("s")(Seq(1, 2, 3).toDF("v"))._1.count() == 3, "stage must recompute")
   }
 }

@@ -248,7 +248,9 @@ class DedupPipelineSpec extends SparkSpec {
     val p2 = new DedupPipeline(spark, cfg, Some(dir))
     val labels2 = p2.runAll(pages).labels.as[(Long, Long)].collect().toMap
     assert(labels1 == labels2)
-    assert(ck.stageRows().get("extracted").contains(pages.count()))
+    // the read-back records the counts the first run committed
+    assert(p2.stageRowCounts.get("extracted").contains(pages.count()))
+    assert(p2.stageRowCounts == p1.stageRowCounts)
     // a config change invalidates checkpoints
     val cfg2 = cfg.copy(lsh = cfg.lsh.copy(jaccardThreshold = 0.7))
     val ck2 = new Checkpoints(spark, dir, cfg2.configHash)
@@ -259,10 +261,9 @@ class DedupPipelineSpec extends SparkSpec {
     val local = java.nio.file.Files.createTempDirectory("graft-ckpt-uri")
     val dir = local.toUri.toString.stripSuffix("/") // "file:///..." form
     val ck = new Checkpoints(spark, dir, cfg.configHash)
-    val out = ck.stage("s_uri") { pages.limit(7).select($"url") }
-    assert(out.count() == 7)
+    val (out, rows) = ck.stage("s_uri") { pages.limit(7).select($"url") }
+    assert(out.count() == 7 && rows == 7L)
     assert(ck.isComplete("s_uri"))
-    assert(ck.stageRows() == Map("s_uri" -> 7L))
     // meta sidecar landed on the target filesystem next to the data
     assert(java.nio.file.Files.exists(local.resolve("s_uri__meta.json")))
   }
@@ -275,8 +276,8 @@ class DedupPipelineSpec extends SparkSpec {
     // simulate a crash between data write and meta write: delete only meta
     java.nio.file.Files.delete(java.nio.file.Paths.get(s"$dir/s1__meta.json"))
     assert(!ck.isComplete("s1")) // incomplete → the stage will recompute
-    val again = ck.stage("s1") { pages.limit(10).select($"url") }
-    assert(again.count() == 10 && ck.isComplete("s1"))
+    val (again, rows) = ck.stage("s1") { pages.limit(10).select($"url") }
+    assert(again.count() == 10 && rows == 10L && ck.isComplete("s1"))
   }
 
   test("stage memoization is bound to one input: a second corpus fails fast") {

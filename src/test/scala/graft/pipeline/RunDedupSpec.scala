@@ -79,6 +79,19 @@ class RunDedupSpec extends SparkSpec {
     assert(spark.read.parquet(s"$dir/out-resumed").count() == first("canonical_rows"))
   }
 
+  test("a run without a checkpoint dir reports the same stage row counts") {
+    val dir = Files.createTempDirectory("graft_run_rows").toString
+    PagesGen.pages(spark, 250L).toDF.write.parquet(s"$dir/pages")
+    val plain = RunDedup.parse(Array("--input", s"$dir/pages", "--output", s"$dir/out"))
+    val checkpointed = RunDedup.run(spark, plain.copy(checkpoint = Some(s"$dir/ckpt")))
+    val uncheckpointed = RunDedup.run(spark, plain)
+    val stages = Seq("extracted", "signatures", "candidates", "tier1_decisions",
+      "decisions", "labels", "clusters", "canonicals")
+    assert(checkpointed.keySet == stages.map("rows_" + _).toSet ++ Set("canonical_rows", "wall_ms"))
+    assert(uncheckpointed - "wall_ms" == checkpointed - "wall_ms")
+    assert(uncheckpointed("canonical_rows") == spark.read.parquet(s"$dir/out").count())
+  }
+
   test("a failed output write still releases every stage cache") {
     val dir = Files.createTempDirectory("graft_run_fail").toString
     PagesGen.pages(spark, 200L).toDF.write.parquet(s"$dir/pages")
