@@ -20,12 +20,19 @@ import graft.functions.SortedIntersectSize.sortedIntersectSize
   *    by [[splitHotBuckets]], the one guard every bucket join shares
   *    (dropped buckets are observable in [[bucketStats]], never silent) —
   *    pair blowup is quadratic in bucket size, so one 10^6 bucket would
-  *    otherwise emit 10^12 pairs;
+  *    otherwise emit 10^12 pairs. The hot set is one lazy (key, min_node)
+  *    aggregate ([[hotBuckets]]); only pass-1 survivor keys reach the driver;
   *  - AQE skew-join handles residual imbalance below the cap;
   *  - pair canonical ordering `node_a < node_b` halves the join output and
   *    `dropDuplicates` dedups across bands (candidate_pairs.py:59-64 semantics).
   */
 object MinHashLsh {
+
+  /** The CC node id of a page: the 64-bit xxhash of its url. At 10^12 docs
+    * 64-bit birthday collisions appear (~3%); production would widen to a
+    * 128-bit id, the pipeline only needs ids orderable + hashable.
+    */
+  def nodeId(url: Column): Column = xxhash64(url)
 
   /** Per-doc signature stage: tokens → distinct shingle hashes → MinHash
     * signature + SimHash. One narrow projection, no shuffle.
@@ -34,10 +41,7 @@ object MinHashLsh {
     * (node, n_tokens, shingles, simhash, band_keys). The 128-long MinHash
     * never leaves this projection: its only consumers are the LSH band keys
     * ([[graft.functions.BandKeys]], 16 longs), so that is what a signature
-    * row carries.
-    * `node` is the 64-bit xxhash of the url — the CC node id. At 10^12 docs
-    * 64-bit birthday collisions appear (~3%); production would widen to a
-    * 128-bit id, the pipeline only needs ids orderable + hashable.
+    * row carries. `node` is [[nodeId]] of the url.
     */
   def signatures(extracted: DataFrame, cfg: GraftConfig): DataFrame = {
     // One fused byte-walk per document ([[graft.functions.DocSignature]])
@@ -49,7 +53,7 @@ object MinHashLsh {
     val sig = Hashing.docSignature(col("extracted_text"),
       cfg.lsh.shingleSize, cfg.lsh.numHashes, cfg.lsh.seed, cfg.simhash.seed)
     extracted
-      .withColumn("node", xxhash64(col("url")))
+      .withColumn("node", nodeId(col("url")))
       .select(col("*"), inline(array(sig)))
       .withColumn("band_keys", Hashing.bandKeys(col("minhash"), cfg.lsh.bands, cfg.lsh.rowsPerBand))
       .drop("minhash")
@@ -76,84 +80,74 @@ object MinHashLsh {
         sum(when(col("count") > 1, col("count") * (col("count") - 1) / 2).otherwise(0)).as("candidate_pairs_upper")
       )
 
-  /** Exact set of hot keys (bucket size > cap), collected to the driver.
-    * Hot keys are few by construction (each holds > cap rows); no other key
-    * ever reaches the driver.
+  /** The buckets of `rows` with more than `cap` members, as a lazy plan of
+    * (keyCol, min_node); `None` when pass 1 finds no survivor.
     *
-    * Pass 1 (shuffle-free): count keys per partition and keep only keys that
-    * clear the pigeonhole bound — a key with total count > cap spread over m
-    * partitions must reach a local count ≥ ceil((cap+1)/m) in at least one
-    * partition, so the survivor set is a superset of the true hot set. On
-    * non-pathological corpora it is empty and detection costs one narrow
-    * local pass. Per-task state is one (key → count) map over the
-    * partition's distinct keys.
+    * Pass 1 (shuffle-free, the only job run while the plan is built): count
+    * keys per partition and keep only keys that clear the pigeonhole bound
+    * — a key with total count > cap spread over m partitions must reach a
+    * local count ≥ ceil((cap+1)/m) in at least one partition, so the
+    * survivors are a superset of the hot set (on non-pathological corpora,
+    * empty). Per-task state is one (key → count) map.
     *
-    * Pass 2 (only when pass 1 finds survivors): exact-count just the
-    * survivor keys behind a broadcast semi-join and apply the true `> cap`
-    * filter — the aggregation output is |survivors|, not |distinct keys|.
-    *
-    * When m > cap the bound falls to 1 and pass 1 would return every
-    * distinct key, so it is skipped: one exact count over all keys runs
-    * instead and only the hot keys are collected.
+    * Pass 2 is the returned plan: count and min(node) per key, kept when
+    * `count > cap`, over the survivor keys' rows (a broadcast semi-join) —
+    * its output is |survivors|, not |distinct keys|. When m > cap the bound
+    * falls to 1 and pass 1 would return every key, so it is skipped: the
+    * aggregate reads all rows and building the plan runs no job.
     */
-  private[operators] def hotKeyArray(rows: DataFrame, keyCol: String, cap: Int): Array[Long] = {
+  private[operators] def hotBuckets(rows: DataFrame, keyCol: String, cap: Int): Option[DataFrame] = {
     val keys = rows.select(col(keyCol))
     require(keys.schema.head.dataType == org.apache.spark.sql.types.LongType,
       s"hot-key detection expects a LongType key, got ${keys.schema.head.dataType}")
-    def exactHot(candidates: DataFrame): Array[Long] =
-      candidates.groupBy(keyCol).count()
-        .where(col("count") > cap)
-        .select(keyCol).collect().map(_.getLong(0))
     val rdd = keys.queryExecution.toRdd // InternalRow: no Row conversion
     val m = math.max(1, rdd.getNumPartitions)
     val thr = (cap.toLong + m) / m // ceil((cap+1)/m)
-    if (thr < 2) return exactHot(keys)
-    val survivors = rdd.mapPartitions { it =>
-      val counts = new java.util.HashMap[Long, Long]()
-      while (it.hasNext) {
-        val k = it.next().getLong(0)
-        counts.put(k, counts.getOrDefault(k, 0L) + 1L)
-      }
-      import scala.jdk.CollectionConverters._
-      counts.entrySet().iterator().asScala
-        .filter(_.getValue >= thr).map(_.getKey.longValue())
-    }.collect().distinct
-    if (survivors.isEmpty) Array.empty[Long]
-    else {
+    val counted = if (thr < 2) Some(rows) else {
+      val survivors = rdd.mapPartitions { it =>
+        val counts = new java.util.HashMap[Long, Long]()
+        while (it.hasNext) {
+          val k = it.next().getLong(0)
+          counts.put(k, counts.getOrDefault(k, 0L) + 1L)
+        }
+        import scala.jdk.CollectionConverters._
+        counts.entrySet().iterator().asScala
+          .filter(_.getValue >= thr).map(_.getKey.longValue())
+      }.collect().distinct
       val spark = rows.sparkSession
       import spark.implicits._
-      exactHot(keys.join(broadcast(survivors.toSeq.toDF(keyCol)), Seq(keyCol), "left_semi"))
+      Option.when(survivors.nonEmpty)(
+        rows.join(broadcast(survivors.toSeq.toDF(keyCol)), Seq(keyCol), "left_semi"))
     }
+    counted.map(_.groupBy(keyCol).agg(count(lit(1)).as("n"), min(col("node")).as("min_node"))
+      .where(col("n") > cap).select(col(keyCol), col("min_node")))
   }
 
-  /** The hot-bucket guard shared by every bucket join: split `rows` into
-    * (cold, hot) by the size of their `keyCol` bucket, hot meaning more
-    * than `cap` members. `hot` is `None` when no bucket exceeds the cap —
-    * callers then plan no anti-join and no hot branch at all. Each caller
-    * decides what happens to hot rows: [[fusedCandidates]] stars them, the
-    * other bucket joins drop them (observable via [[bucketStats]]).
+  /** The hot-bucket guard shared by every bucket join: split `rows` (which
+    * carry a `node`) into (cold, hot) by the size of their `keyCol` bucket.
+    * `hot` is `None` when [[hotBuckets]] plans nothing. [[fusedCandidates]]
+    * stars hot rows, the other bucket joins drop them ([[bucketStats]]).
     *
-    * Detection is eager ([[hotKeyArray]] runs its jobs when the plan is
-    * built), so callers whose upstream is not persisted pay one extra pass
-    * over it. `cap == Int.MaxValue` skips detection (exhaustive semantics);
-    * `cap < 1` would mark every non-empty bucket hot, so it's rejected.
+    * ONE broadcast left join tags every row with its bucket's `min_node`
+    * (null when cold); cold is the null rows, `hot` the tagged frame, so
+    * the aggregate shuffles once and is broadcast once. Select hot rows by
+    * a predicate that also reads a `rows` column (the star's `node >
+    * coalesce(min_node, …)`): one rejecting a null `min_node` alone lets
+    * EliminateOuterJoin plan an inner join with its own broadcast.
+    * `cap == Int.MaxValue` skips detection (exhaustive semantics); `cap < 1`
+    * would mark every non-empty bucket hot, so it's rejected.
     *
-    * NOTE: the Seq-key anti/semi-joins move keyCol first in the output —
-    * callers must select columns by NAME afterwards, never by position.
+    * NOTE: the Seq-key join moves keyCol first in the output — callers
+    * must select columns by NAME afterwards, never by position.
     */
   private[operators] def splitHotBuckets(rows: DataFrame, keyCol: String,
       cap: Int): (DataFrame, Option[DataFrame]) =
     if (cap == Int.MaxValue) (rows, None)
     else {
       require(cap >= 1, s"maxBucketSize must be >= 1, got $cap")
-      val hot = hotKeyArray(rows, keyCol, cap)
-      if (hot.isEmpty) (rows, None)
-      else {
-        val spark = rows.sparkSession
-        import spark.implicits._
-        val hotKeys = broadcast(hot.toSeq.toDF(keyCol))
-        (rows.join(hotKeys, Seq(keyCol), "left_anti"),
-          Some(rows.join(hotKeys, Seq(keyCol), "left_semi")))
+      hotBuckets(rows, keyCol, cap).fold((rows, Option.empty[DataFrame])) { hot =>
+        val tagged = rows.join(broadcast(hot), Seq(keyCol), "left_outer")
+        (tagged.where(col("min_node").isNull).drop("min_node"), Some(tagged))
       }
     }
 
@@ -237,9 +231,9 @@ object MinHashLsh {
 
     // hot buckets: star to the bucket minimum (skew-safe linear fan-out)
     val withStar = hot.fold(allPairs) { h =>
-      val hotMin = h.groupBy("key").agg(min(col("node")).as("min_node"))
-      allPairs.unionByName(h.join(hotMin, "key")
-        .where(col("node") > col("min_node"))
+      // cold rows carry a null min_node and fail the coalesce bound
+      allPairs.unionByName(h
+        .where(col("node") > coalesce(col("min_node"), lit(Long.MaxValue)))
         .select(col("min_node").as("node_a"), col("node").as("node_b"),
           lit(2).cast("tinyint").as("cand_tier")))
     }

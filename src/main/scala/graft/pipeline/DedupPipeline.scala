@@ -175,7 +175,7 @@ final class DedupPipeline(
     }
     stage("decisions", cands, sigs, extractedDf) {
       Decisions.resolveAmbiguous(tier1,
-        extractedDf.select(xxhash64(col("url")).as("node"), col("extracted_text")), cfg)
+        extractedDf.select(MinHashLsh.nodeId(col("url")).as("node"), col("extracted_text")), cfg)
     }
   }
 
@@ -215,7 +215,7 @@ final class DedupPipeline(
       decisionsDf: Option[DataFrame] = None): DataFrame =
     stage("clusters", (Seq(labelsDf, extractedDf) ++ decisionsDf.toSeq): _*) {
     val labeled = extractedDf
-      .select(xxhash64(col("url")).as("node"), col("url"), col("warc_ts"), col("lang"),
+      .select(MinHashLsh.nodeId(col("url")).as("node"), col("url"), col("warc_ts"), col("lang"),
         when(col("extracted_text").isNotNull && length(col("extracted_text")) > 0,
           length(col("extracted_text"))).as("__text_len"))
       .join(labelsDf, "node")

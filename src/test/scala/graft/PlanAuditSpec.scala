@@ -46,9 +46,25 @@ class PlanAuditSpec extends SparkSpec {
     assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastHashJoin"), p.take(2000))
   }
 
-  test("hot-key pruning uses a broadcast anti-join, not a shuffle") {
+  /** Broadcast left outer joins in `plan` (`splitHotBuckets` tags every
+    * row with its bucket's `min_node` through one) and whether any
+    * Exchange sits on the side they stream — a shuffle serving the join.
+    */
+  private def hotSplits(plan: org.apache.spark.sql.execution.SparkPlan) = {
+    import org.apache.spark.sql.catalyst.optimizer.BuildRight
+    import org.apache.spark.sql.catalyst.plans.LeftOuter
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    helper.collect(plan) {
+      case j: BroadcastHashJoinExec if j.joinType == LeftOuter && j.buildSide == BuildRight =>
+        helper.collect(j.left) { case e: Exchange => e }.nonEmpty
+    }
+  }
+
+  test("hot-key pruning uses a broadcast join, not a shuffle") {
     // the bucket must actually be HOT or fusedCandidates elides the whole
-    // pruning subplan (hotArr empty) and the audit is vacuous — 40
+    // pruning subplan (no hot plan) and the audit is vacuous — 40
     // identical docs over maxBucketSize=10 forces it in
     val cfg0 = graft.config.GraftConfig.default
     val cfg = cfg0.copy(lsh = cfg0.lsh.copy(maxBucketSize = 10))
@@ -56,9 +72,13 @@ class PlanAuditSpec extends SparkSpec {
       .selectExpr("id AS url", "'a b c d e f g h i j' AS extracted_text")
     val sigs = graft.operators.MinHashLsh.signatures(docs, cfg)
     val cands = graft.operators.MinHashLsh.fusedCandidates(sigs, cfg)
-    val p = cands.queryExecution.executedPlan.toString
-    assert(p.contains("BroadcastHashJoin") && p.contains("LeftAnti"),
-      "hot-key pruning must plan a broadcast LeftAnti join:\n" + p.take(3000))
+    val plan = cands.queryExecution.executedPlan
+    val splits = hotSplits(plan)
+    assert(splits.nonEmpty,
+      "hot-key pruning must plan a broadcast LeftOuter join:\n" + plan.toString.take(3000))
+    assert(!splits.contains(true),
+      "no Exchange may serve the hot-key split's streamed side:\n" + plan.toString.take(3000))
+    assert(!plan.toString.contains("SortMergeJoin LeftOuter"), plan.toString.take(3000))
   }
 
   test("fingerprint candidates plan no hot-key anti-join or fp count when nothing is hot") {
@@ -70,6 +90,8 @@ class PlanAuditSpec extends SparkSpec {
     val cands = graft.operators.SuffixOverlap.candidates(docs, graft.config.GraftConfig.default)
     val p = cands.queryExecution.executedPlan.toString
     assert(!p.contains("LeftAnti"), "no hot fingerprint, so no anti-join:\n" + p.take(3000))
+    assert(hotSplits(cands.queryExecution.executedPlan).isEmpty && !p.contains("LeftOuter"),
+      "no hot fingerprint, so no hot-key split join:\n" + p.take(3000))
     assert("""keys=\[fp#""".r.findFirstIn(p).isEmpty,
       "no corpus-wide count aggregation on fp:\n" + p.take(3000))
   }

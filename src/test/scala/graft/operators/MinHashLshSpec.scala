@@ -81,37 +81,78 @@ class MinHashLshSpec extends SparkSpec {
     assert(math.abs(est - exact) < 0.15, s"est=$est exact=$exact")
   }
 
-  test("hotKeyArray is exact at the cap boundary and across thin partition spread") {
+  test("hotBuckets is exact at the cap boundary and across thin partition spread") {
     // keys: 100 → count cap+1 (hot), 200 → count exactly cap (NOT hot),
     // 300 → count 1. Rows are spread round-robin over many partitions so
     // every partition-local count sits far below the cap — the pigeonhole
     // pass-1 bound (local ≥ ceil((cap+1)/m)) must still surface key 100,
     // and pass 2's exact recount must reject 200 despite it surviving
-    // pass 1 alongside 100.
+    // pass 1 alongside 100. Row i carries node 1000 - i, so each bucket's
+    // minimum node is its last row's.
     val cap = 40
     val rows = (Seq.fill(cap + 1)(100L) ++ Seq.fill(cap)(200L) ++ Seq(300L))
-    val df = spark.sparkContext.parallelize(rows, 16).toDF("key")
-    val hot = MinHashLsh.hotKeyArray(df, "key", cap)
-    assert(hot.toSet == Set(100L), s"expected exactly {100}, got ${hot.toSet}")
-    // empty result when nothing exceeds the cap — the caller elides the
-    // anti-join entirely in this case
-    assert(MinHashLsh.hotKeyArray(df, "key", cap + 1).isEmpty)
+    val df = spark.sparkContext.parallelize(
+      rows.zipWithIndex.map { case (k, i) => (k, 1000L - i) }, 16).toDF("key", "node")
+    def collected(c: Int) = MinHashLsh.hotBuckets(df, "key", c).map(_.as[(Long, Long)].collect().toSet)
+    assert(collected(cap).contains(Set((100L, 1000L - cap))),
+      s"expected exactly {100 → ${1000L - cap}}, got ${collected(cap)}")
+    // both keys still survive pass 1 at cap + 1, and the exact count drops both
+    assert(collected(cap + 1).contains(Set.empty[(Long, Long)]))
+    // no key clears the pass-1 bound: no hot plan at all, so callers
+    // elide the hot join entirely
+    assert(MinHashLsh.hotBuckets(df, "key", 1000).isEmpty)
   }
 
-  test("hotKeyArray with more partitions than the cap counts exactly, collecting only hot keys") {
+  test("hotBuckets with more partitions than the cap runs no job at build time") {
     // m = 16 > cap = 4: the pigeonhole bound ceil((cap+1)/m) falls to 1, so
     // a pass 1 would ship every one of the ~1,000 distinct keys to the
-    // driver. Detection must instead run one exact count over all keys —
-    // exactly the jobs of the plain count, with no survivor collect before it.
+    // driver. Detection must instead plan one exact count over all keys,
+    // with no survivor collect before it.
     val cap = 4
     val rows = Seq.fill(cap + 1)(7L) ++ (1000L until 2000L)
-    val df = spark.sparkContext.parallelize(rows, 16).toDF("key")
-    val (hot, jobs) = JobCount(spark.sparkContext)(MinHashLsh.hotKeyArray(df, "key", cap))
-    assert(hot.toSet == Set(7L), s"expected exactly {7}, got ${hot.toSet}")
-    val (_, countJobs) = JobCount(spark.sparkContext)(
-      df.groupBy("key").count().where(col("count") > cap).select("key").collect())
-    assert(jobs == countJobs,
-      s"hot-key detection ran $jobs jobs, the exact count alone runs $countJobs")
+    val df = spark.sparkContext.parallelize(
+      rows.zipWithIndex.map { case (k, i) => (k, 5000L - i) }, 16).toDF("key", "node")
+    val (hot, jobs) = JobCount(spark.sparkContext)(MinHashLsh.hotBuckets(df, "key", cap))
+    assert(jobs == 0, s"building the hot-bucket plan ran $jobs jobs")
+    val got = hot.map(_.as[(Long, Long)].collect().toSet)
+    assert(got.contains(Set((7L, 5000L - cap))), s"expected exactly {7 → ${5000L - cap}}, got $got")
+  }
+
+  test("building a candidate plan runs pass 1 of hot-bucket detection only") {
+    // the key frame is the union of band and block keys: twice the
+    // partitions of the signatures
+    val sigs = sigsOf(megaDocs, megaCfg)
+    val keyParts = 2 * sigs.rdd.getNumPartitions
+    assert(keyParts <= megaCfg.lsh.maxBucketSize)
+    val (_, jobs) = JobCount(spark.sparkContext)(MinHashLsh.fusedCandidates(sigs, megaCfg))
+    assert(jobs == 1, s"building fusedCandidates ran $jobs jobs, pass 1 alone is 1")
+    val smallCap = megaCfg.copy(lsh = megaCfg.lsh.copy(maxBucketSize = keyParts - 1))
+    val (_, exactJobs) = JobCount(spark.sparkContext)(MinHashLsh.fusedCandidates(sigs, smallCap))
+    assert(exactJobs == 0, s"with more key partitions than the cap, building ran $exactJobs jobs")
+  }
+
+  test("cold split and star read one hot-bucket aggregate: one shuffle, one broadcast") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec, ShuffleExchangeExec}
+    val near = (1 to 120).map(i => s"w$i")
+    val docs = megaDocs ++ Seq((1001L, near.mkString(" ")), (1002L, near.updated(59, "swapped").mkString(" ")))
+    val cands = MinHashLsh.fusedCandidates(sigsOf(docs, megaCfg), megaCfg)
+    val tiers = cands.select("cand_tier").distinct().as[String].collect().toSet
+    assert(tiers == Set("lsh", "star"), s"both branches must run: $tiers")
+    cands.collect()
+    val plan = cands.queryExecution.executedPlan
+    val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    val hotOut = (o: Seq[org.apache.spark.sql.catalyst.expressions.Attribute]) => o.exists(_.name == "min_node")
+    val broadcasts = helper.collect(plan) { case b: BroadcastExchangeExec if hotOut(b.output) => b }
+    val reused = helper.collect(plan) { case r: ReusedExchangeExec if hotOut(r.output) => r }
+    val keyShuffles = helper.collect(plan) {
+      case s: ShuffleExchangeExec if (s.outputPartitioning match {
+        case h: HashPartitioning => h.expressions.map(_.references.map(_.name).mkString) == Seq("key")
+        case _ => false
+      }) => s
+    }
+    assert(broadcasts.size == 1 && reused.nonEmpty && keyShuffles.size == 1,
+      s"${broadcasts.size} hot broadcasts, ${reused.size} reused, ${keyShuffles.size} key shuffles:\n$plan")
   }
 
   test("bucketStats reports capped buckets") {

@@ -135,6 +135,45 @@ class DedupPipelineSpec extends SparkSpec {
     assert(plan.contains("LeftAnti") && plan.contains("LeftSemi"), plan)
   }
 
+  test("the exact-count hot-key branch gives the survivor branch's rows") {
+    // 40 mirrors of one page plant a bucket over the cap in every band.
+    // The key frame (band ∪ block keys) has twice the partitions of the
+    // signatures: 4 → 8 ≤ cap runs pass 1 and the survivor recount,
+    // 8 → 16 > cap skips pass 1 and counts every key exactly.
+    val cap = 10
+    val hotCfg = cfg.copy(lsh = cfg.lsh.copy(maxBucketSize = cap))
+    val small = PagesGen.pages(spark, 300L).toDF
+    val mirrors = small.orderBy("url").limit(1).crossJoin(spark.range(40L).toDF("i"))
+      .withColumn("url", concat($"url", lit("#mirror"), $"i")).drop("i")
+    val corpus = small.unionByName(mirrors).cache()
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(to_json(struct(df.columns.sorted.map(col): _*))).as[String].collect().sorted.toSeq
+    def run(parts: Int) = {
+      val p = new DedupPipeline(spark, hotCfg)
+      try {
+        val r = p.runAll(corpus.repartition(parts))
+        val keyParts = 2 * r.signatures.rdd.getNumPartitions
+        val plan = p.computedStage("candidates").queryExecution.executedPlan.toString
+        val stars = r.candidates.where($"cand_tier" === "star").count()
+        (Seq(r.candidates, r.decisions, r.labels, r.canonicals).map(rows), keyParts, plan, stars)
+      } finally p.unpersistAll()
+    }
+    try {
+      val (survivorRows, survivorParts, survivorPlan, survivorStars) = run(4)
+      val (exactRows, exactParts, exactPlan, exactStars) = run(8)
+      assert(survivorParts <= cap && exactParts > cap, s"key partitions $survivorParts, $exactParts")
+      // the survivor recount reads the rows behind a semi-join to the pass-1
+      // keys; the exact branch has no survivor set to join
+      assert(survivorPlan.contains("LeftSemi") && survivorPlan.contains("LeftOuter"), survivorPlan)
+      assert(!exactPlan.contains("LeftSemi") && exactPlan.contains("LeftOuter"), exactPlan)
+      assert(survivorStars > 0 && exactStars == survivorStars, s"$survivorStars vs $exactStars star pairs")
+      Seq("candidates", "decisions", "labels", "canonicals").lazyZip(survivorRows).lazyZip(exactRows)
+        .foreach { (stage, a, b) =>
+          assert(a.nonEmpty && a == b, s"$stage: ${a.diff(b).take(3)} vs ${b.diff(a).take(3)}")
+        }
+    } finally corpus.unpersist()
+  }
+
   test("clusters on a mostly-singleton corpus shuffles only multi-member rows") {
     // every component used to cross the aggregate's shuffle as one partial
     // buffer: here about 90 bytes per component
