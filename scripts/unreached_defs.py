@@ -26,7 +26,6 @@ ROOT = pathlib.Path(__file__).resolve().parent.parent
 SOURCES = [ROOT / "src" / "main", ROOT / "perfbench" / "src"]
 ALLOWED = {
     "main", "apply",
-    "bucketStats",  # README's "never silent" hot-bucket claim points at it
     "hostOf",       # perfbench calls it
 }
 FROZEN = {"Bench.scala"}  # the frozen measurement main is not scanned

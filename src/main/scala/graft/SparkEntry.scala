@@ -310,7 +310,7 @@ object SparkEntry {
     // planted identical pair surfaces — the closed-form oracle), so the
     // hot-bucket cap policy must not intersect it; a boilerplate-heavy
     // block bucket crossing maxBucketSize would otherwise drop pairs the
-    // oracle rightly expects (cap behavior is spec'd via bucketStats)
+    // oracle rightly expects (cap behavior is spec'd in MinHashLshSpec)
     val uncapped = cfg.copy(lsh = cfg.lsh.copy(maxBucketSize = Int.MaxValue))
     MinHashLsh.simHashCandidates(sigs, uncapped)
       .where(col("node_b") - col("node_a") === 1000000L)

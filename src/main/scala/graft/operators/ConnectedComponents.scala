@@ -181,7 +181,9 @@ object ConnectedComponents {
   }
 
   /** large-star: for each u over the symmetrized neighborhood,
-    * m = min(N(u) ∪ {u}); emit (v, m) for v ∈ N(u) with v > u.
+    * m = min(N(u) ∪ {u}); emit (v, m) for v ∈ N(u) with v > u. Duplicate
+    * edges are kept: [[smallStar]] takes a min per u and ends with its own
+    * `distinct`, and the round's signature is read after it.
     */
   private def largeStar(e: DataFrame): DataFrame = {
     val spark = e.sparkSession
@@ -194,7 +196,6 @@ object ConnectedComponents {
       .where($"v" > $"u")
       .select($"v".as("src"), $"m".as("dst"))
       .where($"src" =!= $"dst")
-      .distinct()
   }
 
   /** small-star: orient edges so src > dst; for each u, over its smaller

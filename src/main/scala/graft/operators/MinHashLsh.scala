@@ -17,14 +17,14 @@ import graft.functions.SortedIntersectSize.sortedIntersectSize
   * Scale posture:
   *  - the band self-join is THE skew-sensitive shuffle; over-dense buckets
   *    (boilerplate pages, hot hosts) are capped at `cfg.lsh.maxBucketSize`
-  *    by [[splitHotBuckets]], the one guard every bucket join shares
-  *    (dropped buckets are observable in [[bucketStats]], never silent) —
+  *    by [[splitHotBuckets]], the one guard every bucket join shares —
   *    pair blowup is quadratic in bucket size, so one 10^6 bucket would
   *    otherwise emit 10^12 pairs. The hot set is one lazy (key, min_node)
   *    aggregate ([[hotBuckets]]); only pass-1 survivor keys reach the driver;
   *  - AQE skew-join handles residual imbalance below the cap;
   *  - pair canonical ordering `node_a < node_b` halves the join output and
-  *    `dropDuplicates` dedups across bands (candidate_pairs.py:59-64 semantics).
+  *    one aggregate dedups across bands (candidate_pairs.py:59-64 semantics);
+  *    every candidate join runs through [[keyPairs]].
   */
 object MinHashLsh {
 
@@ -58,27 +58,6 @@ object MinHashLsh {
       .withColumn("band_keys", Hashing.bandKeys(col("minhash"), cfg.lsh.bands, cfg.lsh.rowsPerBand))
       .drop("minhash")
   }
-
-  /** Exploded (node, band_key) table. Band keys are already salted with the
-    * band index (see [[graft.functions.BandKeys]]), so a single-column join
-    * suffices.
-    */
-  def bands(sigs: DataFrame): DataFrame =
-    sigs.where(col("band_keys").isNotNull)
-      .select(col("node"), explode(col("band_keys")).as("band_key"))
-
-  /** Bucket-size distribution + how many buckets the cap drops — the
-    * reference logs blocking reduction stats the same way
-    * (candidate_pairs.py:66-76).
-    */
-  def bucketStats(bands: DataFrame, cfg: GraftConfig): DataFrame =
-    bands.groupBy("band_key").count()
-      .agg(
-        count(lit(1)).as("buckets"),
-        max("count").as("max_bucket"),
-        sum(when(col("count") > cfg.lsh.maxBucketSize, 1).otherwise(0)).as("capped_buckets"),
-        sum(when(col("count") > 1, col("count") * (col("count") - 1) / 2).otherwise(0)).as("candidate_pairs_upper")
-      )
 
   /** The buckets of `rows` with more than `cap` members, as a lazy plan of
     * (keyCol, min_node); `None` when pass 1 finds no survivor.
@@ -126,7 +105,7 @@ object MinHashLsh {
   /** The hot-bucket guard shared by every bucket join: split `rows` (which
     * carry a `node`) into (cold, hot) by the size of their `keyCol` bucket.
     * `hot` is `None` when [[hotBuckets]] plans nothing. [[fusedCandidates]]
-    * stars hot rows, the other bucket joins drop them ([[bucketStats]]).
+    * stars hot rows, the other bucket joins drop them.
     *
     * ONE broadcast left join tags every row with its bucket's `min_node`
     * (null when cold); cold is the null rows, `hot` the tagged frame, so
@@ -159,38 +138,79 @@ object MinHashLsh {
     rows.alias("a").join(rows.alias("b"),
       col(s"a.$keyCol") === col(s"b.$keyCol") && col("a.node") < col("b.node"))
 
-  /** LSH candidate pairs: (node_a, node_b) with node_a < node_b, deduped
-    * across bands, hot buckets dropped (observable via [[bucketStats]]).
+  /** The one pair-generation path of every candidate join
+    * (candidate_pairs.py:31-64): `keys` rows (node, key, tier[, simhash])
+    * → pairs of one key and one tier, `a.node < b.node`, that pass `keep`
+    * (read through the `a`/`b` aliases) → one row (node_a, node_b, t) per
+    * pair, `t` its least tier. Buckets over `cap` ([[splitHotBuckets]])
+    * are dropped, or with `starHot` each member pairs with the bucket
+    * minimum at tier 2 (O(m) pairs). Tiers travel as one byte (0 lsh <
+    * 1 simhash < 2 star) until the caller's projection: the key frame is
+    * the widest shuffle of the pipeline. It is not cached: re-deriving the
+    * explode from the persisted signatures reads fewer memory bytes than
+    * caching the ~800 B/doc exploded form (BENCH.md).
     */
-  def lshCandidates(sigs: DataFrame, cfg: GraftConfig): DataFrame = {
-    val (cold, _) = splitHotBuckets(bands(sigs), "band_key", cfg.lsh.maxBucketSize)
-    bucketSelfJoin(cold, "band_key")
-      .select(col("a.node").as("node_a"), col("b.node").as("node_b"))
-      .dropDuplicates("node_a", "node_b")
+  private[operators] def keyPairs(keys: DataFrame, cap: Int, starHot: Boolean,
+      keep: Column = lit(true)): DataFrame = {
+    val (cold, hot) = splitHotBuckets(keys, "key", cap)
+    val pairs = bucketSelfJoin(cold, "key")
+      .where(col("a.tier") === col("b.tier") && keep) // one tier's key space
+      .select(col("a.node").as("node_a"), col("b.node").as("node_b"), col("a.tier").as("cand_tier"))
+    val withStar = hot.filter(_ => starHot).fold(pairs) { h =>
+      // cold rows carry a null min_node and fail the coalesce bound
+      pairs.unionByName(h
+        .where(col("node") > coalesce(col("min_node"), lit(Long.MaxValue)))
+        .select(col("min_node").as("node_a"), col("node").as("node_b"),
+          lit(2).cast("tinyint").as("cand_tier")))
+    }
+    withStar.groupBy("node_a", "node_b").agg(min(col("cand_tier")).as("t"))
   }
 
+  /** (node, simhash, key, tier 0) per band key, already salted with its band. */
+  private def bandKeyFrame(sigs: DataFrame): DataFrame =
+    sigs.where(col("band_keys").isNotNull)
+      .select(col("node"), col("simhash"), explode(col("band_keys")).as("key"))
+      .withColumn("tier", lit(0).cast("tinyint"))
+
+  /** (node, simhash, key, tier 1) per SimHash pigeonhole block of d + 1,
+    * salted into a key space disjoint from the band keys.
+    */
+  private def blockKeyFrame(sigs: DataFrame, d: Int): DataFrame =
+    sigs.where(col("simhash").isNotNull)
+      .select(col("node"), col("simhash"),
+        explode(Hashing.simHashBlocks(col("simhash"), d + 1)).as("raw_key"))
+      .select(col("node"), col("simhash"), xxhash64(col("raw_key"), lit("simblock")).as("key"))
+      .withColumn("tier", lit(1).cast("tinyint"))
+
+  private def withinHamming(d: Int): Column =
+    bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))) <= d
+
+  /** LSH candidate pairs: (node_a, node_b) with node_a < node_b, deduped
+    * across bands, hot buckets dropped.
+    */
+  def lshCandidates(sigs: DataFrame, cfg: GraftConfig): DataFrame =
+    keyPairs(bandKeyFrame(sigs), cfg.lsh.maxBucketSize, starHot = false)
+      .select("node_a", "node_b")
+
   /** SimHash Hamming-ball candidates (SURVEY.md §2.3 B9): join on pigeonhole
-    * block keys, keep pairs with Hamming distance ≤ d. A second recall path
-    * for near-dups whose shingle sets drifted below LSH sensitivity but whose
-    * token distributions stayed close.
+    * block keys, keep pairs with Hamming distance ≤ d (any such pair shares
+    * at least one of the d + 1 blocks), hot buckets dropped. A second
+    * recall path for near-dups whose shingle sets drifted below LSH
+    * sensitivity but whose token distributions stayed close.
     */
   def simHashCandidates(sigs: DataFrame, cfg: GraftConfig): DataFrame = {
     val d = cfg.simhash.maxHammingDistance
-    val blocks = sigs.where(col("simhash").isNotNull)
-      .select(col("node"), col("simhash"), explode(Hashing.simHashBlocks(col("simhash"), d + 1)).as("block_key"))
-    val (cold, _) = splitHotBuckets(blocks, "block_key", cfg.lsh.maxBucketSize)
-    bucketSelfJoin(cold, "block_key")
-      .where(bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))) <= d)
-      .select(col("a.node").as("node_a"), col("b.node").as("node_b"))
-      .dropDuplicates("node_a", "node_b")
+    keyPairs(blockKeyFrame(sigs, d), cfg.lsh.maxBucketSize, starHot = false, withinHamming(d))
+      .select("node_a", "node_b")
   }
 
   /** Fused candidate generation: MinHash band keys AND SimHash block keys in
-    * ONE exploded frame → one hot-key pass → one self-join → one dedup.
-    * Same output as union(lshCandidates, simHashCandidates) with tier =
-    * lexical min ('lsh' < 'simhash'), at roughly half the shuffles — on a
-    * real cluster the band self-join is the dominant shuffle, so halving its
-    * count matters more than any per-row cost.
+    * ONE key frame → one hot-key pass → one self-join → one dedup.
+    * Without a hot bucket, the output is union(lshCandidates,
+    * simHashCandidates) with tier = lexical min ('lsh' < 'simhash'), at
+    * roughly half the shuffles — on a real cluster the band self-join is the
+    * dominant shuffle, so halving its count matters more than any per-row
+    * cost.
     *
     * **Mega-bucket handling** (skew, north_rule): a bucket of m members
     * emits m(m-1)/2 pairs — one 10^6-member boilerplate bucket would emit
@@ -200,47 +220,12 @@ object MinHashLsh {
     * identical boilerplate — verification accepts the star edges and
     * connected components restores the full cluster transitively; genuinely
     * heterogeneous mega-buckets degrade recall gracefully instead of
-    * exploding. Counts are observable via [[bucketStats]].
+    * exploding. Star pairs carry `cand_tier = star`.
     */
   def fusedCandidates(sigs: DataFrame, cfg: GraftConfig): DataFrame = {
     val d = cfg.simhash.maxHammingDistance
-    // tier travels as one byte until the final projection: the exploded key
-    // frame is the widest shuffle of the pipeline, and a 3-16 char UTF8
-    // string per row is pure overhead there ('0' lsh < '1' simhash < '2'
-    // star keeps the same min-wins dedup priority).
-    val banded = sigs.where(col("band_keys").isNotNull)
-      .select(col("node"), col("simhash"), explode(col("band_keys")).as("key"))
-      .withColumn("tier", lit(0).cast("tinyint"))
-    val blocked = sigs.where(col("simhash").isNotNull)
-      .select(col("node"), col("simhash"),
-        // salt block keys into a disjoint key space from band keys
-        explode(Hashing.simHashBlocks(col("simhash"), d + 1)).as("raw_key"))
-      .select(col("node"), col("simhash"), xxhash64(col("raw_key"), lit("simblock")).as("key"))
-      .withColumn("tier", lit(1).cast("tinyint"))
-    // not cached: each consumer re-deriving the explode from the persisted
-    // signatures reads fewer memory bytes than caching the ~800 B/doc
-    // exploded form, and memory bandwidth is the scaling ceiling (BENCH.md)
-    val (cold, hot) = splitHotBuckets(banded.unionByName(blocked), "key", cfg.lsh.maxBucketSize)
-
-    // normal buckets: all-pairs within bucket
-    val allPairs = bucketSelfJoin(cold, "key")
-      .where(col("a.tier") === col("b.tier")) // a pair matches within one tier's key space
-      .where(col("a.tier") === 0 ||
-        bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))) <= d)
-      .select(col("a.node").as("node_a"), col("b.node").as("node_b"), col("a.tier").as("cand_tier"))
-
-    // hot buckets: star to the bucket minimum (skew-safe linear fan-out)
-    val withStar = hot.fold(allPairs) { h =>
-      // cold rows carry a null min_node and fail the coalesce bound
-      allPairs.unionByName(h
-        .where(col("node") > coalesce(col("min_node"), lit(Long.MaxValue)))
-        .select(col("min_node").as("node_a"), col("node").as("node_b"),
-          lit(2).cast("tinyint").as("cand_tier")))
-    }
-
-    withStar
-      .groupBy("node_a", "node_b")
-      .agg(min(col("cand_tier")).as("t")) // 0 lsh < 1 simhash < 2 star
+    keyPairs(bandKeyFrame(sigs).unionByName(blockKeyFrame(sigs, d)), cfg.lsh.maxBucketSize,
+      starHot = true, col("a.tier") === 0 || withinHamming(d))
       .select(col("node_a"), col("node_b"),
         when(col("t") === 0, "lsh").when(col("t") === 1, "simhash")
           .otherwise("star").as("cand_tier"))

@@ -218,6 +218,8 @@ object Similarity {
     * identical pages enumerates ~tables·N² join rows. Pass
     * `maxBucketSize = Int.MaxValue` for provably-exhaustive semantics
     * (the degenerate single-bucket oracle configs do).
+    * Not [[MinHashLsh.keyPairs]]: pairs carry both vectors through the
+    * dedupe, and joining them back after a key-only dedupe adds two joins.
     */
   def nearDupPairs(
       corpus: DataFrame, threshold: Double,

@@ -44,10 +44,11 @@ object SuffixOverlap {
       .select(col("fp"), col("node"))
   }
 
-  /** Candidate pairs from shared fingerprints (canonical order, deduped).
-    * Fingerprints whose bucket exceeds `cfg.lsh.maxBucketSize` are dropped
-    * through the shared [[MinHashLsh.splitHotBuckets]] guard — same skew
-    * posture as the LSH band join, with no hot-key plan when none is hot.
+  /** Candidate pairs from shared fingerprints (canonical order, deduped):
+    * the fingerprint frame through [[MinHashLsh.keyPairs]], whose shared
+    * [[MinHashLsh.splitHotBuckets]] guard drops fingerprints whose bucket
+    * exceeds `cfg.lsh.maxBucketSize` — same skew posture as the LSH band
+    * join, with no hot-key plan when none is hot.
     */
   def candidates(texts: Dataset[(Long, String)], cfg: GraftConfig): DataFrame = {
     // eager per-invocation checkpoint: the fingerprint frame feeds hot-key
@@ -56,10 +57,9 @@ object SuffixOverlap {
     // duplicated subtrees). Blocks are context-cleaned once the result is
     // dropped; nothing is cached across invocations.
     val fps = fingerprints(texts, cfg).localCheckpoint(true)
-    val (cold, _) = MinHashLsh.splitHotBuckets(fps, "fp", cfg.lsh.maxBucketSize)
-    MinHashLsh.bucketSelfJoin(cold, "fp")
-      .select(col("a.node").as("node_a"), col("b.node").as("node_b"))
-      .dropDuplicates("node_a", "node_b")
+    MinHashLsh.keyPairs(fps.select(col("node"), col("fp").as("key"), lit(0).cast("tinyint").as("tier")),
+      cfg.lsh.maxBucketSize, starHot = false)
+      .select("node_a", "node_b")
   }
 
   /** Exact longest-common-substring length via a suffix automaton built on

@@ -92,7 +92,7 @@ class PlanAuditSpec extends SparkSpec {
     assert(!p.contains("LeftAnti"), "no hot fingerprint, so no anti-join:\n" + p.take(3000))
     assert(hotSplits(cands.queryExecution.executedPlan).isEmpty && !p.contains("LeftOuter"),
       "no hot fingerprint, so no hot-key split join:\n" + p.take(3000))
-    assert("""keys=\[fp#""".r.findFirstIn(p).isEmpty,
+    assert("""keys=\[key#""".r.findFirstIn(p).isEmpty,
       "no corpus-wide count aggregation on fp:\n" + p.take(3000))
   }
 

@@ -67,6 +67,32 @@ class MinHashLshSpec extends SparkSpec {
     assert(lsh == pairs(MinHashLsh.fusedCandidates(sigs, megaCfg).where(col("cand_tier") === "lsh")))
   }
 
+  test("fusedCandidates is the union of lshCandidates and simHashCandidates, min tier wins") {
+    // no bucket reaches the default cap, so nothing is starred or dropped.
+    // 1/2: near-dups, both tiers; 3/4: the same words reversed, so SimHash
+    // (a bag of tokens) is equal but no 3-word shingle and so no band key
+    // is shared — a simhash-only pair; 5: unrelated
+    val cfg = GraftConfig.default
+    val words = (1 to 120).map(i => s"w$i")
+    val perm = (1 to 90).map(i => s"p$i")
+    val docs = Seq((1L, words.mkString(" ")), (2L, words.updated(59, "swapped").mkString(" ")),
+      (3L, perm.mkString(" ")), (4L, perm.reverse.mkString(" ")),
+      (5L, (1 to 100).map(i => s"z$i").mkString(" ")))
+    val sigs = sigsOf(docs, cfg)
+    def tiered(df: org.apache.spark.sql.DataFrame, tier: String) =
+      df.select("node_a", "node_b").as[(Long, Long)].collect().map { case (a, b) => (a, b, tier) }.toSet
+    val lsh = tiered(MinHashLsh.lshCandidates(sigs, cfg), "lsh")
+    val sim = tiered(MinHashLsh.simHashCandidates(sigs, cfg), "simhash")
+    val fused = MinHashLsh.fusedCandidates(sigs, cfg)
+      .select("node_a", "node_b", "cand_tier").as[(Long, Long, String)].collect()
+    assert(fused.length == fused.toSet.size, "fused pairs must be deduped")
+    assert(!lsh.contains((3L, 4L, "lsh")) && sim.contains((3L, 4L, "simhash")),
+      s"3/4 must be a simhash-only pair: lsh=$lsh sim=$sim")
+    assert(lsh.contains((1L, 2L, "lsh")))
+    val union = (lsh ++ sim).groupBy(p => (p._1, p._2)).values.map(_.minBy(_._3)).toSet
+    assert(fused.toSet == union)
+  }
+
   test("est_jaccard over the fused signature's minhash tracks exact jaccard") {
     val cfg = GraftConfig.default
     val base = (1 to 200).map(i => s"t$i").mkString(" ")
@@ -153,15 +179,5 @@ class MinHashLshSpec extends SparkSpec {
     }
     assert(broadcasts.size == 1 && reused.nonEmpty && keyShuffles.size == 1,
       s"${broadcasts.size} hot broadcasts, ${reused.size} reused, ${keyShuffles.size} key shuffles:\n$plan")
-  }
-
-  test("bucketStats reports capped buckets") {
-    val cfg = GraftConfig.default.copy(lsh = GraftConfig.default.lsh.copy(maxBucketSize = 10))
-    val text = (1 to 50).map(i => s"same$i").mkString(" ")
-    val docs = (1L to 40L).map(id => (id, text))
-    val sigs = sigsOf(docs, cfg)
-    val stats = MinHashLsh.bucketStats(MinHashLsh.bands(sigs), cfg).collect()(0)
-    assert(stats.getAs[Long]("max_bucket") == 40L)
-    assert(stats.getAs[Long]("capped_buckets") >= 16L) // every band bucket is hot
   }
 }
